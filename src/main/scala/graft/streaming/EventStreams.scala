@@ -49,30 +49,51 @@ object EventStreams extends Serializable {
     eventsStreamStaged(spark, dir)._1
 
   /** Run `body` (a streaming query execution) with
-    * spark.sql.shuffle.partitions temporarily lowered: every stateful
-    * streaming operator maintains one state store PER shuffle partition
-    * per microbatch, and at fixture scale 32 stores are pure overhead —
-    * measured on sf0.1: the stream-stream join 6.3s→3.2s, timeout
-    * sessionization 5.6s→3.6s at 8 partitions. State partitioning is
-    * fixed at the query's FIRST start, so the conf must be set before
-    * .start(); a production stream sizes this by throughput exactly as
-    * a batch job sizes its shuffle.
+    * spark.sql.shuffle.partitions temporarily set to the STATE partition
+    * count, min(8, defaultParallelism): one state store per scheduler
+    * slot, capped at 8.
+    *
+    * Why the slot count: every stateful streaming operator keeps one
+    * state store PER shuffle partition, and each store pays a fixed cost
+    * in every micro-batch (load, commit, checksummed delta or snapshot
+    * write) that dwarfs its row work at fixture scale. With more
+    * partitions than slots a stateful stage runs in several waves of
+    * tasks that are mostly that fixed cost; one partition per slot runs
+    * it in one wave with the fewest stores.
+    *
+    * Why the cap of 8: measured on sf0.1 at local[32], 32 → 8 partitions
+    * took the stream-stream join 6.3s→3.2s and timeout sessionization
+    * 5.6s→3.6s (BENCH.md, round 7) — above 8 the extra stores cost more
+    * than the parallelism returns.
+    *
+    * Why OPTIMIZATION_r18.md's "8 → 4 a wash" does not carry over: that
+    * A/B ran at local[32], where 8 tasks already fit in one wave, so 4
+    * only dropped stores that ran in parallel anyway. Below 8 slots, 8
+    * stores take two waves; at local[4] going from 8 to 4 cut the
+    * stream_replay benchmark's mean Spark job time from 0.197s to 0.143s
+    * (medians of ten alternating runs each, every output checked).
+    *
+    * State partitioning is fixed at the query's FIRST start (a restart
+    * keeps the count its checkpoint recorded), so the conf must be set
+    * before .start(); a production stream sizes this by throughput
+    * exactly as a batch job sizes its shuffle.
     *
     * The conf is SESSION-GLOBAL, so the save/set/restore is serialized
     * under a JVM lock: Verify's 4-way-parallel pool runs several
     * streaming harnesses on one session, and unsynchronized save/restore
-    * pairs can interleave so that a body runs at 32 partitions and —
-    * worse — the LAST restore re-installs the temporary 8 permanently,
-    * skewing every later query in the sweep. Serializing the handful of
-    * streaming harnesses costs little; batch queries are unaffected.
+    * pairs can interleave so that a body runs at the batch partition
+    * count and — worse — the LAST restore re-installs the temporary
+    * value permanently, skewing every later query in the sweep.
+    * Serializing the handful of streaming harnesses costs little; batch
+    * queries are unaffected.
     */
   private val shufflePartitionsLock = new Object
 
-  def withStreamShufflePartitions[A](spark: SparkSession, n: Int = 8)(body: => A): A =
+  def withStreamShufflePartitions[A](spark: SparkSession)(body: => A): A =
     shufflePartitionsLock.synchronized {
       val key = "spark.sql.shuffle.partitions"
       val saved = spark.conf.get(key)
-      spark.conf.set(key, n.toString)
+      spark.conf.set(key, math.min(8, spark.sparkContext.defaultParallelism).toString)
       try body finally spark.conf.set(key, saved)
     }
 

@@ -34,7 +34,8 @@ class StateInspectSpec extends SparkSpec {
     assert(got.toSeq === expected.toSeq)
 
     // state-metadata: one stateStoreSave operator, store "default",
-    // partition count = the harness's stream shuffle partitions
+    // partition count = one state store per scheduler slot, capped at 8
+    // (EventStreams.withStreamShufflePartitions)
     val meta = spark.read.format("state-metadata").option("path", ckpt).load()
       .select("operatorId", "operatorName", "stateStoreName", "numPartitions")
       .collect()
@@ -42,7 +43,7 @@ class StateInspectSpec extends SparkSpec {
     assert(meta.head.getString(1) === "stateStoreSave")
     assert(meta.head.getString(2) === "default")
     val nParts = meta.head.getInt(3)
-    assert(nParts > 0)
+    assert(nParts === math.min(8, spark.sparkContext.defaultParallelism))
 
     // the per-partition reads decompose the whole: every row carries a
     // partition_id < numPartitions and the union over partitions IS the
