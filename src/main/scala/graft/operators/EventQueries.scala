@@ -1493,21 +1493,19 @@ object EventQueries {
     */
   val q222 = GQuery(
     "q222_stream_cusum",
-    (s, dir) => graft.streaming.EventStreams.withStreamShufflePartitions(s) {
+    (s, dir) => graft.streaming.StreamHarness.withStreamConf(s) {
       val agg = graft.streaming.EventStreams.eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-      val q = agg.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete)
-        .format("memory").queryName("stream_cusum_q222").start()
-      try q.processAllAvailable() finally q.stop()
+      val counts = graft.streaming.StreamHarness.runToMemory(agg, "stream_cusum_q222",
+        org.apache.spark.sql.streaming.OutputMode.Complete)()
       // localCheckpoint: the finisher references the counts THREE times
       // (axis, types, the dense left join) and the raw memory-sink plan
       // trips analyzer self-join dedup ("conflicting references");
       // truncating to a LogicalRDD — a few hundred rows — resolves it,
       // same as the iterative-loop lineage rule (invariant 14)
-      cusumFromCounts(s.table("stream_cusum_q222")
+      cusumFromCounts(counts
         .select(col("w.start").as("hour_start"), col("event_type"), col("n"))
         .localCheckpoint(true))
     },

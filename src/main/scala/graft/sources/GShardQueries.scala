@@ -38,39 +38,28 @@ object GShardQueries {
     * shard directory plays back as a genuine multi-batch stream
     * (maxFilesPerTrigger=3 over 8 shards → 3 batches through
     * GShardMicroBatchStream's file-count offsets); per batch the
-    * per-source partials merge into versioned state (the q203 idiom).
+    * per-source partials merge into versioned state through the shared
+    * StreamHarness.runVersionedMerge loop (the q203 idiom).
     * Counts are a set property of the corpus ⇒ the final state is
     * slicing-independent and equals the batch aggregate, so the oracle
     * is a plain GROUP BY over the parquet twin.
     */
   val q236 = GQuery(
     "q236_gshard_stream",
-    (s, dir) => graft.streaming.EventStreams.withStreamShufflePartitions(s) {
+    (s, dir) => graft.streaming.StreamHarness.withStreamConf(s) {
       val stage = graft.streaming.TempDirs.create("gshard-q236-").toString
       GShard.write(Tables.documents(s, dir), stage, nShards = 8)
-      val stateBase = graft.streaming.TempDirs.create("gshard-q236-state-")
-      def statePath(v: Long) = s"$stateBase/v$v"
-      var version = -1L
-      var lastApplied = -1L
-      val applyBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (batch, id) => if (id != lastApplied) {
-          val delta = batch.groupBy("source")
-            .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-          val merged = (if (version < 0) delta
-            else s.read.parquet(statePath(version)).unionByName(delta))
-            .groupBy("source")
-            .agg(sum("n_docs").as("n_docs"), sum("sum_chars").as("sum_chars"))
-          merged.write.mode("overwrite").parquet(statePath(version + 1))
-          version += 1
-          lastApplied = id
-        }
-      val q = s.readStream.format("graft.sources.GShardSource")
+      val source = s.readStream.format("graft.sources.GShardSource")
         .option("maxFilesPerTrigger", 3)
         .load(stage)
-        .writeStream.foreachBatch(applyBatch).queryName("gshard_stream").start()
-      try q.processAllAvailable() finally q.stop()
-      require(version >= 0, "stream produced no batches")
-      s.read.parquet(statePath(version)).orderBy("source")
+      graft.streaming.StreamHarness.runVersionedMerge(source, "gshard-q236-state-",
+          "gshard_stream") { (prev, batch) =>
+        val delta = batch.groupBy("source")
+          .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
+        prev.fold(delta)(_.unionByName(delta))
+          .groupBy("source")
+          .agg(sum("n_docs").as("n_docs"), sum("sum_chars").as("sum_chars"))
+      }.orderBy("source")
     },
     Some("""SELECT source, count(*) AS n_docs,
         CAST(sum(n_chars) AS BIGINT) AS sum_chars

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
@@ -34,7 +35,7 @@ object ContaminationStreams {
                           staticDir: String, mod: Long = 17, n: Int = 8,
                           maxFilesPerTrigger: Option[Int] = None,
                           queryName: String = "stream_contamination"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
     // static side: benchmark n-gram set, distinct-reduced (broadcast-sized
     // relative to the corpus; Spark re-plans it into every micro-batch)
     val bench = Tables.documents(spark, staticDir)
@@ -57,11 +58,7 @@ object ContaminationStreams {
       // doing it inside the one aggregation keeps the query single-stateful
       .agg(collect_set(col("ng")).as("ngs"))
 
-    val q = hitsQuery.writeStream.format("memory").queryName(queryName)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val hits = spark.table(queryName)
+    val hits = StreamHarness.runToMemory(hitsQuery, queryName, OutputMode.Complete)()
       .select(col("doc_id"), size(col("ngs")).cast("long").as("n_contaminated"))
 
     // batch-side totals (row-local per doc — no stream state needed),

@@ -149,7 +149,7 @@ object DedupStreams {
                                minAgree: Int, bucketCap: Int,
                                queryName: String,
                                docFilter: Option[Column] = None): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
     import spark.implicits._
     // docFilter prunes documents BEFORE the per-doc signature hashing —
     // the pipeline's dominant cost — so callers can run the full
@@ -200,15 +200,8 @@ object DedupStreams {
     val dups = bandedDocs
       .groupByKey(d => (d.band, d.bh))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-    val q = dups.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // a pair found through several bands appears once per band — collapse
-    spark.table(queryName)
+    StreamHarness.runToMemory(dups, queryName, OutputMode.Append)()
       .groupBy("doc_id", "dup_of").agg(max("n_eq").as("n_eq"))
       .orderBy("doc_id", "dup_of")
   }
@@ -235,7 +228,7 @@ object DedupStreams {
                                schema: org.apache.spark.sql.types.StructType,
                                windowMinutes: Int = 60,
                                queryName: String = "stream_windowed_dedup"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
     // canonical fingerprint (q43's sorted-distinct-token form): catches
     // reorder-only mirrors, which is what actually crosses source feeds
     val canonFp = md5(concat_ws(" ", array_sort(array_distinct(split(col("text"), " ")))))
@@ -259,14 +252,7 @@ object DedupStreams {
     val joined = inc.join(ref,
       expr(s"""a_fp = b_fp AND
                a_ts >= b_ts - INTERVAL $windowMinutes MINUTES AND a_ts <= b_ts"""))
-    val q = joined.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    StreamHarness.runToMemory(joined, queryName, OutputMode.Append)()
       .groupBy(col("b_id").as("doc_id"))
       .agg(min("a_id").as("dup_of"), count(lit(1)).as("n_ref_dups"))
       .orderBy("doc_id")

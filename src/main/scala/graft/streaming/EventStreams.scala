@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor,
+  TimeMode, TimerValues, TTLConfig, ValueState}
 
-import graft.Tables
+import StreamHarness.{runToMemory, withStreamConf}
 
 /** Structured Streaming twins of the batch event-time queries
   * (SURVEY.md §2.6 streaming row): readStream → watermark → windowed agg /
@@ -48,55 +49,6 @@ object EventStreams extends Serializable {
   def eventsStream(spark: SparkSession, dir: String): DataFrame =
     eventsStreamStaged(spark, dir)._1
 
-  /** Run `body` (a streaming query execution) with
-    * spark.sql.shuffle.partitions temporarily set to the STATE partition
-    * count, min(8, defaultParallelism): one state store per scheduler
-    * slot, capped at 8.
-    *
-    * Why the slot count: every stateful streaming operator keeps one
-    * state store PER shuffle partition, and each store pays a fixed cost
-    * in every micro-batch (load, commit, checksummed delta or snapshot
-    * write) that dwarfs its row work at fixture scale. With more
-    * partitions than slots a stateful stage runs in several waves of
-    * tasks that are mostly that fixed cost; one partition per slot runs
-    * it in one wave with the fewest stores.
-    *
-    * Why the cap of 8: measured on sf0.1 at local[32], 32 → 8 partitions
-    * took the stream-stream join 6.3s→3.2s and timeout sessionization
-    * 5.6s→3.6s (BENCH.md, round 7) — above 8 the extra stores cost more
-    * than the parallelism returns.
-    *
-    * Why OPTIMIZATION_r18.md's "8 → 4 a wash" does not carry over: that
-    * A/B ran at local[32], where 8 tasks already fit in one wave, so 4
-    * only dropped stores that ran in parallel anyway. Below 8 slots, 8
-    * stores take two waves; at local[4] going from 8 to 4 cut the
-    * stream_replay benchmark's mean Spark job time from 0.197s to 0.143s
-    * (medians of ten alternating runs each, every output checked).
-    *
-    * State partitioning is fixed at the query's FIRST start (a restart
-    * keeps the count its checkpoint recorded), so the conf must be set
-    * before .start(); a production stream sizes this by throughput
-    * exactly as a batch job sizes its shuffle.
-    *
-    * The conf is SESSION-GLOBAL, so the save/set/restore is serialized
-    * under a JVM lock: Verify's 4-way-parallel pool runs several
-    * streaming harnesses on one session, and unsynchronized save/restore
-    * pairs can interleave so that a body runs at the batch partition
-    * count and — worse — the LAST restore re-installs the temporary
-    * value permanently, skewing every later query in the sweep.
-    * Serializing the handful of streaming harnesses costs little; batch
-    * queries are unaffected.
-    */
-  private val shufflePartitionsLock = new Object
-
-  def withStreamShufflePartitions[A](spark: SparkSession)(body: => A): A =
-    shufflePartitionsLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val saved = spark.conf.get(key)
-      spark.conf.set(key, math.min(8, spark.sparkContext.defaultParallelism).toString)
-      try body finally spark.conf.set(key, saved)
-    }
-
   /** SLIDING 2h/1h trending-type ranking: every event lands in TWO
     * window states (the sliding shape q31 runs in batch), counts per
     * (window, type); the top-3 rank per window is the batch finishing
@@ -114,22 +66,15 @@ object EventStreams extends Serializable {
     * finisher runs on each emitted window.
     */
   def slidingTrending(spark: SparkSession, dir: String,
-      queryName: String = "stream_sliding_trend"): DataFrame = withStreamShufflePartitions(spark) {
+      queryName: String = "stream_sliding_trend"): DataFrame = withStreamConf(spark) {
     val agg = eventsStream(spark, dir)
       // no withWatermark: Complete mode ignores it for eviction, and an
       // inert watermark would misstate the query's state story (doc above)
       .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy("win_start").orderBy(col("n").desc, col("event_type").asc)
-    spark.table(queryName)
+    runToMemory(agg, queryName, OutputMode.Complete)()
       .select(col("w.start").cast("timestamp_ntz").as("win_start"), col("event_type"), col("n"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= 3)
@@ -143,20 +88,13 @@ object EventStreams extends Serializable {
     * state (the watermark does not evict); Append is the bounded-state
     * production form with identical per-window numbers.
     */
-  def tumblingCounts(spark: SparkSession, dir: String, queryName: String = "stream_tumbling"): DataFrame = withStreamShufflePartitions(spark) {
+  def tumblingCounts(spark: SparkSession, dir: String, queryName: String = "stream_tumbling"): DataFrame = withStreamConf(spark) {
     val agg = eventsStream(spark, dir)
       // no withWatermark: inert under Complete mode (see slidingTrending)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.functions.Metrics.canonRound(graft.functions.Metrics.exactSum(col("value")), 4).as("sum_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    runToMemory(agg, queryName, OutputMode.Complete)()
       .select(col("w.start").cast("timestamp_ntz").as("hour_start"),
         col("event_type"), col("n"), col("sum_value"))
       .orderBy("hour_start", "event_type")
@@ -168,23 +106,14 @@ object EventStreams extends Serializable {
     * (only dedup keys containing the event-time column are evicted), which
     * would OOM a long-running job.
     */
-  def dedupQuery(deduped: org.apache.spark.sql.Dataset[_], queryName: String): DataFrame = withStreamShufflePartitions(deduped.sparkSession) {
-    val q = deduped.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    deduped.sparkSession.table(queryName)
-  }
-
   def dedupStream(spark: SparkSession, dir: String, queryName: String = "stream_dedup"): DataFrame =
-    dedupQuery(
-      eventsStream(spark, dir)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id"),
-      queryName)
+    withStreamConf(spark) {
+      runToMemory(
+        eventsStream(spark, dir)
+          .withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("event_id"),
+        queryName, OutputMode.Append)()
+    }
 
   /** Stream-stream interval join: clicks joined to purchases of the same
     * user within the 30 minutes before the purchase — the streaming twin
@@ -195,7 +124,7 @@ object EventStreams extends Serializable {
     * keeps an unbounded 100 TB/day stream from accumulating state forever.
     * StreamingSpec asserts pair-level equality with the batch RangeJoin.
     */
-  private def attributionJoined(spark: SparkSession, dir: String, queryName: String): DataFrame = withStreamShufflePartitions(spark) {
+  private def attributionJoined(spark: SparkSession, dir: String, queryName: String): DataFrame = withStreamConf(spark) {
     val e = eventsStream(spark, dir)
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
@@ -207,14 +136,7 @@ object EventStreams extends Serializable {
     val joined = clicks.join(purchases,
       expr("""c_user = p_user AND
               click_ts >= p_ts - INTERVAL 30 MINUTES AND click_ts <= p_ts"""))
-    val q = joined.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    runToMemory(joined, queryName, OutputMode.Append)()
   }
 
   def attributionStream(spark: SparkSession, dir: String,
@@ -255,18 +177,22 @@ object EventStreams extends Serializable {
     ts
   }
 
+  /** The session gap: 30 minutes of inactivity close a session, the same
+    * 30 minutes the q129/q134 oracle SQL fixes. */
+  private[streaming] final val SessionGapUs = 30L * 60 * 1000000L
+
   /** The per-user open-session fold every sessionization harness in this
     * package shares (r15 verdict item 2 — until then each of the FIVE
     * stateful APIs carried a byte-identical copy of this loop, the exact
     * copy-drift class the r14 review caught once already): fold the
     * batch's rows (sorted by (ts, event_id) — micro-batch iterators carry
     * no order guarantee) into the open-session state, closing a session
-    * whenever the gap exceeds `gapUs`. Returns (closed sessions in
+    * whenever the gap exceeds [[SessionGapUs]]. Returns (closed sessions in
     * chronological order, the still-open state to persist). Pure and
     * state-API-agnostic, so GroupState, ValueState, and the restart
     * harness all call the same fold — their outputs can no longer drift.
     */
-  private[streaming] def foldSessions(userId: Long, gapUs: Long, rows: Iterator[Event],
+  private[streaming] def foldSessions(userId: Long, rows: Iterator[Event],
       prev: Option[SessionState]): (Iterator[SessionOut], Option[SessionState]) = {
     val sorted = rows.toSeq.sortBy(e => (toMicros(e.ts), e.event_id))
     var out = List.empty[SessionOut]
@@ -274,7 +200,7 @@ object EventStreams extends Serializable {
     sorted.foreach { e =>
       val t = toMicros(e.ts)
       cur match {
-        case Some(ss) if t - ss.end > gapUs =>
+        case Some(ss) if t - ss.end > SessionGapUs =>
           out ::= SessionOut(userId, fromMicros(ss.start), fromMicros(ss.end), ss.n)
           cur = Some(SessionState(t, t, 1))
         case Some(ss) =>
@@ -286,6 +212,26 @@ object EventStreams extends Serializable {
     (out.reverseIterator, cur)
   }
 
+  /** [[foldSessions]] on transformWithState: one ValueState holds the
+    * user's open session (q249, and q252 across restarts). `onUpdate`
+    * runs after each open-session write; the timer-evicting processor
+    * (q250) re-arms its timer there.
+    */
+  private[streaming] class SessionProcessor extends StatefulProcessor[Long, Event, SessionOut] {
+    @transient protected var open: ValueState[SessionState] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      open = getHandle.getValueState[SessionState](
+        "open", Encoders.product[SessionState], TTLConfig.NONE)
+    override def handleInputRows(userId: Long, rows: Iterator[Event],
+                                 tv: TimerValues): Iterator[SessionOut] = {
+      val prev: Option[SessionState] = if (open.exists()) Some(open.get()) else None
+      val (out, cur) = foldSessions(userId, rows, prev)
+      cur.foreach { ss => open.update(ss); onUpdate(ss) }
+      out
+    }
+    protected def onUpdate(ss: SessionState): Unit = ()
+  }
+
   /** Stateful sessionization via flatMapGroupsWithState (the §2.9 custom-
     * state row): per-user state = the open session; a gap > 30 min closes
     * it. Emits closed sessions — i.e. every session of a user except the
@@ -293,16 +239,15 @@ object EventStreams extends Serializable {
     * registry twin (q129) is oracle-checked: batch sessionization minus
     * each user's final session.
     */
-  def sessionizeStream(spark: SparkSession, dir: String, gapMinutes: Int = 30,
-                       queryName: String = "stream_sessions"): DataFrame = withStreamShufflePartitions(spark) {
+  def sessionizeStream(spark: SparkSession, dir: String,
+                       queryName: String = "stream_sessions"): DataFrame = withStreamConf(spark) {
     import spark.implicits._
-    val gapUs = gapMinutes * 60 * 1000000L
     val events = eventsStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
 
     def update(userId: Long, rows: Iterator[Event], state: GroupState[SessionState]): Iterator[SessionOut] = {
-      val (out, cur) = foldSessions(userId, gapUs, rows, state.getOption)
+      val (out, cur) = foldSessions(userId, rows, state.getOption)
       cur.foreach(state.update)
       out
     }
@@ -310,14 +255,7 @@ object EventStreams extends Serializable {
     val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-    val q = sessions.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName).orderBy("user_id", "session_start")
+    runToMemory(sessions, queryName, OutputMode.Append)().orderBy("user_id", "session_start")
   }
 
   /** Sessionization via Spark 4's transformWithState — the NEW arbitrary
@@ -331,56 +269,20 @@ object EventStreams extends Serializable {
     * the registry twin (q249) reuses q129's oracle VERBATIM, and the
     * spec pins the two APIs' outputs row-for-row equal.
     *
-    * transformWithState requires the RocksDB state store provider; the
-    * conf is set for the harness run and restored after (local default
-    * is HDFSBackedStateStoreProvider).
+    * transformWithState requires the RocksDB state store provider, so
+    * the harness runs under `withStreamConf(spark, rocksDb = true)`.
     */
-  def sessionizeTws(spark: SparkSession, dir: String, gapMinutes: Int = 30,
-                    queryName: String = "stream_sessions_tws"): DataFrame = withStreamShufflePartitions(spark) {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val gapUs = gapMinutes * 60 * 1000000L
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val events = eventsStream(spark, dir)
+  def sessionizeTws(spark: SparkSession, dir: String,
+                    queryName: String = "stream_sessions_tws"): DataFrame =
+    withStreamConf(spark, rocksDb = true) {
+      import spark.implicits._
+      val sessions = eventsStream(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .as[Event]
-      class SessionProcessor extends StatefulProcessor[Long, Event, SessionOut] {
-        @transient private var open: ValueState[SessionState] = _
-        override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-          open = getHandle.getValueState[SessionState](
-            "open", org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
-        override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                     tv: TimerValues): Iterator[SessionOut] = {
-          val prev: Option[SessionState] = if (open.exists()) Some(open.get()) else None
-          val (out, cur) = foldSessions(userId, gapUs, rows, prev)
-          cur.foreach(open.update)
-          out
-        }
-      }
-      val sessions = events
         .groupByKey(_.user_id)
         .transformWithState(new SessionProcessor, TimeMode.None(), OutputMode.Append())
-      val q = sessions.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      // the memory sink holds its rows on the driver, so restoring the
-      // provider conf below cannot affect the returned frame
-      spark.table(queryName).orderBy("user_id", "session_start")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+      runToMemory(sessions, queryName, OutputMode.Append)().orderBy("user_id", "session_start")
     }
-  }
 
   /** Sessionization with EVENT-TIME TIMEOUT eviction — the piece q129's
     * NoTimeout variant can't show: an idle user's open session is emitted
@@ -404,10 +306,9 @@ object EventStreams extends Serializable {
     * timeout can fire, so no eviction can ever split a session an
     * unprocessed event would have extended.
     */
-  def sessionizeEvictAll(spark: SparkSession, dir: String, gapMinutes: Int = 30,
-                         queryName: String = "stream_sessions_evict"): DataFrame = withStreamShufflePartitions(spark) {
+  def sessionizeEvictAll(spark: SparkSession, dir: String,
+                         queryName: String = "stream_sessions_evict"): DataFrame = withStreamConf(spark) {
     import spark.implicits._
-    val gapUs = gapMinutes * 60 * 1000000L
     val (stream, stage) = eventsStreamStaged(spark, dir)
     val events = stream
       .withWatermark("ts", "1 hour")
@@ -420,11 +321,11 @@ object EventStreams extends Serializable {
         state.remove()
         Iterator.single(SessionOut(userId, fromMicros(ss.start), fromMicros(ss.end), ss.n))
       } else {
-        val (out, cur) = foldSessions(userId, gapUs, rows, state.getOption)
+        val (out, cur) = foldSessions(userId, rows, state.getOption)
         cur.foreach { ss =>
           state.update(ss)
           // evict when the watermark passes the session's gap horizon
-          state.setTimeoutTimestamp(math.floorDiv(ss.end + gapUs, 1000L))
+          state.setTimeoutTimestamp(math.floorDiv(ss.end + SessionGapUs, 1000L))
         }
         out
       }
@@ -433,28 +334,20 @@ object EventStreams extends Serializable {
     val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-    val q = sessions.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    driveHeartbeats(spark, dir, stage, q)
-    q.stop()
-    spark.table(queryName)
+    runToMemory(sessions, queryName, OutputMode.Append)(driveHeartbeats(spark, dir, stage, _))
       .filter(col("user_id") >= 0)
       .orderBy("user_id", "session_start")
   }
 
   /** Two staged heartbeats carry the watermark past every horizon;
     * each is a data batch, so eviction/timer firing never depends on
-    * the engine's optional no-data microbatch. Shared by the
-    * GroupStateTimeout (q134), transformWithState-timer (q250), and
-    * multi-handle-profile (q255) harnesses — the q255 copy was the last
-    * near-duplicate of this scaffold (r16, closing the r15 item-2
-    * sweep): it differs only in the day offsets (span-derived, so no
-    * profile flushes mid-stream) and in a link-name prefix that sorts
-    * its heartbeats after the slice files.
+    * the engine's optional no-data microbatch. Each heartbeat harness
+    * passes this as the `afterDrain` hook of
+    * [[StreamHarness.runToMemory]], which stops the query even when a
+    * heartbeat write throws. The day offsets and the link-name prefix
+    * are the caller's: q255 derives its offsets from the fixture span
+    * (no profile may flush mid-stream) and prefixes its links so they
+    * sort after the slice files.
     */
   private[streaming] def driveHeartbeats(spark: SparkSession, dir: String,
                               stage: java.nio.file.Path,
@@ -493,37 +386,17 @@ object EventStreams extends Serializable {
     * gap-closed = batch-sessionization identity, so q250 reuses q134's
     * oracle VERBATIM.
     */
-  def sessionizeTwsEvict(spark: SparkSession, dir: String, gapMinutes: Int = 30,
-                         queryName: String = "stream_sessions_tws_evict"): DataFrame = withStreamShufflePartitions(spark) {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val gapUs = gapMinutes * 60 * 1000000L
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+  def sessionizeTwsEvict(spark: SparkSession, dir: String,
+                         queryName: String = "stream_sessions_tws_evict"): DataFrame =
+    withStreamConf(spark, rocksDb = true) {
+      import spark.implicits._
+      import org.apache.spark.sql.streaming.ExpiredTimerInfo
       val (stream, stage) = eventsStreamStaged(spark, dir)
-      val events = stream
-        .withWatermark("ts", "1 hour")
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        .as[Event]
-      class EvictingProcessor extends StatefulProcessor[Long, Event, SessionOut] {
-        @transient private var open: ValueState[SessionState] = _
-        override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-          open = getHandle.getValueState[SessionState](
-            "open", org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
-        override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                     tv: TimerValues): Iterator[SessionOut] = {
-          val prev: Option[SessionState] = if (open.exists()) Some(open.get()) else None
-          val (out, cur) = foldSessions(userId, gapUs, rows, prev)
-          cur.foreach { ss =>
-            open.update(ss)
-            // the horizon moved: clear stale timers, register end + gap
-            getHandle.listTimers().foreach(getHandle.deleteTimer)
-            getHandle.registerTimer(math.floorDiv(ss.end + gapUs, 1000L))
-          }
-          out
+      class EvictingProcessor extends SessionProcessor {
+        // the horizon moved: clear stale timers, register end + gap
+        override protected def onUpdate(ss: SessionState): Unit = {
+          getHandle.listTimers().foreach(getHandle.deleteTimer)
+          getHandle.registerTimer(math.floorDiv(ss.end + SessionGapUs, 1000L))
         }
         override def handleExpiredTimer(userId: Long, tv: TimerValues,
                                         info: ExpiredTimerInfo): Iterator[SessionOut] = {
@@ -534,25 +407,14 @@ object EventStreams extends Serializable {
           } else Iterator.empty
         }
       }
-      val sessions = events
+      val sessions = stream
+        .withWatermark("ts", "1 hour")
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[Event]
         .groupByKey(_.user_id)
         .transformWithState(new EvictingProcessor, TimeMode.EventTime(), OutputMode.Append())
-      val q = sessions.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      q.processAllAvailable()
-      driveHeartbeats(spark, dir, stage, q)
-      q.stop()
-      spark.table(queryName)
+      runToMemory(sessions, queryName, OutputMode.Append)(driveHeartbeats(spark, dir, stage, _))
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "session_start")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
     }
-  }
 }

@@ -48,7 +48,7 @@ object GraphStreams {
     */
   def streamingComponents(spark: SparkSession, dir: String,
                           queryName: String = "stream_components"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       // the edge pipeline (minhash + banded self-join + eq-count filter)
       // runs exactly ONCE: stageSlices writes every slice in a single
       // pass (r19), so the eager cache+count that used to shield it from
@@ -56,7 +56,7 @@ object GraphStreams {
       val edges = DedupQueries.dedupEdges(spark, dir)
       val (stage, schema) = StreamHarness.stageSlices(
         edges, pmod(xxhash64(col("u"), col("v")), lit(3)), 0 to 2, "graft_cc_stage_")
-      val state = StreamHarness.runVersionedMerge(spark, stage, schema,
+      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
         "graft_cc_state_", queryName) { (prev, batch) =>
         mergeStep(prev, batch.select(col("u"), col("v")))
       }

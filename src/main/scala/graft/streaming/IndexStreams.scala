@@ -75,7 +75,7 @@ object IndexStreams {
     */
   def streamingMinhashIndexWithState(spark: SparkSession, dir: String,
       queryName: String = "stream_minhash_index"): (DataFrame, DataFrame) =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val base = docs.filter(col("doc_id") % 3 === 0)
       val streamed = docs.filter(col("doc_id") % 3 =!= 0)
@@ -121,9 +121,7 @@ object IndexStreams {
           batchBands.unpersist()
         }
       }
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$stage/slice_*")
+      val q = StreamHarness.sliceStream(spark, stage, schema)
         .writeStream.foreachBatch(applyBatch).queryName(queryName).start()
       try q.processAllAvailable() finally q.stop()
       require(version >= 1, "stream produced no batches")

@@ -24,14 +24,14 @@ object PreferenceStreams {
     */
   def streamingBradleyTerry(spark: SparkSession, dir: String,
                             queryName: String = "stream_bt"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       val docs = graft.Tables.documents(spark, dir)
       // the judgment stream: generation happens batch-side (it needs
       // the adjacency window); what STREAMS is the per-event grain
       val comps = BradleyTerry.comparisonRows(docs)
       val (stage, schema) = StreamHarness.stageSlices(
         comps, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_bt_stage_")
-      val state = StreamHarness.runVersionedMerge(spark, stage, schema,
+      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
         "graft_bt_state_", queryName) { (prev, batch) =>
         // delta reduced to its own matrix BEFORE the merge: the
         // state write is always ≤ k² + k² rows, never event-sized

@@ -40,110 +40,91 @@ object ProfileStreams {
   case class ProfileOut(user_id: Long, event_type: String, n_events: Long,
                         sum_micros: Long, n_sessions: Long)
 
-  def userProfileTws(spark: SparkSession, dir: String, gapMinutes: Int = 30,
+  def userProfileTws(spark: SparkSession, dir: String,
                      queryName: String = "tws_profile"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark, rocksDb = true) {
       import spark.implicits._
       import org.apache.spark.sql.streaming.{
         ExpiredTimerInfo, ListState, MapState, StatefulProcessor, TimeMode,
         TimerValues, TTLConfig, ValueState}
-      val gapUs = gapMinutes * 60 * 1000000L
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val batchEvents = graft.Tables.events(spark, dir)
-          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-        // horizon: longer than the corpus span -> no mid-stream flush;
-        // heartbeats land just past it
-        val span = batchEvents.agg(min("ts"), max("ts")).head
-        val spanUs = (span.getTimestamp(1).getTime - span.getTimestamp(0).getTime) * 1000L
-        val horizonUs = spanUs + 86400L * 1000000L
-        val hbDays = spanUs / (86400L * 1000000L) + 2
+      val batchEvents = graft.Tables.events(spark, dir)
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      // horizon: longer than the corpus span -> no mid-stream flush;
+      // heartbeats land just past it
+      val span = batchEvents.agg(min("ts"), max("ts")).head
+      val spanUs = (span.getTimestamp(1).getTime - span.getTimestamp(0).getTime) * 1000L
+      val horizonUs = spanUs + 86400L * 1000000L
+      val hbDays = spanUs / (86400L * 1000000L) + 2
 
-        // time-ordered terciles (q252's slicing contract), via
-        // DistributedRank.ntile — one range exchange, never the
-        // single-partition window sort (r15 verdict item 1)
-        val (stage, schema) = StreamHarness.stageTimeOrderedSlices(
-          batchEvents, Seq(col("ts"), col("event_id")), 3, "graft_twsprofile_stage_")
+      // time-ordered terciles (q252's slicing contract), via
+      // DistributedRank.ntile — one range exchange, never the
+      // single-partition window sort (r15 verdict item 1)
+      val (stage, schema) = StreamHarness.stageTimeOrderedSlices(
+        batchEvents, Seq(col("ts"), col("event_id")), 3, "graft_twsprofile_stage_")
 
-        class ProfileProcessor extends StatefulProcessor[Long, EventStreams.Event, ProfileOut] {
-          @transient private var last: ValueState[Long] = _
-          @transient private var starts: ListState[Long] = _
-          @transient private var types: MapState[String, TypeStat] = _
-          override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-            last = getHandle.getValueState[Long](
-              "last", org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-            starts = getHandle.getListState[Long](
-              "starts", org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-            types = getHandle.getMapState[String, TypeStat](
-              "types", org.apache.spark.sql.Encoders.STRING,
-              org.apache.spark.sql.Encoders.product[TypeStat], TTLConfig.NONE)
-          }
-          override def handleInputRows(userId: Long, rows: Iterator[EventStreams.Event],
-                                       tv: TimerValues): Iterator[ProfileOut] = {
-            val sorted = rows.toSeq.sortBy(e => (EventStreams.toMicros(e.ts), e.event_id))
-            var prev: Option[Long] = if (last.exists()) Some(last.get()) else None
-            sorted.foreach { e =>
-              val t = EventStreams.toMicros(e.ts)
-              if (prev.forall(p => t - p > gapUs)) starts.appendValue(t)
-              val st = if (types.containsKey(e.event_type)) types.getValue(e.event_type)
-                else TypeStat(0L, 0L)
-              types.updateValue(e.event_type,
-                TypeStat(st.n + 1, st.sumMicros + math.floor(e.value * 1e4 + 0.5).toLong))
-              prev = Some(math.max(prev.getOrElse(Long.MinValue), t))
-            }
-            prev.foreach { p =>
-              last.update(p)
-              getHandle.listTimers().foreach(getHandle.deleteTimer)
-              getHandle.registerTimer(math.floorDiv(p + horizonUs, 1000L))
-            }
-            Iterator.empty
-          }
-          override def handleExpiredTimer(userId: Long, tv: TimerValues,
-                                          info: ExpiredTimerInfo): Iterator[ProfileOut] = {
-            val nSessions = starts.get().length
-            val out = types.iterator().map { case (k, v) =>
-              ProfileOut(userId, k, v.n, v.sumMicros, nSessions)
-            }.toList
-            last.clear(); starts.clear(); types.clear()
-            out.iterator
-          }
+      class ProfileProcessor extends StatefulProcessor[Long, EventStreams.Event, ProfileOut] {
+        @transient private var last: ValueState[Long] = _
+        @transient private var starts: ListState[Long] = _
+        @transient private var types: MapState[String, TypeStat] = _
+        override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+          last = getHandle.getValueState[Long](
+            "last", org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          starts = getHandle.getListState[Long](
+            "starts", org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
+          types = getHandle.getMapState[String, TypeStat](
+            "types", org.apache.spark.sql.Encoders.STRING,
+            org.apache.spark.sql.Encoders.product[TypeStat], TTLConfig.NONE)
         }
-
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$stage/*")
-          .withWatermark("ts", "1 hour")
-          .as[EventStreams.Event]
-        val profiles = stream.groupByKey(_.user_id)
-          .transformWithState(new ProfileProcessor, TimeMode.EventTime(), OutputMode.Append())
-        val q = profiles.writeStream
-          .outputMode(OutputMode.Append)
-          .format("memory")
-          .queryName(queryName)
-          .start()
-        q.processAllAvailable()
-        // heartbeat batches drive the watermark past every horizon —
-        // the shared scaffold, with span-derived offsets (no profile
-        // may flush mid-stream) and a link prefix that sorts the
-        // heartbeats after the slice files
-        EventStreams.driveHeartbeats(spark, dir, stage, q,
-          dayOffsets = Seq(hbDays, hbDays + 1), linkPrefix = "zz_")
-        q.stop()
-        spark.table(queryName)
-          .filter(col("user_id") >= 0)
-          .select(col("user_id"), col("event_type"), col("n_events"),
-            graft.functions.Metrics.canonRound(col("sum_micros").cast("double") / 1e4, 4)
-              .as("sum_value"),
-            col("n_sessions"))
-          .orderBy("user_id", "event_type")
-      } finally {
-        prevProvider match {
-          case Some(p) => spark.conf.set(providerKey, p)
-          case None => spark.conf.unset(providerKey)
+        override def handleInputRows(userId: Long, rows: Iterator[EventStreams.Event],
+                                     tv: TimerValues): Iterator[ProfileOut] = {
+          val sorted = rows.toSeq.sortBy(e => (EventStreams.toMicros(e.ts), e.event_id))
+          var prev: Option[Long] = if (last.exists()) Some(last.get()) else None
+          sorted.foreach { e =>
+            val t = EventStreams.toMicros(e.ts)
+            if (prev.forall(p => t - p > EventStreams.SessionGapUs)) starts.appendValue(t)
+            val st = if (types.containsKey(e.event_type)) types.getValue(e.event_type)
+              else TypeStat(0L, 0L)
+            types.updateValue(e.event_type,
+              TypeStat(st.n + 1, st.sumMicros + math.floor(e.value * 1e4 + 0.5).toLong))
+            prev = Some(math.max(prev.getOrElse(Long.MinValue), t))
+          }
+          prev.foreach { p =>
+            last.update(p)
+            getHandle.listTimers().foreach(getHandle.deleteTimer)
+            getHandle.registerTimer(math.floorDiv(p + horizonUs, 1000L))
+          }
+          Iterator.empty
+        }
+        override def handleExpiredTimer(userId: Long, tv: TimerValues,
+                                        info: ExpiredTimerInfo): Iterator[ProfileOut] = {
+          val nSessions = starts.get().length
+          val out = types.iterator().map { case (k, v) =>
+            ProfileOut(userId, k, v.n, v.sumMicros, nSessions)
+          }.toList
+          last.clear(); starts.clear(); types.clear()
+          out.iterator
         }
       }
+
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$stage/*")
+        .withWatermark("ts", "1 hour")
+        .as[EventStreams.Event]
+      val profiles = stream.groupByKey(_.user_id)
+        .transformWithState(new ProfileProcessor, TimeMode.EventTime(), OutputMode.Append())
+      // heartbeat batches drive the watermark past every horizon —
+      // the shared scaffold, with span-derived offsets (no profile
+      // may flush mid-stream) and a link prefix that sorts the
+      // heartbeats after the slice files
+      StreamHarness.runToMemory(profiles, queryName, OutputMode.Append)(
+          EventStreams.driveHeartbeats(spark, dir, stage, _,
+            dayOffsets = Seq(hbDays, hbDays + 1), linkPrefix = "zz_"))
+        .filter(col("user_id") >= 0)
+        .select(col("user_id"), col("event_type"), col("n_events"),
+          graft.functions.Metrics.canonRound(col("sum_micros").cast("double") / 1e4, 4)
+            .as("sum_value"),
+          col("n_sessions"))
+        .orderBy("user_id", "event_type")
     }
 
   val q255 = GQuery(

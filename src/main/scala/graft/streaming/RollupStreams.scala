@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
@@ -29,7 +30,7 @@ object RollupStreams {
                       staticDir: String,
                       maxFilesPerTrigger: Option[Int] = None,
                       queryName: String = "stream_rollup"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       val cents = (c: org.apache.spark.sql.Column) => floor(c * 100 + 0.5).cast("long")
       val reader = maxFilesPerTrigger.foldLeft(spark.readStream.schema(schema)) {
         (r, m) => r.option("maxFilesPerTrigger", m)
@@ -38,10 +39,7 @@ object RollupStreams {
         .filter(col("o_orderkey") % 10 === 0)
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_delta"), sum(cents(col("o_totalprice"))).as("rev_delta"))
-      val q = running.writeStream.format("memory").queryName(queryName)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      val deltaState = spark.table(queryName)
+      val deltaState = StreamHarness.runToMemory(running, queryName, OutputMode.Complete)()
       // batch finisher: merge the final streamed partials into the static
       // base rollup — identical to TableMaintenance.incrementalRollup's
       // merge stage, hence the shared oracle

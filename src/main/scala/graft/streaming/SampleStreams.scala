@@ -24,11 +24,11 @@ object SampleStreams {
     */
   def streamingPrioritySample(spark: SparkSession, dir: String,
                               queryName: String = "stream_psample"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       val docs = graft.Tables.documents(spark, dir)
       val (stage, schema) = StreamHarness.stageSlices(
         docs, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_psample_stage_")
-      val state = StreamHarness.runVersionedMerge(spark, stage, schema,
+      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
         "graft_psample_state_", queryName) { (prev, batch) =>
         // topState's partial aggregation reduces the raw batch
         // priorities map-side, so the state write stays (k+1)·|langs|
@@ -52,13 +52,13 @@ object SampleStreams {
     */
   def streamingDsirSelect(spark: SparkSession, dir: String,
                           queryName: String = "stream_dsir"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       import graft.operators.DsirSelect
       val docs = graft.Tables.documents(spark, dir)
       val (_, raw) = DsirSelect.corpora(docs)
       val (stage, schema) = StreamHarness.stageSlices(
         raw, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_dsir_stage_")
-      val state = StreamHarness.runVersionedMerge(spark, stage, schema,
+      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
         "graft_dsir_state_", queryName) { (prev, batch) =>
         val delta = DsirSelect.rawBuckets(batch)
         prev.map(_.unionByName(delta)).getOrElse(delta)

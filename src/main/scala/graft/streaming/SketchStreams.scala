@@ -42,12 +42,12 @@ object SketchStreams {
     */
   def streamingKmv(spark: SparkSession, dir: String, k: Int = 32,
                    queryName: String = "stream_kmv"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       val docs = KmvSketch.augmentedDocs(spark, dir)
       val (stage, schema) = StreamHarness.stageSlices(
         docs.select(col("doc_id"), col("source"), col("text")),
         pmod(col("doc_id"), lit(3)), 0 to 2, "graft_kmv_stage_")
-      val state = StreamHarness.runVersionedMerge(spark, stage, schema,
+      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
         "graft_kmv_state_", queryName) { (prev, batch) =>
         mergeStep(prev, KmvSketch.sketch(batch, k).select(col("source"), col("h")), k)
       }
@@ -66,14 +66,14 @@ object SketchStreams {
     */
   def streamingQuantileSketch(spark: SparkSession, dir: String,
                               queryName: String = "stream_qsketch"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       import graft.operators.QuantileSketchQueries
       val k = QuantileSketchQueries.K
       val rows = QuantileSketchQueries.base(spark, dir)
         .select(col("qkey"), col("h"), col("v"))
       val (stage, schema) = StreamHarness.stageSlices(
         rows, pmod(col("h"), lit(3)), 0 to 2, "graft_qsk_stage_")
-      val state = StreamHarness.runVersionedMerge(spark, stage, schema,
+      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
         "graft_qsk_state_", queryName) { (prev, batch) =>
         val delta = batch.groupBy("qkey")
           .agg(call_function("graft_qsketch", col("h"), col("v"), lit(k)).as("sk"))
@@ -94,12 +94,12 @@ object SketchStreams {
     */
   def streamingCms(spark: SparkSession, dir: String,
                    queryName: String = "stream_cms"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       import graft.operators.CountMinSketch
       val docs = graft.Tables.documents(spark, dir)
       val (stage, schema) = StreamHarness.stageSlices(
         docs, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_cms_stage_")
-      val state = StreamHarness.runVersionedMerge(spark, stage, schema,
+      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
         "graft_cms_state_", queryName) { (prev, batch) =>
         val delta = CountMinSketch.mergeMatrices(CountMinSketch.langMatrices(batch))
         prev.map(_.unionByName(delta)).getOrElse(delta)

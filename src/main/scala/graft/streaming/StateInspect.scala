@@ -42,7 +42,7 @@ object StateInspect {
     * metadata assertions.
     */
   def tumblingState(spark: SparkSession, dir: String): (DataFrame, String) =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       val ckpt = TempDirs.create("graft_stateinspect_ckpt_")
       val agg = EventStreams.eventsStream(spark, dir)
         .withWatermark("ts", "2 hours")
@@ -53,8 +53,7 @@ object StateInspect {
         .format("noop")
         .option("checkpointLocation", ckpt.toString)
         .start()
-      q.processAllAvailable()
-      q.stop()
+      try q.processAllAvailable() finally q.stop()
       val st = spark.read.format("statestore").option("path", ckpt.toString).load()
       val out = st.select(
         col("key.window.start").cast("timestamp_ntz").as("hour_start"),

@@ -4,22 +4,29 @@ import java.nio.file.Path
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
-/** The shared local-harness scaffold behind every versioned-parquet
-  * foreachBatch stream in this package (r15 verdict item 2: the scaffold
-  * had been copy-pasted across eight sites — UpsertStreams, the three
-  * SketchStreams maintainers, GraphStreams, the two SampleStreams
-  * maintainers, PreferenceStreams — and a divergence in any copy is
-  * exactly the cross-batch-pair defect class the r14 review caught once
-  * already in IndexStreams).
+/** The shared local-harness scaffold behind every streaming query in
+  * this package: the session confs a harness runs under, the memory-sink
+  * query lifecycle, the slice staging and the versioned-parquet merge
+  * loop. Each piece exists once so a divergence between copies cannot
+  * happen (r15 verdict item 2: the merge scaffold had been copy-pasted
+  * across eight sites, and a divergence in one copy is exactly the
+  * cross-batch-pair defect class the r14 review caught in IndexStreams).
   *
-  * Two pieces, deliberately separable because RestartStreams' crash
-  * harnesses reuse the STAGING but not the merge loop (their loop injects
-  * mid-batch failures and runs multiple query incarnations):
+  *  - [[withStreamConf]]: run a harness with the state partition count
+  *    and, for transformWithState, the RocksDB state store provider set
+  *    on the session, restored afterwards under one JVM lock.
+  *
+  *  - [[runToMemory]]: start a memory-sink query, drain it, run an
+  *    optional hook against the live query (the heartbeat harnesses feed
+  *    their watermark batches there), stop it in a `finally`, and return
+  *    the sink table. A failing drain or hook can never leave the named
+  *    query active.
   *
   *  - [[stageSlices]] / [[stageTimeOrderedSlices]]: write the input as N
-  *    single-file parquet slices a FileStreamSource then replays as N
+  *    single-file parquet slices that [[sliceStream]] then replays as N
   *    micro-batches. ONE file per slice is load-bearing:
   *    maxFilesPerTrigger=1 feeds part FILES, so a multi-part slice
   *    silently becomes many tiny micro-batches (q227 measured 24 batches
@@ -29,6 +36,9 @@ import org.apache.spark.sql.types.StructType
   *    `Exchange SinglePartition` sort, the exact idiom the rest of the
   *    library eliminated (r15 verdict item 1; StreamingSpec pins the
   *    staging plan). Identical tercile assignment, one range exchange.
+  *    RestartStreams' crash harnesses reuse the staging but not the merge
+  *    loop (their loop injects mid-batch failures and runs multiple query
+  *    incarnations).
   *
   *  - [[runVersionedMerge]]: the replay-guarded versioned-parquet merge
   *    loop — state table rewritten per batch as `v<version>`, a
@@ -37,12 +47,100 @@ import org.apache.spark.sql.types.StructType
   *    becomes a partitioned MERGE INTO keyed on the state key and the
   *    batch-id ledger lives in the table's commit log instead of a
   *    driver var (the UpsertStreams scaladoc's scale story — it holds
-  *    verbatim for every caller because the loop is now one function).
-  *    Callers provide only the MERGE: `(prevState, batch) => newState`,
-  *    which must reduce the batch to its bounded delta BEFORE touching
-  *    the state so the state write never scales with the stream.
+  *    for every caller, GShardQueries.q236 included, because the loop is
+  *    one function). Callers provide the source and the MERGE:
+  *    `(prevState, batch) => newState`, which must reduce the batch to
+  *    its bounded delta BEFORE touching the state so the state write
+  *    never scales with the stream.
   */
 object StreamHarness {
+
+  /** Run `body` (a streaming query execution) with the session's
+    * streaming confs set for it, and put back afterwards — whether the
+    * body returns or throws — the value each key had, unsetting a key
+    * the session had not set.
+    *
+    * spark.sql.shuffle.partitions is set to the STATE partition count,
+    * min(8, defaultParallelism): one state store per scheduler slot,
+    * capped at 8.
+    *
+    * Why the slot count: every stateful streaming operator keeps one
+    * state store PER shuffle partition, and each store pays a fixed cost
+    * in every micro-batch (load, commit, checksummed delta or snapshot
+    * write) that dwarfs its row work at fixture scale. With more
+    * partitions than slots a stateful stage runs in several waves of
+    * tasks that are mostly that fixed cost; one partition per slot runs
+    * it in one wave with the fewest stores.
+    *
+    * Why the cap of 8: measured on sf0.1 at local[32], 32 → 8 partitions
+    * took the stream-stream join 6.3s→3.2s and timeout sessionization
+    * 5.6s→3.6s (BENCH.md, round 7) — above 8 the extra stores cost more
+    * than the parallelism returns.
+    *
+    * Why OPTIMIZATION_r18.md's "8 → 4 a wash" does not carry over: that
+    * A/B ran at local[32], where 8 tasks already fit in one wave, so 4
+    * only dropped stores that ran in parallel anyway. Below 8 slots, 8
+    * stores take two waves; at local[4] going from 8 to 4 cut the
+    * stream_replay benchmark's mean Spark job time from 0.197s to 0.143s
+    * (medians of ten alternating runs each, every output checked).
+    *
+    * State partitioning is fixed at the query's FIRST start (a restart
+    * keeps the count its checkpoint recorded), so the conf must be set
+    * before .start(); a production stream sizes this by throughput
+    * exactly as a batch job sizes its shuffle.
+    *
+    * `rocksDb = true` also sets spark.sql.streaming.stateStore.providerClass
+    * to the RocksDB provider, which transformWithState requires (the local
+    * default is HDFSBackedStateStoreProvider). Only the TWS harnesses ask
+    * for it; every other harness keeps the default store.
+    *
+    * Both confs are SESSION-GLOBAL, so the save/set/restore is serialized
+    * under a JVM lock: Verify's 4-way-parallel pool runs several
+    * streaming harnesses on one session, and unsynchronized save/restore
+    * pairs can interleave so that a body runs at the batch partition
+    * count (or on the wrong store) and — worse — the LAST restore
+    * re-installs the temporary value permanently, skewing every later
+    * query in the sweep. Serializing the handful of streaming harnesses
+    * costs little; batch queries are unaffected.
+    */
+  def withStreamConf[A](spark: SparkSession, rocksDb: Boolean = false)(body: => A): A =
+    confLock.synchronized {
+      val confs = Seq("spark.sql.shuffle.partitions" ->
+          math.min(8, spark.sparkContext.defaultParallelism).toString) ++
+        (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        else Nil)
+      // getAll holds only the keys the session has set; getOption would
+      // report a registered default and turn the restore into a set
+      val set = spark.conf.getAll
+      val saved = confs.map { case (k, _) => k -> set.get(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
+  private val confLock = new Object
+
+  /** Run `ds` into a memory sink named `queryName` until every available
+    * input is processed, then `afterDrain` against the still-running
+    * query, and return the sink's table. The query is stopped in a
+    * `finally`: if the drain or the hook throws (a failed batch, a
+    * cancelled job group), the name is free for the next run instead of
+    * failing it with "already active". The memory sink holds its rows
+    * on the driver, so the returned frame outlives the query and any
+    * conf restore around it.
+    */
+  def runToMemory(ds: Dataset[_], queryName: String, outputMode: OutputMode)
+      (afterDrain: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val q = ds.writeStream.outputMode(outputMode).format("memory").queryName(queryName).start()
+    try {
+      q.processAllAvailable()
+      afterDrain(q)
+    } finally q.stop()
+    ds.sparkSession.table(queryName)
+  }
 
   /** Stage one single-file parquet slice per id in `sliceIds`, slice i =
     * rows where `sliceOf === i`. Returns (stage dir, slice schema).
@@ -174,16 +272,22 @@ object StreamHarness {
   def drainBatch(batch: Dataset[Row]): Unit =
     batch.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
 
+  /** The staged slices as a stream, one slice file per micro-batch. */
+  def sliceStream(spark: SparkSession, stage: Path, schema: StructType): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(s"$stage/slice_*")
+
   /** The replay-guarded versioned-parquet merge loop (scaladoc above).
-    * Streams the staged slices one file per micro-batch, applies
+    * Streams `source` (usually [[sliceStream]]), applies
     * `merge(prevState, batch)` per fresh batch id, writes state version
     * v0, v1, … under a fresh temp dir, and returns the FINAL state frame.
     * Requires at least one batch (an empty stream is a harness bug, not
     * a valid run).
     */
-  def runVersionedMerge(spark: SparkSession, stage: Path, schema: StructType,
-      statePrefix: String, queryName: String)
+  def runVersionedMerge(source: DataFrame, statePrefix: String, queryName: String)
       (merge: (Option[DataFrame], DataFrame) => DataFrame): DataFrame = {
+    val spark = source.sparkSession
     val stateBase = TempDirs.create(statePrefix)
     def statePath(v: Long) = s"$stateBase/v$v"
     var version = -1L
@@ -199,10 +303,7 @@ object StreamHarness {
         lastApplied = id
       }
     }
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$stage/slice_*")
-      .writeStream.foreachBatch(applyBatch).queryName(queryName).start()
+    val q = source.writeStream.foreachBatch(applyBatch).queryName(queryName).start()
     try q.processAllAvailable() finally q.stop()
     require(version >= 0, "stream produced no batches")
     spark.read.parquet(statePath(version))

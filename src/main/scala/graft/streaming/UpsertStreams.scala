@@ -57,14 +57,14 @@ object UpsertStreams {
     */
   def streamingUpsert(spark: SparkSession, dir: String,
       queryName: String = "stream_upsert"): DataFrame =
-    EventStreams.withStreamShufflePartitions(spark) {
+    StreamHarness.withStreamConf(spark) {
       val events = graft.Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       // local staging harness: slice by event_id so every slice carries
       // every user; a cluster deployment reads a real landing directory
       val (stage, schema) = StreamHarness.stageSlices(
         events, pmod(col("event_id"), lit(3)), 0 to 2, "graft_upsert_stage_")
-      StreamHarness.runVersionedMerge(spark, stage, schema,
+      StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
           "graft_upsert_state_", queryName) { (prev, batch) =>
           mergeStep(prev, deltaAgg(batch))
         }

@@ -35,7 +35,7 @@ class StateInspectSpec extends SparkSpec {
 
     // state-metadata: one stateStoreSave operator, store "default",
     // partition count = one state store per scheduler slot, capped at 8
-    // (EventStreams.withStreamShufflePartitions)
+    // (StreamHarness.withStreamConf)
     val meta = spark.read.format("state-metadata").option("path", ckpt).load()
       .select("operatorId", "operatorName", "stateStoreName", "numPartitions")
       .collect()
