@@ -61,7 +61,7 @@ import org.apache.spark.sql.functions._
   * amortized overhead. The certification bar (VERDICT r12): every ratio
   * ≤ ~3× at K=10, or a written regime note (PLANS.md's q211 template).
   * Each attempt records /proc/loadavg so a contended reading is
-  * adjudicable from the artifact alone (the Bench convention). A query
+  * adjudicable from the artifact alone. A query
   * exceeding the per-side timeout is cancelled via its job group and
   * recorded as -2 — a timeout at K× IS a scale finding, not noise.
   */

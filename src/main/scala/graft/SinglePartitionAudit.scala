@@ -58,7 +58,7 @@ import graft.registry.Registry
   * it. No fixed sleeps, no lost events.
   *
   * For every registry query: execute at `sfDir` (noop sink — full plan,
-  * the Bench convention), walk the FINAL adaptive plan including query
+  * as TimeQuery times it), walk the FINAL adaptive plan including query
   * stages and subqueries, and report every shuffle exchange targeting
   * `SinglePartition` with the number of records actually written into
   * it (the exchange's own shuffle-write metric — runtime truth, not an
@@ -350,8 +350,10 @@ object SinglePartitionAudit {
     */
   private[graft] val UnmeasuredAllowlist: Set[String] = Set.empty
 
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * character escaped (an AnalysisException message spans lines). */
+  private[graft] def jsonStr(s: String): String =
+    org.json4s.jackson.JsonMethods.compact(org.json4s.JString(s))
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
@@ -360,10 +362,9 @@ object SinglePartitionAudit {
     val only = args.lift(2).map(_.split(",").toSeq)
     // committed artifact (r17 verdict item 4): the audit's verdict used
     // to live only in stdout prose ("0/0/0/198 twice" in NOTES) — the
-    // next session couldn't diff it. One JSON per run, the BENCH/SCALE
-    // convention, with the same clobber discipline Bench grew in r18: a
-    // name-filtered run writes the subset side file, never the full
-    // registry artifact.
+    // next session couldn't diff it. One JSON per run, the SCALE
+    // convention: a name-filtered run writes the subset side file, never
+    // the full registry artifact.
     val outPath = args.lift(3).getOrElse(
       if (only.isDefined) "AUDIT_subset.json" else "AUDIT.json")
     val spark = Session.getOrCreate()

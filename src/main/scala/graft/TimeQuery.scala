@@ -1,8 +1,9 @@
 package graft
 
-/** Debug utility: steady-state timing of registry queries through the noop
-  * sink (same execution shape as Bench). Runs a warmup query first, then
-  * each named query `reps` times, reporting min/median.
+/** Isolated re-measure of registry queries through the noop sink (full
+  * plan execution, cold cache per rep). Runs a warmup query first, then
+  * each named query `reps` times, reporting min/median. Timing claims
+  * about the engine as a whole go through perfbench instead.
   * Usage: runMain graft.TimeQuery <name>[,<name>...] [sfDir] [reps]
   */
 object TimeQuery {
@@ -17,9 +18,9 @@ object TimeQuery {
     exec("q01_pricing_summary") // warmup
     names.foreach { name =>
       val ts = (1 to reps).map { _ =>
-        // cold per rep, like Bench: caches built by a query (or by a
-        // PREVIOUS query — canonicalized-plan cache matching crosses
-        // queries sharing subtrees) would otherwise contaminate timings
+        // cold per rep: caches built by a query (or by a PREVIOUS query —
+        // canonicalized-plan cache matching crosses queries sharing
+        // subtrees) would otherwise contaminate timings
         spark.sharedState.cacheManager.clearCache()
         val t0 = System.nanoTime()
         exec(name)

@@ -79,7 +79,7 @@ object SalesFeatures {
     *
     * CACHE CONTRACT: the cache stays until the caller clears it — this
     * function cannot know when the last fit has run. Unpersist the
-    * returned frame after the final fit (Bench/TimeQuery clear the whole
+    * returned frame after the final fit (perfbench/TimeQuery clear the whole
     * cache per query; Verify tolerates the gate-scale accumulation — see
     * DedupQueries.capBuckets for the contract).
     */

@@ -100,7 +100,7 @@ object DedupQueries {
     *
     * CACHE CONTRACT: the cache lives until the caller clears it — the
     * result is lazy, so this function cannot know when the last consumer
-    * has materialized. Bench/TimeQuery/ScaleSmoke clear the cache per
+    * has materialized. perfbench/TimeQuery/ScaleSmoke clear the cache per
     * query; Verify intentionally does NOT (it runs queries 4-way
     * concurrently, where a global clearCache would clobber other queries'
     * eagerly-materialized caches — at the sf0.01 gate the accumulated

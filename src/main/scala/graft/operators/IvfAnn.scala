@@ -35,7 +35,7 @@ object IvfAnn {
     * The returned index DataFrame is CACHED and eagerly materialized — it
     * is an index, meant to be probed repeatedly (search() alone reads it
     * twice). Caller owns the cache: `index.unpersist()` when done probing
-    * (Bench/TimeQuery clear the cache per query; Verify leaves the
+    * (perfbench/TimeQuery clear the cache per query; Verify leaves the
     * few-MB gate-scale caches to accumulate — see DedupQueries.capBuckets). The KMeans input cache is released here, inside the
     * builder, once the index is materialized.
     */

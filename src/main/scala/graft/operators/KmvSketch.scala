@@ -92,9 +92,10 @@ object KmvSketch {
     * through several join branches — recomputing would re-scan the corpus
     * per branch. The blocks stay pinned for the lifetime of the returned
     * (lazy) frame; a long-lived session that runs this repeatedly must
-    * clear them between runs (Bench/Verify already call
+    * clear them between runs (perfbench, TimeQuery and ScaleSmoke call
     * `sharedState.cacheManager.clearCache()` between queries, which is
-    * why registry sweeps don't accumulate).
+    * why their registry sweeps don't accumulate; Verify does not — see
+    * DedupQueries.capBuckets).
     */
   def overlapReport(s: org.apache.spark.sql.SparkSession, dir: String,
                     skIn: DataFrame): DataFrame = {

@@ -86,7 +86,7 @@ object PipelineQueries {
     * ngrams() HOF composition above is interpreted per row and ran this
     * query 7× slower), and the deduped frame is cached eagerly because
     * both the benchmark and train branches consume it (capBuckets cache
-    * contract: Bench/TimeQuery clear per query, Verify leaves it).
+    * contract: perfbench/TimeQuery clear per query, Verify leaves it).
     */
   val q109 = GQuery(
     "q109_contamination",

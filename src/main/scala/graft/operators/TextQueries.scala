@@ -475,7 +475,7 @@ object TextQueries {
       // cached + eager: the fingerprint is the expensive per-row
       // expression here and BloomJoin.anti's split (definite ∪ confirmed)
       // plus the bloom build would otherwise re-derive it 4× from the
-      // scan. Ownership: Bench/TimeQuery clear per query.
+      // scan. Ownership: perfbench/TimeQuery clear per query.
       val d = Tables.documents(s, dir)
         .withColumn("fp", fp)
         .withColumn("sn", regexp_replace(col("source"), "src", "").cast("int"))

@@ -66,13 +66,11 @@ object TriangleCount {
     * through a broadcast hash join where it is PRODUCED, paying no
     * shuffle at all (the wedge stream is √m times larger than the edge
     * list, so moving m once always beats moving m^1.5) — above it, the
-    * closure falls back to the shuffled-hash form. Tunable per
-    * deployment (`graft.triangles.broadcastEdgesMax`); the 5M default
-    * builds a ~200 MB hash relation, comfortable for executors with
-    * a few GB of memory.
+    * closure falls back to the shuffled-hash form. 5M edges build a
+    * ~200 MB hash relation, comfortable for executors with a few GB of
+    * memory.
     */
-  private val BroadcastEdgesMaxKey = "graft.triangles.broadcastEdgesMax"
-  private val BroadcastEdgesMaxDefault = 5000000L
+  private val BroadcastEdgesMax = 5000000L
 
   /** Triangles as (a, b, c) corner rows, each triangle exactly once:
     * wedges centered on the orientation-smallest corner, closed against
@@ -84,16 +82,14 @@ object TriangleCount {
     // caller above the ceiling would broadcast an arbitrarily large edge
     // list. Same real-count-vs-ceiling rule as reportFrom (guide §3.1).
     val nEdges = edges.count()
-    val bcMax = edges.sparkSession.conf
-      .get(BroadcastEdgesMaxKey, BroadcastEdgesMaxDefault.toString).toLong
     trianglesFrom(oriented(edges, degrees(edges)),
-      broadcastClosure = nEdges <= bcMax)
+      broadcastClosure = nEdges <= BroadcastEdgesMax)
   }
 
   /** [[triangles]] with the oriented edge set supplied — the report
     * caches it (it is consumed three times below).
     * @param broadcastClosure broadcast the closing edge set (see
-    * [[BroadcastEdgesMaxKey]]); false = the shuffled-hash fallback for
+    * [[BroadcastEdgesMax]]); false = the shuffled-hash fallback for
     * edge lists past the broadcast ceiling. No default: every caller
     * must decide from a REAL edge count against the ceiling (r18
     * ADVICE — the old `= true` default made the decision nowhere). */
@@ -146,14 +142,12 @@ object TriangleCount {
     // pick the join deliberately from the REAL size, not an estimate);
     // the count doubles as the audit's n_edges, saving that agg too
     val nEdges = edges.count()
-    val bcMax = edges.sparkSession.conf
-      .get(BroadcastEdgesMaxKey, BroadcastEdgesMaxDefault.toString).toLong
     // pre-partition the oriented edges by src (r18): the wedge
     // self-join's two projections then share this ONE exchange instead
     // of shuffling each side separately, and the per-partition hash
     // build happens in place
     val o = oriented(edges, deg).repartition(col("src")).cache()
-    val tri = trianglesFrom(o, broadcastClosure = nEdges <= bcMax)
+    val tri = trianglesFrom(o, broadcastClosure = nEdges <= BroadcastEdgesMax)
     // node-sized; consumed by the audit aggregate AND the top-100 join,
     // so caching it avoids a second pass over the wedge join (the
     // expensive subtree) — the q229 tiny-ranked-state precedent

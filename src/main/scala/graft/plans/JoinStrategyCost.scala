@@ -29,8 +29,7 @@ import graft.{Session, Tables}
   */
 object JoinStrategyCost {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val spark = Session.getOrCreate()
     val l = Tables.lineitem(spark, dir).select(col("l_partkey"), col("l_quantity"))

@@ -57,7 +57,7 @@ import org.apache.spark.sql.types.{
   *
   * Wide-interval cap: the explode is one row per covered bin, so an
   * open-ended or sentinel-dated interval (SCD2 valid_to = 9999-12-31)
-  * would span ~70M bins at the default width — blowing up the Generate,
+  * would span ~70M bins at the 3600 s width — blowing up the Generate,
   * and Sequence errors outright past 2^31 elements. The interval side is
   * therefore SPLIT at plan time on the per-row bin span: intervals
   * covering ≤ maxBinsPerInterval bins take the binned equi-join path;
@@ -68,9 +68,10 @@ import org.apache.spark.sql.types.{
   * trips the re-fire guard via a constant marker column so the fixpoint
   * does not re-bin it.
   *
+  * Bins are `BinSeconds` (3600 s) wide — ≳ the typical interval span, so
+  * most intervals replicate into ≤ 2 bins.
+  *
   * Config: spark.graft.rangeJoin.enabled (default true),
-  * spark.graft.rangeJoin.binSeconds (default 3600 — pick ≳ the typical
-  * interval span so most intervals replicate into ≤ 2 bins),
   * spark.graft.rangeJoin.maxBinsPerInterval (default 256; ≤ 0 disables
   * the split and bins every interval unconditionally).
   */
@@ -80,6 +81,9 @@ object RangeJoinRewrite extends Rule[LogicalPlan]
   private val PointBin = "__graft_rj_bin_p"
   private val IntervalBin = "__graft_rj_bin_i"
   private val markerNames = Set(PointBin, IntervalBin, "__bin")
+
+  /** Bin width in seconds (see the object doc). */
+  private val BinSeconds = 3600L
 
   /** Re-fire guard for the joins this rule GENERATES. The name-based
     * markerNames guard alone is not optimizer-stable for the fallback
@@ -98,8 +102,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan]
 
   private def enabled: Boolean =
     conf.getConfString("spark.graft.rangeJoin.enabled", "true").toBoolean
-  private def binSeconds: Long =
-    conf.getConfString("spark.graft.rangeJoin.binSeconds", "3600").toLong
   private def maxBinsPerInterval: Long =
     conf.getConfString("spark.graft.rangeJoin.maxBinsPerInterval", "256").toLong
 
@@ -169,7 +171,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan]
     matched.flatMap { case (p, lo, hi) =>
       val pointOnLeft = refsOnly(p, left)
       val (pointSide, intervalSide) = if (pointOnLeft) (left, right) else (right, left)
-      val binMicros = binSeconds * 1000000L
+      val binMicros = BinSeconds * 1000000L
       // STREAM-STREAM joins take the single binned branch unconditionally
       // (the pre-cap shape): a Union of two stateful stream-stream joins
       // doubles state stores and wedges micro-batch planning (found by

@@ -25,162 +25,6 @@ class RegistrySpec extends SparkSpec {
     assert(names.distinct.size == names.size)
   }
 
-  test("Bench retry references parse from BENCH_DETAIL.json and name live queries") {
-    // thresholds are data-derived now (r12 verdict item 7): the committed
-    // detail artifact must parse, its times must be positive, and (modulo
-    // queries renamed THIS round, which legitimately fall back to the
-    // default until the next sweep) its names must be live registry rows
-    val refs = Bench.refSecFromDetail()
-    if (refs.nonEmpty) { // absent on a fresh checkout — defaults apply
-      assert(refs.values.forall(v => v >= 0.3 && v < 3600), refs.take(5))
-      val live = refs.keySet.intersect(Registry.queries.keySet)
-      assert(live.size >= refs.size / 2,
-        s"detail artifact mostly names unknown queries: ${refs.keySet -- Registry.queries.keySet}")
-    }
-    // and a missing file degrades to empty (default thresholds), not a crash
-    assert(Bench.refSecFromDetail("/nonexistent/detail.json").isEmpty)
-  }
-
-  test("Bench retry reference is the LOWER median of recorded attempts") {
-    // the deferred pass stops at the first sub-threshold attempt, so the
-    // dominant retried shape is exactly 2 attempts [contended, steady] —
-    // the upper median would re-select the contended time the median was
-    // adopted to exclude (review finding, r14)
-    val f = java.nio.file.Files.createTempFile("bench_detail", ".json")
-    java.nio.file.Files.write(f,
-      """{"attempts":{"q_two":[[6.1,3.2,true],[2.0,0.4,false]],
-        |"q_three":[[9.0,3.0,true],[2.0,0.5,false],[4.0,0.6,false]],
-        |"q_floor":[[0.1,0.2,false]]}}""".stripMargin.getBytes("UTF-8"))
-    val refs = Bench.refSecFromDetail(f.toString)
-    assert(refs("q_two") == 2.0)   // lower median, not the contended 6.1
-    assert(refs("q_three") == 4.0) // odd count: the true median
-    assert(refs("q_floor") == 0.3) // jitter floor
-    java.nio.file.Files.delete(f)
-  }
-
-  test("Bench self-adjudicating totals: contended slice and idle reference (r15 item 4)") {
-    // q_idle: idle evidence this sweep -> contributes nothing to the
-    //   contended slice; its idle reference is its best idle attempt.
-    // q_hot: every attempt contended -> its reported time IS the
-    //   contended slice; reference falls back to the prior sweep's median.
-    // q_new_hot: contended AND absent from the prior artifact -> no
-    //   correction available; the observation itself is the reference.
-    // q_err: failed (-1) -> excluded from every total (matches `value`).
-    // attempts carry (time, loadavg, bar-in-effect) — the bar rides per
-    // attempt since r18 (the deferred pass can re-base it mid-sweep)
-    val results = Seq("q_idle" -> 2.0, "q_hot" -> 9.0, "q_new_hot" -> 5.0, "q_err" -> -1.0)
-    def withBar(bar: Double)(m: Map[String, Vector[(Double, Double)]]) =
-      m.view.mapValues(_.map { case (t, la) => (t, la, bar) }).toMap
-    val raw = Map(
-      "q_idle" -> Vector((6.0, 4.0), (2.0, 0.5)),
-      "q_hot" -> Vector((9.0, 7.2)),
-      "q_new_hot" -> Vector((5.0, 6.0)),
-      "q_err" -> Vector((-1.0, 0.4)))
-    val refs = Map("q_hot" -> 3.0)
-    val (contended, idleRef) =
-      Bench.idleAdjudicatedTotals(results, withBar(2.0)(raw), refs)
-    assert(contended == 9.0 + 5.0) // the unevidenced slice of value
-    assert(idleRef == 2.0 + 3.0 + 5.0) // best idle, prior median, raw observation
-    // fully idle sweep degenerates to (0, value) — the no-correction case
-    val (c2, i2) = Bench.idleAdjudicatedTotals(
-      Seq("q" -> 1.5), Map("q" -> Vector((1.5, 0.3, 2.0))), Map.empty)
-    assert(c2 == 0.0 && i2 == 1.5)
-    // self-load-scaled bar (r16 ADVICE): with a quiet start on a 32-CPU
-    // box the bar is 9.0, so q_hot's 7.2-loadavg attempt AND q_new_hot's
-    // 6.0-loadavg attempt are the sweep's OWN load and count as idle
-    // evidence — nothing is left unevidenced and each query's reference
-    // is its own best attempt
-    val (c3, i3) = Bench.idleAdjudicatedTotals(results,
-      withBar(Bench.idleBar(1.0, cpus = 32))(raw), refs)
-    assert(c3 == 0.0 && i3 == 2.0 + 9.0 + 5.0)
-    // loaded-start sweep whose deferred pass re-based (r17 item 5): the
-    // first-pass attempt judged at the strict bar stays contended, the
-    // deferred retry judged at the rebased bar earns idle evidence
-    val mixed = Map("q_rebased" -> Vector((8.0, 5.0, 2.0), (3.0, 4.5, 9.0)))
-    val (c4, i4) = Bench.idleAdjudicatedTotals(
-      Seq("q_rebased" -> 3.0), mixed, Map.empty)
-    assert(c4 == 0.0 && i4 == 3.0)
-  }
-
-  test("Bench detail routing: subset runs and contended sweeps never clobber the medians") {
-    // the r17 incident, both directions (verdict item 1): a 3-query debug
-    // run replaced 269 medians with 3, and the driver's fully-contended
-    // sweep sat in the working tree as the next medians file. Routing
-    // rule: filtered ⇒ side file, always; full sweep over an
-    // idle-evidenced same-sf file with no idle evidence of its own ⇒
-    // refusal side file; everything else ⇒ the medians file.
-    val idleEvidenced =
-      """{"sf":"/sf","total":400.0,"contended_total":18.0,"idle_reference_total":401.0}"""
-    val contendedOld =
-      """{"sf":"/sf","total":400.0,"contended_total":400.0}"""
-    // filtered run: side file even when no refusal would fire
-    assert(Bench.detailPathFor(filtered = true, idleEvidenced, "/sf", 0.0, 10.0)._1
-      == "BENCH_DETAIL_subset.json")
-    // full contended sweep over idle-evidenced medians: refuse
-    val (p1, r1) = Bench.detailPathFor(filtered = false, idleEvidenced, "/sf", 469.0, 469.0)
-    assert(p1 == "BENCH_DETAIL_contended.json" && r1.nonEmpty)
-    // an all-errors sweep (total 0) must not clobber either
-    assert(Bench.detailPathFor(filtered = false, idleEvidenced, "/sf", 0.0, 0.0)._1
-      == "BENCH_DETAIL_contended.json")
-    // idle full sweep: overwrites (fresh evidence is the point)
-    assert(Bench.detailPathFor(filtered = false, idleEvidenced, "/sf", 12.0, 420.0)._1
-      == "BENCH_DETAIL.json")
-    // mixed new sweep (partial idle evidence, under the 80% bar): overwrites
-    assert(Bench.detailPathFor(filtered = false, idleEvidenced, "/sf", 200.0, 420.0)._1
-      == "BENCH_DETAIL.json")
-    // existing file itself contended: nothing worth protecting
-    assert(Bench.detailPathFor(filtered = false, contendedOld, "/sf", 469.0, 469.0)._1
-      == "BENCH_DETAIL.json")
-    // different sf, missing, or unparseable existing file: never blocks
-    assert(Bench.detailPathFor(filtered = false, idleEvidenced, "/other", 469.0, 469.0)._1
-      == "BENCH_DETAIL.json")
-    assert(Bench.detailPathFor(filtered = false, "", "/sf", 469.0, 469.0)._1
-      == "BENCH_DETAIL.json")
-    assert(Bench.detailPathFor(filtered = false, "not json{", "/sf", 469.0, 469.0)._1
-      == "BENCH_DETAIL.json")
-  }
-
-  test("Bench detail routing: a sweep at a different core count never clobbers the medians (r19)") {
-    // the r18 incident: the driver's 8-core sweep replaced the 32-core
-    // medians — it was IDLE-evidenced, so the r17 guard (which only
-    // checks idleness) let it through. Core-count mismatch routes to a
-    // per-cpus side file regardless of idle evidence.
-    val c32 = """{"sf":"/sf","cpus":32,"total":400.0,"contended_total":18.0}"""
-    val (p, r) = Bench.detailPathFor(filtered = false, c32, "/sf", 12.0, 420.0, cpus = 8)
-    assert(p == "BENCH_DETAIL_c8.json" && r.nonEmpty, (p, r))
-    // matching core count: the normal rules apply (idle sweep overwrites)
-    assert(Bench.detailPathFor(filtered = false, c32, "/sf", 12.0, 420.0, cpus = 32)._1
-      == "BENCH_DETAIL.json")
-    // legacy file without the field never blocks (same stance as sf)
-    val legacy = """{"sf":"/sf","total":400.0,"contended_total":18.0}"""
-    assert(Bench.detailPathFor(filtered = false, legacy, "/sf", 12.0, 420.0, cpus = 8)._1
-      == "BENCH_DETAIL.json")
-    // and the READ side: a different-cpus detail file feeds no references
-    val f = java.nio.file.Files.createTempFile("bench_detail_cpus", ".json")
-    java.nio.file.Files.write(f,
-      """{"sf":"/sf","cpus":8,"attempts":{"q_a":[[2.0,0.4,false]]}}""".getBytes("UTF-8"))
-    assert(Bench.refSecFromDetail(f.toString, sfDir = "/sf", cpus = 32).isEmpty)
-    assert(Bench.refSecFromDetail(f.toString, sfDir = "/sf", cpus = 8).nonEmpty)
-    assert(Bench.refSecFromDetail(f.toString, sfDir = "/sf").nonEmpty) // cpus unknown: accept
-    java.nio.file.Files.delete(f)
-  }
-
-  test("Bench idleBar: self-load envelope on a quiet start, strict 2.0 on a loaded one") {
-    // quiet start: bar = loadStart + 0.25×cpus (8.0 self-load envelope on
-    // 32 CPUs — just above the 7.2 peak r16's committed idle sweep drove
-    // from nothing but itself)
-    assert(Bench.idleBar(1.0, cpus = 32) == 9.0)
-    // small box: the envelope collapses toward the 2.0 floor
-    assert(Bench.idleBar(0.0, cpus = 4) == 2.0)
-    // externally loaded start: loadavg can't separate a decaying external
-    // load from our own — the STRICT 2.0 bar applies (an attempt observed
-    // at ≤2.0 still counts as idle; self-load usually masks that window,
-    // so the medians channel and the deferred-pass rebase carry the sweep)
-    assert(Bench.idleBar(6.2, cpus = 32) == 2.0)
-    // unreadable /proc/loadavg (-1) degrades to the strict bar too
-    assert(Bench.idleBar(-1.0, cpus = 32) == 2.0)
-  }
-
   Registry.all.filterNot(q => skipHere(q.name)).foreach { q =>
     test(s"${q.name} runs at sf0.001") {
       val n = rows(q.name)

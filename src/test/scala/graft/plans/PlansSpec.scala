@@ -148,6 +148,15 @@ class PlansSpec extends SparkSpec {
     assert(copyHits.head.origin.contains("[collapsed=1]"))
   }
 
+  test("SinglePartitionAudit jsonStr escapes control characters so AUDIT.json parses") {
+    // an AnalysisException message spans lines; one failing query must not
+    // make the whole artifact unreadable by a strict JSON reader
+    val raw = "line1\n'Project\r\tcol \"q\" back\\slash \u0001end"
+    val parsed = org.json4s.jackson.JsonMethods.parse(
+      s"""{"m":${graft.SinglePartitionAudit.jsonStr(raw)}}""")
+    assert((parsed \ "m") == org.json4s.JString(raw))
+  }
+
   test("GeometricRoundExpr matches the Column-composed version and works in SQL") {
     import spark.implicits._
     val xs = Seq(0.5, 2.44, 2.45, 7.0, 123.456, 0.0).toDF("x")
