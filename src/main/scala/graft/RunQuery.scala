@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.FormattedMode
+
 /** Debug utility: run one registry query by name against a fixture dir.
+  * The query runs once (`collect()`); its first 20 rows and row count are
+  * printed from that one result. With `--explain`, the formatted plan is
+  * printed AFTER the run, so under AQE it is the final adaptive plan
+  * (`isFinalPlan=true`) — the join strategies, sorts and exchanges the
+  * query actually executed with.
   * Usage: runMain graft.RunQuery <name> [sfDir] [--explain]
   */
 object RunQuery {
@@ -11,10 +18,12 @@ object RunQuery {
     val spark = Session.getOrCreate()
     val t0 = System.nanoTime()
     val df = SparkEntry.queries(name)(spark, sfDir)
-    if (explain) df.explain("formatted")
-    df.show(20, truncate = false)
-    val n = df.count()
-    println(f"[runquery] $name rows=$n elapsed=${(System.nanoTime() - t0) / 1e9}%.2fs")
+    val rows = df.collect()
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    println(df.columns.mkString("\t"))
+    rows.take(20).foreach(r => println(r.toSeq.mkString("\t")))
+    if (explain) println(df.queryExecution.explainString(FormattedMode))
+    println(f"[runquery] $name rows=${rows.length} elapsed=$elapsed%.2fs")
     spark.stop()
   }
 }

@@ -8,16 +8,15 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Full-registry scale certification (the r12 verdict's item 1): drive
-  * EVERY registry query at 1× and K× data and emit a per-query
-  * `{t1, tk, ratio}` artifact. ScaleSmoke times 50 hand-picked operator
-  * SHAPES; this main times the ~250 registered queries THEMSELVES, so a
-  * super-linear constant hiding in a query the smoke's shapes don't cover
-  * shows up as its own row — the local proxy for "would this exact query
-  * survive a 100 TB cluster", per query, with no sampling.
+/** Full-registry scale certification: drive EVERY registry query at 1×
+  * and K× data and emit a per-query `{t1, tk, ratio}` artifact. The
+  * registered queries are timed THEMSELVES, verbatim, so a super-linear
+  * constant in any query shows up as its own row — the local proxy for
+  * "would this exact query survive a 100 TB cluster", per query, with no
+  * sampling.
   *
   * Run: `runMain graft.ScaleCert [sfDir] [k] [outJson] [onlySubstrings]`
-  * (defaults /root/testdata/sf0.1, 10, SCALE_r13.json).
+  * (defaults /root/testdata/sf0.1, 10, SCALE.json).
   *
   * ## The K× corpus is materialized, not wrapped
   *
@@ -46,8 +45,10 @@ import org.apache.spark.sql.functions._
   *   a 45-pair near-dup clique per original doc, and pair-emitting dedup
   *   queries would measure that artifact (quadratic in K by
   *   construction), not the engine. Disjoint vocab is also the honest
-  *   growth shape: real corpora add rare tokens as they grow
-  *   (ScaleSmoke's setsim note). n_chars is recomputed to match.
+  *   growth shape: real corpora add rare tokens as they grow, while a
+  *   closed vocabulary inflates every token's document frequency K× and
+  *   degrades prefix-filtered joins (q87) toward quadratic. n_chars is
+  *   recomputed to match.
   * - `embeddings.embedding` is circularly ROTATED by r positions — an
   *   orthogonal transform, so every intra-replica cosine/L2 is preserved
   *   EXACTLY while cross-replica similarity drops to chance; verbatim
@@ -239,7 +240,7 @@ object ScaleCert {
     java.util.Locale.setDefault(java.util.Locale.ROOT) // decimal POINTS in every artifact (review finding, r15)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
-    val outPath = args.lift(2).getOrElse("SCALE_r13.json")
+    val outPath = args.lift(2).getOrElse("SCALE.json")
     val only = args.lift(3).map(_.split(",").toSeq).getOrElse(Nil)
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_SCALE_TIMEOUT", "900").toLong
     val spark = Session.getOrCreate()

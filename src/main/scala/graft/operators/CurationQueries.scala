@@ -177,19 +177,14 @@ object CurationQueries {
     * bound. The df side aggregates BEFORE the join (lines → distinct-doc
     * counts per 8-byte hash key), so the join's build side is the line
     * vocabulary, not the corpus — orders of magnitude smaller at 100 TB.
-    * Public so ScaleSmoke can drive the same pipeline on replicated
-    * corpora.
     */
-  def flaggedLines(docs: DataFrame): DataFrame = {
-    val lines = linesFrame(docs).withColumn("h", xxhash64(col("line")))
+  private def flaggedLines(s: SparkSession, dir: String): DataFrame = {
+    val lines = linesFrame(Tables.documents(s, dir)).withColumn("h", xxhash64(col("line")))
     val docFreq = lines.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("nd"))
     lines.join(docFreq, "h")
       .withColumn("keep", col("nd") <= MaxDocFreq)
   }
-
-  private def flaggedLines(s: SparkSession, dir: String): DataFrame =
-    flaggedLines(Tables.documents(s, dir))
 
   private val HeadersSqlList = Headers.map(h => s"'$h'").mkString("[", ", ", "]")
   private val FootersSqlList = Footers.map(f => s"'$f'").mkString("[", ", ", "]")

@@ -100,7 +100,7 @@ object DedupQueries {
     *
     * CACHE CONTRACT: the cache lives until the caller clears it — the
     * result is lazy, so this function cannot know when the last consumer
-    * has materialized. perfbench/TimeQuery/ScaleSmoke clear the cache per
+    * has materialized. perfbench/TimeQuery/ScaleCert clear the cache per
     * query; Verify intentionally does NOT (it runs queries 4-way
     * concurrently, where a global clearCache would clobber other queries'
     * eagerly-materialized caches — at the sf0.01 gate the accumulated
@@ -830,8 +830,8 @@ object DedupQueries {
     * intersection sizes fall out of a codegen hash join + hash agg
     * instead of an interpreted per-pair array_intersect (2.3× faster
     * here, and the shape that scales: cost is Σ df² over shingles). The
-    * truth join applies the SAME df cap (64, per lang-scoped shingle)
-    * that ScaleSmoke's lsh_recall_truth row certifies at 10× data —
+    * truth join applies a df cap (64, per lang-scoped shingle), which
+    * ScaleCert's q211_lsh_recall row times at 10× data —
     * ultra-common shingles stop generating df² candidate rows, and the
     * oracle replays the identical windowed-count cap so the audit stays
     * hash-checked. The cap biases j slightly downward for pairs whose
@@ -878,7 +878,7 @@ object DedupQueries {
       // collision odds ~1e-9 per corpus and the oracle gate would
       // surface one). The frame feeds both join sides and the size agg —
       // cached + eagerly materialized (capBuckets' cache contract).
-      // df cap (ScaleSmoke.lshRecallTruth's certified shape): a windowed
+      // df cap (timed at 10× data by ScaleCert's q211 row): a windowed
       // per-(lang, shingle) doc count drops ultra-common shingles BEFORE
       // the self-join, bounding the join at Σ min(df, 64)² instead of
       // Σ df² — the difference between linear-ish and quadratic blowup

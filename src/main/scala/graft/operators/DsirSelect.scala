@@ -135,7 +135,7 @@ object DsirSelect {
         6).as("lam"))
       // materialize the 64-row model and cut its lineage so the two
       // bucket-count caches can be RELEASED here — a long-lived session
-      // (registry sweeps, ScaleSmoke) must not accumulate cached model
+      // (registry sweeps, ScaleCert) must not accumulate cached model
       // frames per invocation (the q227/KmvSketch cache-hygiene rule)
       .localCheckpoint(true)
     tb.unpersist()

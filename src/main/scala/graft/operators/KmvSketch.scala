@@ -92,7 +92,7 @@ object KmvSketch {
     * through several join branches — recomputing would re-scan the corpus
     * per branch. The blocks stay pinned for the lifetime of the returned
     * (lazy) frame; a long-lived session that runs this repeatedly must
-    * clear them between runs (perfbench, TimeQuery and ScaleSmoke call
+    * clear them between runs (perfbench, TimeQuery and ScaleCert call
     * `sharedState.cacheManager.clearCache()` between queries, which is
     * why their registry sweeps don't accumulate; Verify does not — see
     * DedupQueries.capBuckets).

@@ -42,7 +42,7 @@ import graft.registry.GQuery
   *
   * Scale shape (r14): the nation block alone is a CLOSED-VOCABULARY
   * block — 25 values forever — so its pair space grows quadratically
-  * with data (SCALE_r13 measured 46×/21× at 10× for q241/q244). Neither
+  * with data (ScaleCert measured 46×/21× at 10× for q241/q244). Neither
   * production path materializes it any more: q241's report blocks on
   * passes DERIVED from the fitted weights ([[minimalQualifyingPatterns]]
   * — only agreement patterns that can reach the report's 0-bit floor
@@ -181,7 +181,7 @@ object RecordLinkage {
     * On the fixtures this derives {name} and {seg, band}: the name pass
     * is 1:~1 (names are near-unique) and the (seg, band) pass divides
     * the nation block by the seg×band vocabulary — the closed-vocabulary
-    * candidate quadratic that SCALE_r13 measured at 46× shrinks by the
+    * candidate quadratic that ScaleCert measured at 46× shrinks by the
     * product of the banded vocabularies while returning the identical
     * report.
     */

@@ -30,10 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object SetSimJoin {
 
-  /** All pairs of `df` rows whose `setCol` (an array of DISTINCT elements)
-    * has Jaccard similarity ≥ t. Returns (id_a, id_b, jaccard) with
-    * id_a < id_b, jaccard unrounded.
-    */
   /** ⌈x⌉ with a one-sided epsilon guard: IEEE rounding can land t·n a
     * hair ABOVE an exact integer (0.07·100 = 7.000000000000001), and a
     * plain ceil would then over-tighten the completeness-critical filters
@@ -42,28 +38,11 @@ object SetSimJoin {
     */
   private def ceilSafe(x: org.apache.spark.sql.Column) = ceil(x - lit(1e-9))
 
-  /** @param dfCap document-frequency guard for CLOSED-VOCABULARY corpora.
-    * Prefix filtering is sub-quadratic because prefix tokens are rare;
-    * when corpus growth does not grow the vocabulary, every token's df
-    * scales with the corpus and the candidate join degrades toward the
-    * O(n²) cross product it exists to avoid (measured: 41× wall at 10×
-    * data on the replica stress). With a finite cap, prefix tokens with
-    * df > dfCap are HOT and stop generating candidate pairs directly;
-    * every set holding at least one hot prefix token is instead routed
-    * through a MinHash fallback band with a signature-agreement
-    * pre-filter (see [[fallbackBandPairs]]), whose bucket join generates
-    * candidates in work proportional to true collisions, not df². All
-    * candidates — rare-path and fallback — still pass the exact
-    * verification, so false positives are impossible; the one relaxation
-    * is fallback RECALL: a qualifying pair whose shared prefix tokens are
-    * all hot is found with probability ≥ 99.8% at j = t (band miss +
-    * 3σ-filter miss, fallbackBandPairs doc) and ≈ 1 above it. Pairs
-    * sharing any rare prefix token remain EXACT. The default
-    * (Int.MaxValue) disables the guard — the join is then exact
-    * unconditionally, which is what the q87 oracle checks.
+  /** All pairs of `df` rows whose `setCol` (an array of DISTINCT elements)
+    * has Jaccard similarity ≥ t. Returns (id_a, id_b, jaccard) with
+    * id_a < id_b, jaccard unrounded.
     */
-  def jaccardJoin(df: DataFrame, idCol: String, setCol: String, t: Double,
-                  dfCap: Int = Int.MaxValue): DataFrame = {
+  def jaccardJoin(df: DataFrame, idCol: String, setCol: String, t: Double): DataFrame = {
     require(t > 0.0 && t <= 1.0, s"threshold must be in (0,1], got $t")
     // n = |set| comes from size() BEFORE the explode — the elements are
     // distinct by contract, so no count-over-window pass is needed (that
@@ -77,18 +56,17 @@ object SetSimJoin {
     val prefix = toks.join(dfreq, "tok")
       .withColumn("rn", row_number().over(wRank))
       .filter(col("rn") <= col("n") - ceilSafe(lit(t) * col("n")) + lit(1))
-      .select(col("sid"), col("tok"), col("rn"), col("n"), col("df"))
+      .select(col("sid"), col("tok"), col("rn"), col("n"))
       .cache()
     // eager: both sides of the candidate self-join read this frame in one
     // job — same racing-consumers rule as DedupQueries.capBuckets (same
     // cache-ownership contract too)
     prefix.count()
-    val rare = prefix.filter(col("df") <= dfCap)
-    val a = rare.select(col("tok"),
+    val a = prefix.select(col("tok"),
       col("sid").as("id_a"), col("rn").as("ra"), col("n").as("na"))
-    val b = rare.select(col("tok"),
+    val b = prefix.select(col("tok"),
       col("sid").as("id_b"), col("rn").as("rb"), col("n").as("nb"))
-    val candRare = a.join(b, Seq("tok"))
+    val cand = a.join(b, Seq("tok"))
       .filter(col("id_a") < col("id_b"))
       // length filter: J ≥ t forces t·|A| ≤ |B| ≤ |A|/t
       .filter(col("nb") >= ceilSafe(lit(t) * col("na")) &&
@@ -100,10 +78,7 @@ object SetSimJoin {
       .filter(lit(1) + least(col("na") - col("ra"), col("nb") - col("rb")) >=
         ceilSafe(lit(t / (1 + t)) * (col("na") + col("nb"))))
       .select("id_a", "id_b")
-    val cand =
-      (if (dfCap == Int.MaxValue) candRare
-       else candRare.unionByName(fallbackBandPairs(toks, prefix, dfCap, t)))
-        .distinct()
+      .distinct()
     val va = df.select(col(idCol).as("id_a"), col(setCol).as("set_a"))
     val vb = df.select(col(idCol).as("id_b"), col(setCol).as("set_b"))
     cand.join(va, "id_a").join(vb, "id_b")
@@ -112,53 +87,5 @@ object SetSimJoin {
         col("inter") / (size(col("set_a")) + size(col("set_b")) - col("inter")))
       .filter(col("jaccard") >= t)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  /** Fallback candidates for the df guard: every set with ≥1 HOT prefix
-    * token gets a 32-slot MinHash signature over its FULL element set
-    * (xxhash64 + Kirsch-Mitzenmacher, the DedupQueries scheme); candidate
-    * generation bands the first 16 slots 8×2, and a signature-agreement
-    * pre-filter over all 32 slots runs INSIDE the band join — before the
-    * distinct and before any full set is shuffled — keeping pairs with
-    * estimated Jaccard ≥ t − 3σ, σ = √(t(1−t)/32). Work scales with band
-    * collisions, and the expensive exact verification sees ~output-sized
-    * input (measured on the 10× replica stress: 23M raw band collisions →
-    * 250.6k pre-filtered candidates vs 249.2k true result pairs).
-    *
-    * Recall of the fallback (misses are possible ONLY for pairs whose
-    * shared prefix tokens are all hot; everything else is exact via the
-    * rare path): at true Jaccard j = t = 0.8 the band stage misses with
-    * (1−j²)⁸ ≈ 2.8e-4 and the 3σ pre-filter with Φ(−3) ≈ 1.7e-3 — both
-    * shrink rapidly above the threshold (j = 0.9 → ~1e-7).
-    */
-  private def fallbackBandPairs(toks: DataFrame, prefix: DataFrame, dfCap: Int, t: Double): DataFrame = {
-    val nH = 32; val bands = 8; val rows = 2
-    val estCut = math.floor((t - 3.0 * math.sqrt(t * (1 - t) / nH)) * nH)
-    def rotl(c: org.apache.spark.sql.Column, i: Int): org.apache.spark.sql.Column =
-      if (i == 0) c else shiftleft(c, i).bitwiseOR(shiftrightunsigned(c, 64 - i))
-    val dense = prefix.filter(col("df") > dfCap).select("sid").distinct()
-    val h = toks.join(dense, "sid")
-      .withColumn("h1", xxhash64(col("tok")))
-      .withColumn("h2", xxhash64(col("tok"), lit(1)))
-    val aggs = (0 until nH).map(i =>
-      min(col("h1").bitwiseXOR(rotl(col("h2"), i))).as(s"h$i"))
-    val sig = h.groupBy("sid").agg(aggs.head, aggs.tail: _*)
-      .select(col("sid"), array((0 until nH).map(i => col(s"h$i")): _*).as("sig"))
-    val banded = sig.select(col("sid"), col("sig"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            xxhash64(slice(col("sig"), b * rows + 1, rows).cast("string")).as("bh"))
-        }: _*)).as("bb"))
-      .select(col("sid"), col("sig"), col("bb.band"), col("bb.bh"))
-      .cache()
-    banded.count() // eager for the self-join (racing-consumers rule)
-    banded.select(col("band"), col("bh"), col("sid").as("id_a"), col("sig").as("sig_a"))
-      .join(banded.select(col("band"), col("bh"), col("sid").as("id_b"), col("sig").as("sig_b")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      // est-Jaccard pre-filter, evaluated per matched row during the join
-      // (codegen graft_eq_count) — never materialized into the shuffle
-      .filter(call_function("graft_eq_count", col("sig_a"), col("sig_b")) >= lit(estCut))
-      .select("id_a", "id_b")
   }
 }

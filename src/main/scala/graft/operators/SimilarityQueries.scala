@@ -451,8 +451,8 @@ object SimilarityQueries {
     * (the near-dup relation is tiny next to the corpus — q83's CC makes
     * the same call); at scale the distributed loop is one equi join
     * (rank onto cached edges+degrees) + one hash agg per round, the
-    * classic Pregel-as-SQL shape. ScaleSmoke pins the distributed path's
-    * per-round cost; OpsSpec pins path equality.
+    * classic Pregel-as-SQL shape. ScaleCert times q122 itself at K×
+    * data; OpsSpec pins path equality.
     */
   val q122 = GQuery(
     "q122_pagerank_centrality",
