@@ -61,6 +61,24 @@ object Session {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
 
+  /** Run `body` with `confs` set on the session, then put each key back:
+    * its previous value, or `unset` if the session had not set it. The
+    * previous values come from `getAll`, which holds only the keys the
+    * session has set; `getOption` would report a registered default and
+    * turn the restore into a set. The session conf is shared by every
+    * thread on the session, so a caller that runs bodies concurrently
+    * serializes them itself (StreamHarness.withStreamConf does).
+    */
+  def withConf[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val set = spark.conf.getAll
+    val saved = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def getOrCreate(): SparkSession = {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

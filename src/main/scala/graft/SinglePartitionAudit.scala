@@ -344,8 +344,8 @@ object SinglePartitionAudit {
     * unmeasured exchange (planned but never executed at this SF — e.g.
     * behind an AQE-pruned branch) could be a funnel that only
     * materializes at larger scale, so since r18 it FAILS the run (exit 3)
-    * unless listed here with a reviewed rationale (r17 ADVICE: a log line
-    * a driver may not read is not a gate). Empty today — the r17 full
+    * unless listed here with a reviewed rationale (a log line that no
+    * check reads is not a gate). Empty today — the r17 full
     * sf0.1 run measured every planned single-partition exchange.
     */
   private[graft] val UnmeasuredAllowlist: Set[String] = Set.empty
@@ -435,8 +435,8 @@ object SinglePartitionAudit {
     spark.stop()
     // exit contract: 2 = funnel or crash (a wrong plan or a broken
     // query), 3 = unexplained unmeasured exchange (a POSSIBLE funnel the
-    // run couldn't observe — r17 ADVICE upgraded this from a log line to
-    // a gate; allowlisted rows don't trip it)
+    // run couldn't observe — a gate, not a log line; allowlisted rows
+    // don't trip it)
     if (funnels > 0 || errors > 0) sys.exit(2)
     if (unmeasured > 0) sys.exit(3)
   }

@@ -95,7 +95,7 @@ object CountMinSketch {
       // actions (the audit head() and the returned frame) — unshared,
       // each one re-pays the full tokenization scan (measured 1.2-1.6s
       // each at sf0.1 on the q247 path); the frame itself is |keys| rows.
-      // localCheckpoint, NOT cache (r18 ADVICE): a cached frame leaks in
+      // localCheckpoint, NOT cache: a cached frame leaks in
       // the CacheManager for the session's lifetime, while checkpoint
       // blocks are reclaimed once the frame is unreferenced — the
       // DsirSelect cache-hygiene convention.
@@ -140,7 +140,7 @@ object CountMinSketch {
   def report(docs: DataFrame): DataFrame = {
     // localCheckpoint, not cache — same hygiene note as heavyHitters
     // above: kc feeds two subtrees (exact keys + the matrix rollup) and
-    // must not outlive the query in the CacheManager (r18 ADVICE)
+    // must not outlive the query in the CacheManager
     val kc = langKeyCounts(docs).localCheckpoint(true)
     heavyHittersFromKeys(
       kc.groupBy(col("f").as("key")).agg(sum("cf").as("exact")),

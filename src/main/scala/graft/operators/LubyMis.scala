@@ -80,7 +80,7 @@ object LubyMis {
     // both paths; the oracle unrolls the same rounds). Above it, the
     // distributed loop below is unchanged.
     val smallGraphThreshold = 1L << 20
-    // BOTH |E| and |V| must clear the bar (r18 ADVICE): the realistic
+    // BOTH |E| and |V| must clear the bar: the realistic
     // near-dup shape is a sparse relation over a corpus-scale node set —
     // few edges, millions of isolated nodes — and the fast path collects
     // the FULL node frame, so an edges-only gate would OOM the driver on

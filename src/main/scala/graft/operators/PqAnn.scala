@@ -87,8 +87,8 @@ object PqAnn {
     // materialize the code table (vec_id + m ints — the 32×-compressed
     // form), then release the subvector cache: encoded is what every
     // downstream search scans, and leaving subs pinned would leak cache
-    // in a long-lived session (the bootstrapCi lesson from the r9
-    // ADVICE)
+    // in a long-lived session (the same leak TableMaintenance.bootstrapCi
+    // had)
     val encoded = models.foldLeft(subs: DataFrame)((acc, mdl) => mdl.transform(acc))
       .select(col("vec_id"), array((0 until m).map(i => col(s"c$i")): _*).as("codes"))
       .cache()

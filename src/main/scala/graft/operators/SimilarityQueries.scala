@@ -1250,7 +1250,7 @@ object SimilarityQueries {
       val probeLabels = e.select(col("vec_id").as("probe_id"), col("label").as("q_label"))
       val docLabels = e.select(col("vec_id").as("doc_id"), col("label").as("d_label"))
       val labelCounts = e.groupBy(col("label")).agg(count(lit(1)).as("n_label"))
-      // LEFT join the doc labels (r13 ADVICE): the BM25 arm ranks
+      // LEFT join the doc labels: the BM25 arm ranks
       // doc_ids from `documents`, which can have no embeddings row — an
       // inner join would silently drop those from rel/DCG while
       // precision@10 keeps its fixed denominator. A ranked doc with no

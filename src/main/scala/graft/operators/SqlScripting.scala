@@ -29,10 +29,6 @@ import graft.registry.GQuery
   * At 100 TB this is exactly how the job should run; the alternative
   * (collecting the column to recompute thresholds driver-side) is the
   * anti-pattern this surface exists to avoid.
-  *
-  * `spark.sql.scripting.enabled` is flipped on in the lambda and left
-  * on: it gates only the PARSER's acceptance of BEGIN…END, changing no
-  * non-script behavior.
   */
 object SqlScripting {
 
@@ -44,7 +40,6 @@ object SqlScripting {
     (s, dir) => {
       Tables.lineitem(s, dir).select(col("l_extendedprice"))
         .createOrReplaceTempView("lineitem_q259")
-      s.conf.set("spark.sql.scripting.enabled", "true")
       s.sql(s"""
         BEGIN
           DECLARE mu DOUBLE;

@@ -404,7 +404,7 @@ object TableMaintenance {
     // the replicate statistics are bounded model state (reps rows):
     // materialize the three scalars eagerly, then DROP the cache — the
     // previous lazy form leaked the `means` cache entry on every call in
-    // a long-lived session (r9 ADVICE)
+    // a long-lived session
     val seBoot = means.crossJoin(broadcast(mbar))
       .select(Metrics.canonRound(
         (col("mean_r") - col("mean_boot")) * (col("mean_r") - col("mean_boot")), 4).as("dev2"))
@@ -508,7 +508,7 @@ object TableMaintenance {
       (col("m") - 1).cast("double")
     val hw = Metrics.canonRound(
       lit(1.96) * sqrt(varC) / (lit(100.0) * sqrt(col("m").cast("double"))), 4)
-    // degenerate-sample guard (r9 ADVICE): the CLT half-width needs
+    // degenerate-sample guard: the CLT half-width needs
     // m >= 2 (the (m-1) divisor) and the estimate m >= 1. Rather than
     // emitting nulls that read as "passed", a too-small sample gets an
     // explicit null hw/rel_hw with met_target = covered = 0 — the

@@ -77,7 +77,7 @@ object TriangleCount {
     * the oriented edge set.
     */
   def triangles(edges: DataFrame): DataFrame = {
-    // guard the broadcast decision HERE too (r18 ADVICE): this public
+    // guard the broadcast decision HERE too: this public
     // entry used to default broadcastClosure=true unguarded, so a direct
     // caller above the ceiling would broadcast an arbitrarily large edge
     // list. Same real-count-vs-ceiling rule as reportFrom (guide §3.1).
@@ -91,8 +91,8 @@ object TriangleCount {
     * @param broadcastClosure broadcast the closing edge set (see
     * [[BroadcastEdgesMax]]); false = the shuffled-hash fallback for
     * edge lists past the broadcast ceiling. No default: every caller
-    * must decide from a REAL edge count against the ceiling (r18
-    * ADVICE — the old `= true` default made the decision nowhere). */
+    * must decide from a REAL edge count against the ceiling (the old
+    * `= true` default made the decision nowhere). */
   def trianglesFrom(o: DataFrame, broadcastClosure: Boolean): DataFrame = {
     val w1 = o.select(col("src").as("a"), col("dst").as("b"),
       col("ddst").as("db"))

@@ -1,21 +1,24 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Bucketed-table helpers — the physical-design knob PLANS.md calls out:
-  * co-bucketing orders and lineitem on orderkey makes their join
-  * shuffle-free (both sides pre-hashed into the same bucket layout at
-  * write time). At 100 TB this converts the one unavoidable fact⋈fact
-  * shuffle into a local zip of bucket files.
+/** Bucketed-table helpers: co-bucketing orders and lineitem on
+  * orderkey makes their join shuffle-free (both sides pre-hashed into
+  * the same bucket layout at write time). At 100 TB this converts the
+  * one unavoidable fact⋈fact shuffle into a local zip of bucket files.
   */
 object Bucketing {
 
-  /** Write df as a bucketed managed table (bucketBy requires the table
-    * catalog; plain file writes can't carry bucket metadata).
+  /** Write df as an EXTERNAL bucketed table `table` whose files live at
+    * `path` (bucketBy needs a catalog table; plain file writes can't
+    * carry bucket metadata). The caller owns `path`, so nothing lands in
+    * the session's warehouse. Overwriting `table` at a new path drops
+    * only the catalog entry: a frame read from the old table still
+    * reads the old files.
     */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String, nBuckets: Int,
-                    sortCol: Option[String] = None): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite).format("parquet")
+  def writeBucketed(df: DataFrame, table: String, path: String, bucketCol: String,
+                    nBuckets: Int, sortCol: Option[String] = None): Unit = {
+    val w = df.write.mode(SaveMode.Overwrite).format("parquet").option("path", path)
       .bucketBy(nBuckets, bucketCol)
     sortCol.fold(w)(s => w.sortBy(s)).saveAsTable(table)
   }

@@ -187,61 +187,13 @@ object GShardQueries {
       val docs = Tables.documents(s, dir)
       val stage = graft.streaming.TempDirs.create("gshard-q263-").toString
       GShard.write(docs, stage, nShards = 8)
-      // unique table name: the warehouse dir is shared across concurrent
-      // Verify JVMs; stale same-session tables are dropped eagerly
-      s.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_q263_meta_"))
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-      // cross-JVM orphans: the in-memory catalog only sees THIS session's
-      // tables, so each harness JVM would leak its last table's warehouse
-      // directory forever (review finding, r14). Sweep the warehouse by
-      // path for our prefix — but an mtime margin alone is an unvalidated
-      // timing assumption (a concurrent JVM's join can stall past any
-      // margin under sustained contention), so each table dir gets a
-      // sidecar `<dir>.owner` file holding its creator's PID, and the
-      // sweep only deletes when that process is GONE (/proc liveness —
-      // this harness is single-box by construction) or, for pre-sidecar
-      // leftovers, when the dir is over a day old.
-      try {
-        val wh = new java.io.File(
-          new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath)
-        val now = System.currentTimeMillis()
-        def ownerDead(dir: java.io.File): Boolean = {
-          val owner = new java.io.File(dir.getParentFile, dir.getName + ".owner")
-          if (!owner.exists()) // pre-sidecar leftover: fall back to a wide margin
-            return now - dir.lastModified() > 24L * 60 * 60 * 1000
-          val pid = new String(java.nio.file.Files.readAllBytes(owner.toPath), "UTF-8").trim
-          pid.nonEmpty && pid.forall(_.isDigit) &&
-            !java.nio.file.Files.exists(java.nio.file.Paths.get(s"/proc/$pid"))
-        }
-        Option(wh.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.startsWith("graft_q263_meta_")
-            && ownerDead(f))
-          .foreach { dir =>
-            val it = java.nio.file.Files.walk(dir.toPath)
-              .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            try it.forEach(p => { val _ = p.toFile.delete() })
-            finally it.close()
-            val _ = new java.io.File(dir.getParentFile, dir.getName + ".owner").delete()
-          }
-      } catch { case _: Throwable => () } // cleanup must never fail the query
-      val tbl = "graft_q263_meta_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
       Bucketing.writeBucketed(
         docs.select(col("doc_id"), (col("doc_id") % 7).as("fold"),
           (col("n_chars") * 3L).as("tri_chars")),
-        tbl, "doc_id", nBuckets = 8, sortCol = Some("doc_id"))
-      // liveness sidecar for the sweep above: records this JVM's PID so a
-      // concurrent sweeper never deletes a table whose creator still runs
-      try {
-        val wh = new java.io.File(
-          new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath)
-        java.nio.file.Files.write(
-          new java.io.File(wh, tbl + ".owner").toPath,
-          ProcessHandle.current().pid().toString.getBytes("UTF-8"))
-      } catch { case _: Throwable => () }
+        "graft_q263_meta", graft.streaming.TempDirs.create("gshard-q263-meta-").toString,
+        "doc_id", nBuckets = 8, sortCol = Some("doc_id"))
       val gsh = s.table(s"gshard.`$stage`")
-      val meta = s.table(tbl)
+      val meta = s.table("graft_q263_meta")
       gsh.hint("merge").join(meta, "doc_id")
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),

@@ -56,9 +56,9 @@ import org.apache.spark.sql.types.StructType
 object StreamHarness {
 
   /** Run `body` (a streaming query execution) with the session's
-    * streaming confs set for it, and put back afterwards — whether the
-    * body returns or throws — the value each key had, unsetting a key
-    * the session had not set.
+    * streaming confs set for it through `graft.Session.withConf`, which
+    * puts back afterwards — whether the body returns or throws — the
+    * value each key had, unsetting a key the session had not set.
     *
     * spark.sql.shuffle.partitions is set to the STATE partition count,
     * min(8, defaultParallelism): one state store per scheduler slot,
@@ -110,15 +110,7 @@ object StreamHarness {
         (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         else Nil)
-      // getAll holds only the keys the session has set; getOption would
-      // report a registered default and turn the restore into a set
-      val set = spark.conf.getAll
-      val saved = confs.map { case (k, _) => k -> set.get(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      graft.Session.withConf(spark, confs: _*)(body)
     }
 
   private val confLock = new Object
@@ -200,7 +192,7 @@ object StreamHarness {
             p.getFileName.toString
           }.toVector
       finally files.close()
-      // the one-data-file invariant, ASSERTED (r17 ADVICE): the shared
+      // the one-data-file invariant, ASSERTED: the shared
       // mtime stamp above restores cross-slice ordering but would
       // reintroduce the intra-slice same-millisecond tie between a
       // slice's OWN files if the one-task-per-slice write ever silently

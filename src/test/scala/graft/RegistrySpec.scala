@@ -12,7 +12,8 @@ class RegistrySpec extends SparkSpec {
   /** Legitimately empty at sf0.001 (all parts shipped). */
   private val mayBeEmpty = Set("q16_anti_join")
 
-  /** Expensive model-fitting queries get their own suite (SalesMlSpec). */
+  /** Expensive model-fitting queries run in SalesMlSpec's "q63 and q64
+    * run through the query registry". */
   private val skipHere = Set("q63_boosted_hybrid", "q64_stacking")
 
   test("oracle keys are a subset of query keys") {

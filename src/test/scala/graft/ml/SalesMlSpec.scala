@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.functions.Metrics
 
 /** ML pipeline regression test (SURVEY.md §5.2 item 6): the reference's own
@@ -22,6 +22,21 @@ class SalesMlSpec extends SparkSpec {
   private def smapeOf(scored: org.apache.spark.sql.DataFrame): Double =
     scored.select(Metrics.smape(col("num_sold"), col("prediction")).cast("double"))
       .head().getDouble(0)
+
+  test("q63 and q64 run through the query registry") {
+    val q63 = SparkEntry.queries("q63_boosted_hybrid")(spark, sf001).collect()
+    assert(q63.length == 18, "one row per series")
+    q63.foreach { r =>
+      val smape = r.getAs[Double]("smape")
+      assert(r.getAs[Long]("n") > 0 && smape > 0 && smape < 200, r.toString)
+    }
+    val q64 = SparkEntry.queries("q64_stacking")(spark, sf001).collect()
+    assert(q64.length == 1)
+    val r = q64.head
+    assert(r.getAs[Long]("n_base_models") == 3L)
+    Seq("smape", "smape_corrected").foreach(c =>
+      assert(java.lang.Double.isFinite(r.getAs[Double](c)), r.toString))
+  }
 
   test("synthetic sales generator is deterministic and fully populated") {
     assert(sales.count() == (365 + 59) * 18)

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{Session, SparkSpec, Tables}
 
 /** Join-strategy selection assertions behind the JoinStrategyCost demo
   * (PLANS.md "join strategy cost model"): Catalyst picks broadcast for
@@ -27,11 +27,9 @@ class JoinStrategySpec extends SparkSpec {
   }
 
   test("broadcast disabled: planner falls back to SortMergeJoin") {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try assert(plan(joined(None)).contains("SortMergeJoin"))
-    finally spark.conf.set(key, saved)
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      assert(plan(joined(None)).contains("SortMergeJoin"))
+    }
   }
 
   test("strategy hints are honored") {

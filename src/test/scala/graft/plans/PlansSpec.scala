@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{Session, SparkSpec, Tables}
 import graft.functions.{Metrics, ReservoirSample}
 import graft.operators.SkewJoin
 import graft.sources.Bucketing
@@ -363,23 +363,19 @@ class PlansSpec extends SparkSpec {
   test("co-bucketed join is shuffle-free; unbucketed one is not (PLANS.md)") {
     val o = Tables.orders(spark, sf001)
     val l = Tables.lineitem(spark, sf001)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    val dir = graft.streaming.TempDirs.create("co-bucketed-spec-").toString
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plain = l.join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderstatus").count()
       assert(!Bucketing.isShuffleFree(plain))
 
-      Bucketing.writeBucketed(o, "orders_b", "o_orderkey", 8)
-      Bucketing.writeBucketed(l, "lineitem_b", "l_orderkey", 8)
+      Bucketing.writeBucketed(o, "orders_b", s"$dir/orders_b", "o_orderkey", 8)
+      Bucketing.writeBucketed(l, "lineitem_b", s"$dir/lineitem_b", "l_orderkey", 8)
       val joined = spark.table("lineitem_b")
         .join(spark.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
       assert(Bucketing.isShuffleFree(joined),
         joined.queryExecution.executedPlan.toString.linesIterator.take(12).mkString("\n"))
       assert(joined.count() == l.count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
-      spark.sql("DROP TABLE IF EXISTS orders_b")
-      spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }
   }
 
@@ -508,14 +504,11 @@ class PlansSpec extends SparkSpec {
     // sized for clusters; lower them to exercise the mechanism at
     // fixture scale. Broadcast must be off: a broadcastable dim routes
     // to DPP/broadcast-join instead.
-    val confs = Seq(
+    Session.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB") {
       val li = Tables.lineitem(spark, sf001).select("l_partkey", "l_quantity")
       val pt = Tables.part(spark, sf001).filter(col("p_size") <= 2)
         .select(col("p_partkey"), col("p_brand"))
@@ -533,9 +526,6 @@ class PlansSpec extends SparkSpec {
         .groupBy("p_brand").agg(sum("l_quantity"))
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(joined.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == expected)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -547,16 +537,13 @@ class PlansSpec extends SparkSpec {
     // for clusters — lower them so a fixture-scale hot key (90% of one
     // side on a single join key) trips the optimizer. Broadcast off:
     // the skew path only exists for sort-merge/shuffled-hash joins.
-    val confs = Seq(
+    Session.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       def workload() = {
         // 90% of one side lands on key 7; the rest spreads over 96 cold
         // keys. The downstream agg groups on a NON-join key: an agg on
@@ -580,12 +567,10 @@ class PlansSpec extends SparkSpec {
         s"no skew-join split in the adaptive plan:\n${finalPlan.take(3000)}")
       assert(gotRows.map(_._2).sum == 300000L, "join must keep every row exactly once")
       // and splitting must not change the answer: same workload, skew off
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val plain = workload().collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val plain = Session.withConf(spark, "spark.sql.adaptive.skewJoin.enabled" -> "false") {
+        workload().collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      }
       assert(got == plain)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -773,14 +758,11 @@ class PlansSpec extends SparkSpec {
     //    is materialized to parquet first (an agg between shuffle and
     //    join blocks it), and the join must not sit in the result stage
     //    (the downstream agg keys off a DIFFERENT column)
-    val confs = Seq(
+    Session.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "128k",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k") {
       // sf0.1: the byte-based skew detection needs real partition sizes
       // (sf0.001 is ~6k rows — nothing clears a 128k compressed threshold)
       val sf01 = "/root/testdata/sf0.1"
@@ -815,9 +797,6 @@ class PlansSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       assert(saltedRows == aqeRows, "salted and AQE-skew answers must agree")
       assert(aqeRows.nonEmpty)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{Session, SparkSpec, Tables}
 import graft.operators.RangeJoin
 
 /** RangeJoinRewrite — the optimizer rule that turns a naively-spelled
@@ -99,12 +99,11 @@ class RangeJoinRuleSpec extends SparkSpec {
       .join(broadcast(bands), col("c_acctbal") >= col("lo") && col("c_acctbal") < col("hi"))
     assert(!planString(q12ish).contains("__graft_rj_bin"))
     // conf off → naive stays naive
-    spark.conf.set("spark.graft.rangeJoin.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.graft.rangeJoin.enabled" -> "false") {
       val naive = clicks.limit(50).join(purchases.limit(50),
         col("click_ts") >= col("lo") && col("click_ts") <= col("p_ts"))
       assert(!planString(naive).contains("__graft_rj_bin"))
-    } finally spark.conf.set("spark.graft.rangeJoin.enabled", "true")
+    }
     // the helper's own output carries a __bin marker through the join —
     // the guard must not double-bin it
     val helper = RangeJoin.pointInInterval(
@@ -157,17 +156,15 @@ class RangeJoinRuleSpec extends SparkSpec {
       ("u1", "2021-07-04 09:00:00.0", "v2"),
       ("u2", "2023-01-01 00:00:00.0", "v1")))
     // every interval wide: cap=1 bin — still exact, all rows via fallback
-    spark.conf.set("spark.graft.rangeJoin.maxBinsPerInterval", "1")
-    try {
+    Session.withConf(spark, "spark.graft.rangeJoin.maxBinsPerInterval" -> "1") {
       assert(joined.count() === 3)
-    } finally spark.conf.unset("spark.graft.rangeJoin.maxBinsPerInterval")
+    }
     // cap off (≤ 0): single binned branch, no Union — the pre-cap shape
-    spark.conf.set("spark.graft.rangeJoin.maxBinsPerInterval", "0")
-    try {
+    Session.withConf(spark, "spark.graft.rangeJoin.maxBinsPerInterval" -> "0") {
       val narrowOnly = facts.join(dim.filter(col("ver") === "zzz"),
         col("f_ts") >= col("valid_from") && col("f_ts") <= col("valid_to"))
       assert(!planString(narrowOnly).contains("Union"))
-    } finally spark.conf.unset("spark.graft.rangeJoin.maxBinsPerInterval")
+    }
   }
 
   test("STREAMING interval joins take the single binned branch, never the Union") {
@@ -278,16 +275,14 @@ class RangeJoinRuleSpec extends SparkSpec {
         col("vt").cast("timestamp").as("valid_to"), col("ver"))
     val facts = Seq("2023-01-01 00:00:00").toDF("t")
       .select(col("t").cast("timestamp").as("f_ts"))
-    def hints(threshold: String): Seq[org.apache.spark.sql.catalyst.plans.logical.JoinHint] = {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-      try {
+    def hints(threshold: String): Seq[org.apache.spark.sql.catalyst.plans.logical.JoinHint] =
+      Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> threshold) {
         val j = facts.join(dim,
           col("f_ts") >= col("valid_from") && col("f_ts") <= col("valid_to"))
         assert(j.count() === 1) // exactness regardless of the hint
         j.queryExecution.optimizedPlan.collect {
           case jn: org.apache.spark.sql.catalyst.plans.logical.Join => jn.hint }
-      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
+      }
     def hasBroadcast(hs: Seq[org.apache.spark.sql.catalyst.plans.logical.JoinHint]) =
       hs.exists(h => (h.leftHint ++ h.rightHint).exists(
         _.strategy.contains(org.apache.spark.sql.catalyst.plans.logical.BROADCAST)))

@@ -245,15 +245,12 @@ class GShardSpec extends SparkSpec {
     // honored (no exchange above its scan), exactly ONE exchange total,
     // and it sits on the GSH side.
     val docs = Tables.documents(spark, sf001)
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_spec_bkt_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-    val tbl = "graft_spec_bkt_" + java.util.UUID.randomUUID().toString.replace("-", "")
     Bucketing.writeBucketed(
       docs.select(col("doc_id"), (col("n_chars") * 3L).as("tri_chars")),
-      tbl, "doc_id", nBuckets = 8, sortCol = Some("doc_id"))
+      "graft_spec_bkt", graft.streaming.TempDirs.create("gshard-spec-bkt-").toString,
+      "doc_id", nBuckets = 8, sortCol = Some("doc_id"))
     val joined = spark.table(s"gshard.`$stage`").hint("merge")
-      .join(spark.table(tbl), "doc_id")
+      .join(spark.table("graft_spec_bkt"), "doc_id")
     joined.collect()
     // walk the final adaptive plan INCLUDING query-stage bodies: exactly
     // one shuffle, whose subtree is the GSH scan (a v2 BatchScanExec) --
@@ -284,10 +281,5 @@ class GShardSpec extends SparkSpec {
     // correctness
     assert(joined.count() === docs.count())
     assert(joined.filter(col("tri_chars") =!= col("n_chars") * 3).count() === 0)
-    // every assertion above has materialized the join, so the managed
-    // table can be dropped here — without this, each test-suite JVM
-    // leaked its table's warehouse directory (the start-of-test catalog
-    // sweep only sees the CURRENT session's tables)
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 }

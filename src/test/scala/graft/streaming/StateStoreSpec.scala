@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 
 /** State-store substrate pins — the two properties that make stateful
   * streaming credible at 100 TB:
@@ -65,11 +65,9 @@ class StateStoreSpec extends SparkSpec {
   }
 
   test("RocksDB state store produces byte-identical aggregation results") {
-    def runWith(provider: Option[String]): Map[Timestamp, Long] = {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val old = spark.conf.getOption(key)
-      provider.foreach(spark.conf.set(key, _))
-      try {
+    def runWith(provider: Option[String]): Map[Timestamp, Long] =
+      Session.withConf(spark,
+          provider.map("spark.sql.streaming.stateStore.providerClass" -> _).toSeq: _*) {
         val dir = Files.createTempDirectory("graft_ss_rocks_").toString
         feed(dir, "b1.parquet", rows1)
         feed(dir, "b2.parquet", rows2)
@@ -78,13 +76,7 @@ class StateStoreSpec extends SparkSpec {
         spark.table(name).collect()
           .map(r => r.getTimestamp(0) -> r.getLong(1))
           .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max } // Update mode: last wins
-      } finally {
-        provider.foreach(_ => old match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        })
       }
-    }
     val default = runWith(None)
     val rocks = runWith(Some(
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))

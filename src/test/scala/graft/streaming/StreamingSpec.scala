@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{Session, SparkSpec}
 import graft.registry.Registry
 
 class StreamingSpec extends SparkSpec {
@@ -278,7 +278,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stageSlices enforces its one-data-file-per-slice invariant (q227 lesson)") {
-    // r17 ADVICE: the strictly-increasing per-slice mtime stamp restores
+    // The strictly-increasing per-slice mtime stamp restores
     // cross-slice ordering, but a slice that silently emits MORE than one
     // data file (coalesce(1) is the only guard) would reintroduce the
     // intra-slice same-millisecond tie downstream, nondeterministically.
@@ -297,16 +297,11 @@ class StreamingSpec extends SparkSpec {
       finally files.close()
       assert(data.size == 1, s"slice_$i: $data")
     }
-    val prev = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", 10L)
-    try {
+    Session.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> "10") {
       val e = intercept[IllegalArgumentException] {
         StreamHarness.stageSlices(df, col("k"), 0 to 1, "graft_slicepin_bad_")
       }
       assert(e.getMessage.contains("exactly one per slice"), e.getMessage)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-      case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     }
   }
 

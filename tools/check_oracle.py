@@ -100,7 +100,7 @@ def main():
         else:
             n_ok += 1
             print(f"ok   {name} rows={len(spark_df)}")
-    # rows-only entries (no oracle): check rows > 0
+    # rows-only entries (no oracle): an empty or unreadable one fails
     import os
     for name in sorted(os.listdir(out_dir)):
         if name == "oracle_sql.json" or name in oracle:
@@ -109,7 +109,10 @@ def main():
             n = len(pd.read_parquet(f"{out_dir}/{name}"))
             print(f"rows {name} rows={n}" + ("  ** EMPTY **" if n == 0 else ""))
         except Exception as e:
+            n = 0
             print(f"rows {name} unreadable: {e}")
+        if n == 0:
+            n_bad += 1
     print(f"\n{n_ok} ok, {n_bad} fail")
     return 1 if n_bad else 0
 
