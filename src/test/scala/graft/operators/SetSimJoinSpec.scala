@@ -26,19 +26,14 @@ class SetSimJoinSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("matches brute force on random sets across thresholds") {
-    // (seed, vocabulary size, rows, min set size, size spread, thresholds)
-    val cases = Seq(
-      (13, 60, 80L, 3, 12, Seq(0.3, 0.5, 0.8)),
-      (17, 25, 50L, 4, 10, Seq(0.5)))
-    for ((seed, nVocab, nRows, minSize, spread, thresholds) <- cases) {
-      val rnd = new scala.util.Random(seed)
-      val vocab = (0 until nVocab).map(i => s"t$i")
-      val rows = (0L until nRows).map { id =>
-        id -> Seq.fill(minSize + rnd.nextInt(spread))(vocab(rnd.nextInt(nVocab)))
-      }
-      for (t <- thresholds)
-        assert(run(rows, t) == brute(rows, t), s"seed $seed threshold $t")
+    val rnd = new scala.util.Random(13)
+    val vocab = (0 until 60).map(i => s"t$i")
+    val rows = (0L until 80L).map { id =>
+      val n = 3 + rnd.nextInt(12)
+      id -> Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
     }
+    for (t <- Seq(0.3, 0.5, 0.8))
+      assert(run(rows, t) == brute(rows, t), s"threshold $t")
   }
 
   test("identical sets join at jaccard 1.0; disjoint and empty never join") {
@@ -81,6 +76,15 @@ class SetSimJoinSpec extends SparkSpec {
     }
     for (t <- Seq(0.07, 0.1, 1.0 / 3, 0.14, 2.0 / 3, 0.9))
       assert(run(rows, t) == brute(rows, t), s"threshold $t")
+  }
+
+  test("df cap off (default) is byte-identical to the exact path") {
+    val rnd = new scala.util.Random(17)
+    val vocab = (0 until 25).map(i => s"v$i")
+    val rows = (0L until 50L).map { id =>
+      id -> Seq.fill(4 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size)))
+    }
+    assert(run(rows, 0.5) == brute(rows, 0.5))
   }
 
   test("candidate generation is a hash join, not a cross product") {
