@@ -1,119 +1,93 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.registry.GQuery
+import StreamHarness.CrashPoint
 
-/** Checkpoint RESTART/RECOVERY certification (r12 verdict item 3; hard
-  * kills added per r13 item 2, extended to the TWS path per r14 item 2):
-  * every other streaming harness in this library runs one query start to
-  * finish; these two interrupt a CHECKPOINTED query mid-stream — each
-  * with a graceful stop PLUS two injected mid-batch crashes (before and
-  * after the sink's atomic commit) — then create NEW query objects over
-  * the SAME checkpoint dir and finish. What must survive:
+/** Checkpoint RESTART/RECOVERY certification: every other streaming
+  * harness in this library runs one query start to finish; these two
+  * interrupt a CHECKPOINTED query mid-stream and finish it with NEW query
+  * objects over the SAME checkpoint dir. Both run the exactly-once sink
+  * that q203, q236 and the other versioned-merge harnesses run
+  * ([[StreamHarness.versionedMergeSink]]) through one incarnation driver
+  * ([[crashRestart]]) and its fixed schedule:
   *
-  *  - [[upsertRestart]] (q203's foreachBatch + idempotent-MERGE sink):
-  *    the SOURCE file log and batch-id ledger — query 2 must resume at
-  *    batch 1, not redeliver batch 0 — plus the sink's own recovery: the
-  *    merge state version and last-applied batch id are re-read from the
-  *    state table's naming (`v<version>_b<batchId>`), exactly how a
-  *    production MERGE INTO sink recovers from its commit log. Beyond
-  *    the graceful stop, this harness certifies the HARD-KILL cases a
-  *    production sink actually fears (r13 verdict item 2), by injecting
-  *    two real mid-batch failures and recovering through the same
-  *    checkpoint:
-  *      (a) crash BEFORE commit: the sink writes its full output to a
-  *          `tmp_b<id>` staging dir (a partial sink write — data on
-  *          disk, commit never happened) and the query dies. Replay
-  *          must apply the batch exactly once; the janitor discards the
-  *          orphaned staging dir. Commit = atomic directory rename, so
-  *          there is no state in which a half-written table is visible
-  *          under a committed name.
-  *      (b) crash AFTER commit, BEFORE the streaming checkpoint records
-  *          the batch: the classic at-least-once window. The restarted
-  *          query REDELIVERS the same batch id; the
-  *          `id != lastApplied` ledger guard must skip it — no
-  *          duplicate, no loss.
+  *  1. graceful stop after batch 0 (the first slice only);
+  *  2. HARD KILL mid-batch 1: the sink stages the batch's output to
+  *     `tmp_b1` (a real partial sink write — data on disk, commit never
+  *     happened) and the query dies BEFORE the atomic rename-commit.
+  *     Recovery must apply the batch exactly once; the janitor discards
+  *     the orphaned staging dir. Commit = atomic directory rename, so no
+  *     half-written version is ever visible under a committed name;
+  *  3. batch 1 replays and commits, then batch 2 commits and the query
+  *     dies AFTER the commit, before the streaming checkpoint records the
+  *     batch — the classic at-least-once window;
+  *  4. batch 2 is REDELIVERED: the sink's recovered ledger drains it
+  *     without a second write — no duplicate, no loss — and the query
+  *     finishes clean.
+  *
+  * What each must survive:
+  *
+  *  - [[upsertRestart]] (q203's idempotent-MERGE upsert): the SOURCE file
+  *    log and batch-id ledger — incarnation 2 must resume at batch 1, not
+  *    redeliver batch 0 — plus the sink's own recovery of (version,
+  *    lastApplied) from its `v<version>_b<batchId>` names, exactly how a
+  *    production MERGE INTO sink recovers from its commit log.
   *  - [[twsRestart]] (q249's transformWithState sessionization): the
-  *    RocksDB STATE STORE — every user's open-session ValueState from
-  *    batch 1 must be restored into the new query's processor, or
-  *    sessions spanning the restart boundary split and the oracle
-  *    hash-mismatches. Since r15 this path certifies the same two hard
-  *    kills as the upsert sink: a crash AFTER the stateful plan executed
-  *    (RocksDB version committed) but BEFORE the sink commit — recovery
-  *    must re-execute the batch against the state AS OF BATCH START,
-  *    superseding the torn version — and a crash after the sink commit
-  *    but before the checkpoint, whose redelivery the sink's ledger
-  *    guard must absorb: no second WRITE, while the batch plan still
-  *    re-executes (drained via StreamHarness.drainBatch — Spark 4.1's
-  *    commit validation requires every batch's state partitions to
-  *    commit, and re-execution recommits the same deterministic
-  *    version).
+  *    RocksDB STATE STORE — every user's open-session ValueState must be
+  *    restored into the new query's processor, or sessions spanning a
+  *    restart boundary split and the oracle hash-mismatches. Its sink
+  *    keeps each batch's sessions as a version of their own (no merge)
+  *    and the result is their union. The kill in step 2 lands AFTER the
+  *    stateful plan executed and RocksDB committed the post-batch-1
+  *    version: recovery must re-execute the batch against the state AS OF
+  *    BATCH START, superseding the torn version. The redelivery in step 4
+  *    re-executes the drained plan, and the store recommits the same
+  *    deterministic version (Spark 4.1's commit validation requires
+  *    every batch to commit its state partitions).
   *
   * Both reuse their originals' oracles VERBATIM: the upsert state is a
   * set property of the corpus (merge is associative/commutative), and
   * the session fold is slicing-independent as long as batches partition
-  * TIME in order — so the slices here are the (ts, event_id) terciles,
+  * TIME in order — so the TWS slices are the (ts, event_id) terciles,
   * computed by DistributedRank.ntile (one range exchange — never the
   * single-partition window sort) and published in arrival order
-  * (FileStreamSource schedules new files by modification time, and the
-  * append-ordered naming matches — the GShard streaming contract).
+  * (FileStreamSource schedules new files by modification time, which the
+  * staging stamps in slice order).
   *
   * The memory sink can't be used under a real restart (it is not
-  * fault-tolerant); output goes through foreachBatch into per-batch-id
-  * parquet dirs — idempotent on replay, the q215 pattern.
+  * fault-tolerant); output goes through foreachBatch into the versioned
+  * sink, idempotent on replay.
   */
 object RestartStreams {
 
-  /** Evidence the spec pins: the two incarnations really were distinct
-    * queries and both did work.
-    */
-  final case class RestartRun(result: DataFrame, runId1: String, runId2: String,
-                              batches1: Long, batches2: Long)
-
-  /** Evidence for the TWS hard-kill cert (r14 verdict item 2): one
-    * incarnation per element of `runIds`; `crashMsgs` the injected
-    * failures that really propagated; `crashClasses` the full
-    * cause-chain CLASS names of each propagated failure, so the spec can
-    * pin that the error surface is exactly the injected RuntimeException
-    * under Spark's foreachBatch wrapper and nothing else (r16 verdict
-    * item 4); `cleanErrs` any error a NON-crash incarnation produced —
-    * expected empty, and the place a real recovery defect (e.g. a
-    * genuine StateStoreCommitValidationFailed) now surfaces loudly
-    * instead of being swallowed; `committedBatches` the batch ids
-    * present in the sink's commit log (the atomically-renamed dirs) —
-    * exactly once each; `orphanTmps` uncommitted partial-write staging
+  /** Evidence the spec pins for one crash-restart run: one incarnation
+    * per element of `runIds`, `batches` the batches each one ran;
+    * `crashMsgs` the injected failures that really propagated out of the
+    * dying queries; `crashClasses` the full cause-chain CLASS names of
+    * each, so the spec can pin that the error surface is exactly the
+    * injected RuntimeException under Spark's foreachBatch wrapper;
+    * `cleanErrs` any error a NON-crash incarnation produced — expected
+    * empty, and where a real recovery defect (e.g. a
+    * StateStoreCommitValidationFailed) surfaces loudly; `committed` the
+    * sink's final (version, batchId) ledger — exactly-once means one
+    * entry per batch; `orphanTmps` the uncommitted partial-write staging
     * dirs found (and discarded) during recovery.
-    */
-  final case class TwsCrashRun(result: DataFrame, runIds: Seq[String], batches: Seq[Long],
-                               crashMsgs: Seq[String], crashClasses: Seq[Seq[String]],
-                               cleanErrs: Seq[String], committedBatches: Seq[Long],
-                               orphanTmps: Int)
-
-  /** Evidence for the crash-recovery cert: one incarnation per element of
-    * `runIds`; `crashMsgs` are the injected failures the harness really
-    * saw propagate out of the dying queries; `crashClasses`/`cleanErrs`
-    * as in [[TwsCrashRun]] (exact error surface, r16 verdict item 4);
-    * `committedLedger` is the final (version, batchId) commit log —
-    * exactly-once means exactly one entry per batch; `orphanTmps` counts
-    * uncommitted partial-write staging dirs found (and discarded) during
-    * recovery.
     */
   final case class CrashRun(result: DataFrame, runIds: Seq[String], batches: Seq[Long],
                             crashMsgs: Seq[String], crashClasses: Seq[Seq[String]],
-                            cleanErrs: Seq[String], committedLedger: Seq[(Long, Long)],
+                            cleanErrs: Seq[String], committed: Seq[(Long, Long)],
                             orphanTmps: Int)
 
   /** (recorded message, full cause-chain class names) for a propagated
     * query failure: the message is the injected one when present (the
     * wrapper layers' messages embed huge plan strings), the class chain
-    * is kept whole so the spec can pin the EXACT error surface — Spark's
-    * foreachBatch wrapper over the injected RuntimeException, nothing
-    * else (r16 verdict item 4).
+    * is kept whole so the spec can pin the EXACT error surface.
     */
   private def describeFailure(e: Throwable): (String, Seq[String]) = {
     val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toList
@@ -122,302 +96,120 @@ object RestartStreams {
     (msg, chain.map(_.getClass.getSimpleName))
   }
 
-  private def listBatchDirs(out: java.nio.file.Path): Seq[String] = {
-    if (!Files.exists(out)) Seq.empty
-    else {
-      val it = Files.list(out)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(it.iterator()).asScala
-        .map(_.toString).filter(_.contains("batch_")).toSeq.sorted
-      finally it.close()
+  /** The incarnation driver: the four-incarnation schedule above over one
+    * checkpoint. `staged` is a pending dir of slices (from
+    * StreamHarness.stageSlices); the first of `sliceIds` is published into
+    * the live source dir before incarnation 1 and the rest after it
+    * (atomic directory moves — the arrival pattern of a landing dir).
+    * Each incarnation first discards the sink's uncommitted writes, then
+    * runs `stream` over the live slices into the versioned sink, built
+    * with `merge` and the incarnation's crash point. `result` reads the
+    * final committed versions' paths, oldest first.
+    */
+  private def crashRestart(spark: SparkSession, staged: (Path, StructType),
+      sliceIds: Seq[Int], prefix: String)
+      (stream: DataFrame => DataFrame, merge: (Option[String], DataFrame) => DataFrame)
+      (result: Seq[String] => DataFrame): CrashRun = {
+    val (pending, schema) = staged
+    val stage = TempDirs.create(s"${prefix}stage_")
+    val ckpt = TempDirs.create(s"${prefix}ckpt_")
+    val sinkDir = TempDirs.create(s"${prefix}sink_")
+    def publish(i: Int): Unit =
+      Files.move(pending.resolve(s"slice_$i"), stage.resolve(s"slice_$i"))
+    var orphans = 0
+    def runOnce(crash: Option[CrashPoint]): (String, Long, Option[(String, Seq[String])]) = {
+      // recovery janitor: a crashed incarnation's uncommitted staging dirs
+      // are garbage by definition (their batch replays)
+      val tmps = StreamHarness.uncommitted(sinkDir)
+      orphans += tmps.size
+      tmps.foreach(TempDirs.deleteRecursively)
+      val q = stream(StreamHarness.sliceStream(spark, stage, schema)).writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch(StreamHarness.versionedMergeSink(sinkDir, crash)(merge))
+        .start()
+      val err = try { q.processAllAvailable(); None } catch {
+        case e: Throwable => Some(describeFailure(e))
+      }
+      val n = q.recentProgress.count(_.numInputRows > 0)
+      val rid = q.runId.toString
+      try q.stop() catch { case _: Throwable => () }
+      (rid, n.toLong, err)
     }
+    publish(sliceIds.head)
+    val r1 = runOnce(None) // batch 0, graceful stop
+    sliceIds.tail.foreach(publish)
+    val r2 = runOnce(Some(CrashPoint(1, afterCommit = false))) // dies mid-batch 1, staged only
+    val r3 = runOnce(Some(CrashPoint(2, afterCommit = true))) // replays b1, commits b2, dies
+    val r4 = runOnce(None) // b2 redelivered -> drained, no second write
+    val runs = Seq(r1, r2, r3, r4)
+    val ledger = StreamHarness.ledger(sinkDir)
+    CrashRun(result(ledger.map(StreamHarness.versionPath(sinkDir, _))),
+      runs.map(_._1), runs.map(_._2),
+      Seq(r2, r3).flatMap(_._3.map(_._1)), Seq(r2, r3).flatMap(_._3.map(_._2)),
+      Seq(r1, r4).flatMap(_._3.map(_._1)), ledger, orphans)
   }
 
-  /** q249's transformWithState sessionization driven through FOUR
-    * incarnations over one checkpoint — the upsert harness's crash
-    * schedule applied to the RocksDB state path (r14 verdict item 2;
-    * until r15 this side was graceful-stop-only):
-    *
-    *  1. graceful stop after batch 0 (slice 1 only);
-    *  2. HARD KILL mid-batch 1: the sink stages the batch's session
-    *     output to `tmp_b1` and the query dies BEFORE the atomic
-    *     rename-commit. Critically, the stateful plan has already
-    *     EXECUTED by then (the staging write is the batch's action), so
-    *     RocksDB has committed the post-batch-1 state version while the
-    *     batch itself is uncommitted — the exact torn state a production
-    *     sessionizer fears;
-    *  3. recovery replays batch 1: the state store must load the state
-    *     AS OF BATCH START (the pre-crash version 2 is superseded, not
-    *     corrupting), re-execute, and re-commit; the janitor discards
-    *     the orphaned staging dir. Then batch 2 commits (rename) and the
-    *     query dies AFTER commit, before the streaming checkpoint — the
-    *     at-least-once window;
-    *  4. batch 2 is REDELIVERED; the sink's ledger guard (a committed
-    *     `batch_2` dir exists) suppresses the second WRITE — no duplicate
-    *     sessions — while the batch's stateful plan still EXECUTES (the
-    *     store recommits the same deterministic version): Spark 4.1's
-    *     BatchCommitTracker requires every micro-batch to commit all its
-    *     state partitions, so a skip that never touches the DataFrame
-    *     would fail this incarnation with StateStoreCommitValidationFailed
-    *     (r16 verdict item 4 — that stack used to be swallowed here as a
-    *     silent error). Then the query drains clean, and the spec pins
-    *     `cleanErrs` EMPTY: a real commit-validation failure is loud now.
-    *
-    * Sessions spanning every boundary come out right only if each
-    * incarnation's ValueState is the exactly-once fold state — pinned by
-    * row-for-row equality with the single-run sessionization
+  /** q249's transformWithState sessionization through the crash-restart
+    * schedule. Sessions spanning every boundary come out right only if
+    * each incarnation's ValueState is the exactly-once fold state —
+    * pinned by row-for-row equality with the single-run sessionization
     * (StreamingSpec) and by q252's unchanged q129 oracle.
     */
-  def twsRestart(spark: SparkSession, dir: String): TwsCrashRun =
+  def twsRestart(spark: SparkSession, dir: String): CrashRun =
     StreamHarness.withStreamConf(spark, rocksDb = true) {
       import spark.implicits._
-      import org.apache.spark.sql.streaming.TimeMode
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       import EventStreams.{Event, SessionProcessor}
       // TIME-ordered terciles: batches must partition time in order for
       // the per-user fold to see non-decreasing timestamps across the
       // restart boundary (arbitrary slices would be wrong REGARDLESS of
       // restart — this is the fold's delivery contract, not a test prop).
-      // Routed through DistributedRank.ntile (r15 verdict item 1): the
-      // bare ntile(3).over(Window.orderBy(...)) this used to plan was a
-      // full-data Exchange SinglePartition sort — the exact idiom the
-      // rest of the library eliminated. All three terciles land in a
-      // PENDING dir up front; the incarnation schedule publishes them
-      // into the live source dir one by one (atomic directory rename),
-      // exactly the arrival pattern the original staggered writes drove.
-      val (pending, schema) = StreamHarness.stageTimeOrderedSlices(
+      val staged = StreamHarness.stageTimeOrderedSlices(
         graft.Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value")),
         Seq(col("ts"), col("event_id")), 3, "graft_twsrestart_pending_")
-      val stage = TempDirs.create("graft_twsrestart_stage_")
-      val ckpt = TempDirs.create("graft_twsrestart_ckpt_")
-      val outDir = TempDirs.create("graft_twsrestart_out_")
-      def publishSlice(i: Int): Unit =
-        Files.move(pending.resolve(s"slice_$i"), stage.resolve(s"slice_$i"))
-      publishSlice(1)
-
-      def orphanTmps(): Seq[Path] = {
-        if (!Files.exists(outDir)) Seq.empty
-        else {
-          val it = Files.list(outDir)
-          try scala.jdk.CollectionConverters.IteratorHasAsScala(it.iterator()).asScala
-            .filter(_.getFileName.toString.startsWith("tmp_b")).toSeq
-          finally it.close()
-        }
-      }
-      def deleteRecursively(p: Path): Unit = {
-        val walk = Files.walk(p)
-        try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator()).asScala
-          .toSeq.sortBy(-_.getNameCount).foreach(Files.delete)
-        finally walk.close()
-      }
-      var orphansSeen = 0
-      // crashMode: 0 = none, 1 = throw before the rename-commit (the
-      // staged write is a REAL partial sink write, and the stateful
-      // plan has already executed and committed its RocksDB version),
-      // 2 = throw after the commit, before the streaming checkpoint
-      def runOnce(crashOnBatch: Long, crashMode: Int)
-          : (String, Long, Option[(String, Seq[String])]) = {
-        // recovery janitor: uncommitted staging dirs from a crashed
-        // incarnation are garbage (their batch replays)
-        val orphans = orphanTmps()
-        orphansSeen += orphans.size
-        orphans.foreach(deleteRecursively)
-        // function VAL: the (Dataset, Long) => Unit overload of
-        // foreachBatch resolves unambiguously this way (the
-        // UpsertStreams convention)
-        val sinkBatch: (Dataset[Row], Long) => Unit = { (batch, id) =>
-          // ledger guard = the committed dir itself: a redelivered
-          // already-committed batch gets no second WRITE
-          if (!Files.exists(Paths.get(s"$outDir/batch_$id"))) {
-            val tmp = s"$outDir/tmp_b$id"
-            // the write IS the batch's action: state commits inside it
-            batch.write.mode("overwrite").parquet(tmp)
-            if (id == crashOnBatch && crashMode == 1)
-              throw new RuntimeException(
-                s"injected crash BEFORE commit of batch $id (partial sink write staged)")
-            // commit point: atomic rename — a half-written batch can
-            // never be visible under a committed name
-            Files.move(Paths.get(tmp), Paths.get(s"$outDir/batch_$id"),
-              StandardCopyOption.ATOMIC_MOVE)
-            if (id == crashOnBatch && crashMode == 2)
-              throw new RuntimeException(
-                s"injected crash AFTER commit of batch $id, before its checkpoint")
-          } else {
-            // The redelivered batch's STATEFUL PLAN must still execute
-            // (r16 verdict item 4's root cause): Spark 4.1's
-            // BatchCommitTracker validates that every micro-batch
-            // commits all its state-store partitions, and a skip that
-            // never touches the DataFrame fails the final incarnation
-            // with StateStoreCommitValidationFailed — the exact WARN
-            // stack the r16 audit observed, swallowed as a silent
-            // clean-run error. Re-execution on redelivery is what
-            // transformWithState recovery is BUILT for: the store loads
-            // the state as of batch start and recommits the same
-            // deterministic version. Draining the batch (the shared
-            // StreamHarness.drainBatch — a function that ignored the
-            // iterator would pull nothing, execute nothing) discards
-            // the rows — output stays exactly-once — and the noise is
-            // gone at the ROOT, so a real commit-validation failure now
-            // surfaces in `cleanErrs` instead of hiding in a known WARN.
-            StreamHarness.drainBatch(batch)
-          }
-        }
-        val sessions = StreamHarness.sliceStream(spark, stage, schema).as[Event]
-          .groupByKey(_.user_id)
+      crashRestart(spark, staged, 1 to 3, "graft_twsrestart_")(
+        _.as[Event].groupByKey(_.user_id)
           .transformWithState(new SessionProcessor, TimeMode.None(), OutputMode.Append())
-        val q = sessions.toDF.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch(sinkBatch)
-          .outputMode(OutputMode.Append).start()
-        val err = try { q.processAllAvailable(); None } catch {
-          case e: Throwable => Some(describeFailure(e))
-        }
-        val n = q.recentProgress.count(_.numInputRows > 0)
-        val rid = q.runId.toString
-        try q.stop() catch { case _: Throwable => () }
-        (rid, n.toLong, err)
+          .toDF,
+        (_, batch) => batch) { versions =>
+        spark.read.parquet(versions: _*)
+          .select(col("user_id"),
+            col("session_start").cast("timestamp_ntz").as("session_start"),
+            col("session_end").cast("timestamp_ntz").as("session_end"),
+            col("n_events"))
+          .orderBy("user_id", "session_start")
+          // the result frame must outlive the temp dirs' JVM-exit cleanup
+          // and the provider-conf restore when withStreamConf returns
+          .localCheckpoint(true)
       }
-      val r1 = runOnce(-1, 0) // batch 0 (slice 1), graceful stop
-      publishSlice(2); publishSlice(3)
-      val r2 = runOnce(1, 1) // dies mid-batch 1: state committed, sink staged only
-      val r3 = runOnce(2, 2) // replays b1 (state as of batch start), commits b2, dies pre-checkpoint
-      val r4 = runOnce(-1, 0) // b2 redelivered -> no second write; plan re-executes; drains
-      val committed = listBatchDirs(outDir)
-      val result = spark.read.parquet(committed: _*)
-        .select(col("user_id"),
-          col("session_start").cast("timestamp_ntz").as("session_start"),
-          col("session_end").cast("timestamp_ntz").as("session_end"),
-          col("n_events"))
-        .orderBy("user_id", "session_start")
-        // the result frame must outlive the temp dirs' JVM-exit cleanup
-        // and the provider-conf restore when withStreamConf returns
-        .localCheckpoint(true)
-      TwsCrashRun(result,
-        Seq(r1, r2, r3, r4).map(_._1), Seq(r1, r2, r3, r4).map(_._2),
-        Seq(r2, r3).flatMap(_._3.map(_._1)), Seq(r2, r3).flatMap(_._3.map(_._2)),
-        Seq(r1, r4).flatMap(_._3.map(_._1)),
-        committed.map(p => p.substring(p.lastIndexOf("batch_") + 6).toLong).sorted,
-        orphansSeen)
     }
 
-  /** q203's upsert, driven through FOUR incarnations over one checkpoint:
-    * graceful stop after batch 0; HARD KILL mid-batch 1 (crash before
-    * commit — the staged output is a real partial sink write); HARD KILL
-    * after batch 2's commit but before its checkpoint (forces a
-    * redelivery); a final incarnation that must SKIP the redelivered
-    * batch and drain. The sink recovers (version, lastApplied) from the
-    * state table's `v<version>_b<batchId>` naming — its commit log — and
-    * commits by atomic rename from a `tmp_b<id>` staging dir.
+  /** q203's upsert through the crash-restart schedule: the versioned
+    * sink's merge is q203's own MERGE step, and the result is the last
+    * committed state version.
     */
   def upsertRestart(spark: SparkSession, dir: String): CrashRun =
     StreamHarness.withStreamConf(spark) {
       // pmod slices, NOT time-ordered: the merge is associative and
       // commutative, so this path owes its batches no ordering contract
-      // at all (contrast with twsRestart's tercile staging). All three
-      // slices land in a pending dir; the schedule publishes them.
-      val (pending, schema) = StreamHarness.stageSlices(
+      // at all (contrast with twsRestart's tercile staging)
+      val staged = StreamHarness.stageSlices(
         graft.Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("user_id"), col("value")),
         pmod(col("event_id"), lit(3)), 0 to 2, "graft_upres_pending_")
-      val stage = TempDirs.create("graft_upres_stage_")
-      val ckpt = TempDirs.create("graft_upres_ckpt_")
-      val stateBase = TempDirs.create("graft_upres_state_")
-      def publishSlice(i: Int): Unit =
-        Files.move(pending.resolve(s"slice_$i"), stage.resolve(s"slice_$i"))
-      publishSlice(0)
-
-      // commit log = the dir names; recovery scans them
-      def committed(): Seq[(Long, Long)] = { // (version, batchId)
-        val it = Files.list(stateBase)
-        try scala.jdk.CollectionConverters.IteratorHasAsScala(it.iterator()).asScala
-          .flatMap { p =>
-            "v(\\d+)_b(\\d+)".r.findFirstMatchIn(p.getFileName.toString)
-              .map(m => (m.group(1).toLong, m.group(2).toLong))
-          }.toSeq.sortBy(_._1)
-        finally it.close()
+      crashRestart(spark, staged, 0 to 2, "graft_upres_")(
+        identity,
+        (prev, batch) => UpsertStreams.mergeStep(prev.map(p => spark.read.parquet(p)),
+          UpsertStreams.deltaAgg(batch))) { versions =>
+        spark.read.parquet(versions.last)
+          .select(col("user_id"), col("n_events"),
+            graft.functions.Metrics.canonRound(col("sum_micros").cast("double") / 1e4, 4)
+              .as("sum_value"),
+            col("last_ts").cast("timestamp_ntz").as("last_ts"))
+          .orderBy("user_id")
+          .localCheckpoint(true)
       }
-      def orphanTmps(): Seq[Path] = {
-        val it = Files.list(stateBase)
-        try scala.jdk.CollectionConverters.IteratorHasAsScala(it.iterator()).asScala
-          .filter(_.getFileName.toString.startsWith("tmp_b")).toSeq
-        finally it.close()
-      }
-      def deleteRecursively(p: Path): Unit = {
-        val walk = Files.walk(p)
-        try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator()).asScala
-          .toSeq.sortBy(-_.getNameCount).foreach(Files.delete)
-        finally walk.close()
-      }
-
-      var orphansSeen = 0
-      // crashMode: 0 = none, 1 = throw before commit (partial write left
-      // staged), 2 = throw after commit but before the checkpoint commits
-      def runOnce(crashOnBatch: Long, crashMode: Int)
-          : (String, Long, Option[(String, Seq[String])]) = {
-        // recovery janitor: uncommitted partial writes from a crashed
-        // incarnation are garbage by definition (their batch will replay)
-        val orphans = orphanTmps()
-        orphansSeen += orphans.size
-        orphans.foreach(deleteRecursively)
-        var (version, lastApplied) = committed().lastOption.getOrElse((-1L, -1L))
-        val applyBatch: (Dataset[Row], Long) => Unit = { (batch, id) =>
-          if (id != lastApplied) { // idempotent replay guard, recovered
-            val prev = if (version < 0) None
-              else Some(spark.read.parquet(s"$stateBase/v${version}_b$lastApplied"))
-            val tmp = s"$stateBase/tmp_b$id"
-            UpsertStreams.mergeStep(prev, UpsertStreams.deltaAgg(batch.toDF()))
-              .write.mode("overwrite").parquet(tmp)
-            if (id == crashOnBatch && crashMode == 1)
-              throw new RuntimeException(
-                s"injected crash BEFORE commit of batch $id (partial sink write staged)")
-            // commit point: atomic rename — a half-written table can never
-            // be visible under a committed name
-            Files.move(Paths.get(tmp), Paths.get(s"$stateBase/v${version + 1}_b$id"),
-              StandardCopyOption.ATOMIC_MOVE)
-            version += 1
-            lastApplied = id
-            if (id == crashOnBatch && crashMode == 2)
-              throw new RuntimeException(
-                s"injected crash AFTER commit of batch $id, before its checkpoint")
-          } else {
-            // redelivered, already-applied batch: no second MERGE, but the
-            // batch is still consumed — this plan is stateless today, so
-            // nothing REQUIRES it, but foreachBatch's contract ("process
-            // the entire DataFrame") is kept uniform with the TWS sink so
-            // adding a stateful op upstream can never resurrect the
-            // commit-validation failure mode
-            StreamHarness.drainBatch(batch)
-          }
-        }
-        val q = StreamHarness.sliceStream(spark, stage, schema).writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch(applyBatch)
-          .start()
-        val err = try { q.processAllAvailable(); None } catch {
-          case e: Throwable => Some(describeFailure(e))
-        }
-        val n = q.recentProgress.count(_.numInputRows > 0)
-        val rid = q.runId.toString
-        try q.stop() catch { case _: Throwable => () }
-        (rid, n.toLong, err)
-      }
-
-      val r1 = runOnce(-1, 0) // batch 0, graceful stop
-      publishSlice(1); publishSlice(2)
-      val r2 = runOnce(1, 1) // dies mid-batch 1: staged write, no commit
-      val r3 = runOnce(2, 2) // replays b1 (applies), commits b2, dies pre-checkpoint
-      val r4 = runOnce(-1, 0) // b2 redelivered -> no second merge; drains
-      val (v, b) = committed().last
-      val result = spark.read.parquet(s"$stateBase/v${v}_b$b")
-        .select(col("user_id"), col("n_events"),
-          graft.functions.Metrics.canonRound(col("sum_micros").cast("double") / 1e4, 4)
-            .as("sum_value"),
-          col("last_ts").cast("timestamp_ntz").as("last_ts"))
-        .orderBy("user_id")
-        .localCheckpoint(true)
-      CrashRun(result,
-        Seq(r1, r2, r3, r4).map(_._1), Seq(r1, r2, r3, r4).map(_._2),
-        Seq(r2, r3).flatMap(_._3.map(_._1)), Seq(r2, r3).flatMap(_._3.map(_._2)),
-        Seq(r1, r4).flatMap(_._3.map(_._1)), committed(), orphansSeen)
     }
 
   /** Registry entries — both reuse the non-restart originals' oracles

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Path
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.StructType
 
 /** The shared local-harness scaffold behind every streaming query in
   * this package: the session confs a harness runs under, the memory-sink
-  * query lifecycle, the slice staging and the versioned-parquet merge
-  * loop. Each piece exists once so a divergence between copies cannot
+  * query lifecycle, the slice staging and the exactly-once versioned
+  * sink. Each piece exists once so a divergence between copies cannot
   * happen (r15 verdict item 2: the merge scaffold had been copy-pasted
   * across eight sites, and a divergence in one copy is exactly the
   * cross-batch-pair defect class the r14 review caught in IndexStreams).
@@ -36,17 +36,23 @@ import org.apache.spark.sql.types.StructType
   *    `Exchange SinglePartition` sort, the exact idiom the rest of the
   *    library eliminated (r15 verdict item 1; StreamingSpec pins the
   *    staging plan). Identical tercile assignment, one range exchange.
-  *    RestartStreams' crash harnesses reuse the staging but not the merge
-  *    loop (their loop injects mid-batch failures and runs multiple query
-  *    incarnations).
   *
-  *  - [[runVersionedMerge]]: the replay-guarded versioned-parquet merge
-  *    loop — state table rewritten per batch as `v<version>`, a
-  *    redelivered batch id is a no-op, so the engine's at-least-once
-  *    delivery composes to exactly-once state. At 100 TB the rewrite
-  *    becomes a partitioned MERGE INTO keyed on the state key and the
-  *    batch-id ledger lives in the table's commit log instead of a
-  *    driver var (the UpsertStreams scaladoc's scale story — it holds
+  *  - [[versionedMergeSink]]: the exactly-once foreachBatch sink. Each
+  *    fresh batch's output is written to `tmp_b<id>` and committed by an
+  *    atomic rename to `v<version>_b<batchId>`; those names are the
+  *    sink's commit log, so a new incarnation reads its (version,
+  *    lastApplied) ledger back from them, and a redelivered batch id is
+  *    drained without a second write. The engine's at-least-once
+  *    delivery thus composes to exactly-once state. An optional
+  *    [[CrashPoint]] throws just before or just after the rename; only
+  *    RestartStreams' crash harnesses (q252, q253) set it, and they run
+  *    this same sink through their restart schedule.
+  *
+  *  - [[runVersionedMerge]]: that sink plus one query — the state table
+  *    rewritten per batch as the next version. At 100 TB the rewrite
+  *    becomes a partitioned MERGE INTO keyed on the state key, and the
+  *    batch-id ledger moves from directory names into the table's
+  *    commit log (the UpsertStreams scaladoc's scale story — it holds
   *    for every caller, GShardQueries.q236 included, because the loop is
   *    one function). Callers provide the source and the MERGE:
   *    `(prevState, batch) => newState`, which must reduce the batch to
@@ -74,12 +80,12 @@ object StreamHarness {
     *
     * Why the cap of 8: measured on sf0.1 at local[32], 32 → 8 partitions
     * took the stream-stream join 6.3s→3.2s and timeout sessionization
-    * 5.6s→3.6s (BENCH.md, round 7) — above 8 the extra stores cost more
-    * than the parallelism returns.
+    * 5.6s→3.6s — above 8 the extra stores cost more than the parallelism
+    * returns.
     *
-    * Why OPTIMIZATION_r18.md's "8 → 4 a wash" does not carry over: that
-    * A/B ran at local[32], where 8 tasks already fit in one wave, so 4
-    * only dropped stores that ran in parallel anyway. Below 8 slots, 8
+    * Why an earlier "8 → 4 is a wash" measurement does not carry over:
+    * that A/B ran at local[32], where 8 tasks already fit in one wave, so
+    * 4 only dropped stores that ran in parallel anyway. Below 8 slots, 8
     * stores take two waves; at local[4] going from 8 to 4 cut the
     * stream_replay benchmark's mean Spark job time from 0.197s to 0.143s
     * (medians of ten alternating runs each, every output checked).
@@ -101,7 +107,9 @@ object StreamHarness {
     * count (or on the wrong store) and — worse — the LAST restore
     * re-installs the temporary value permanently, skewing every later
     * query in the sweep. Serializing the handful of streaming harnesses
-    * costs little; batch queries are unaffected.
+    * costs little. The lock does not cover batch queries: one planned on
+    * another thread while a harness runs plans at the streaming partition
+    * count (same answer, different plan shape).
     */
   def withStreamConf[A](spark: SparkSession, rocksDb: Boolean = false)(body: => A): A =
     confLock.synchronized {
@@ -207,11 +215,7 @@ object StreamHarness {
     }
     // only _SUCCESS remains under raw/ after the moves; remove it so the
     // stage dir holds exactly the slice_<i> dirs the callers glob
-    val raw = stage.resolve("raw")
-    val leftover = java.nio.file.Files.walk(raw)
-    try scala.jdk.CollectionConverters.IteratorHasAsScala(leftover.iterator()).asScala
-      .toSeq.sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-    finally leftover.close()
+    TempDirs.deleteRecursively(stage.resolve("raw"))
     val schema = spark.read.parquet(s"$stage/slice_${sliceIds.head}").schema
     (stage, schema)
   }
@@ -252,16 +256,17 @@ object StreamHarness {
     graft.operators.DistributedRank.ntile(df, order, n, "__slice")
 
   /** Consume a foreachBatch batch WITHOUT side effects: pull every
-    * partition's iterator dry. Load-bearing for idempotent-skip sinks on
-    * redelivered batches (RestartStreams): Spark 4.1's
-    * BatchCommitTracker requires every micro-batch's stateful plan to
-    * commit all its state partitions, and the plan only executes as rows
-    * are CONSUMED — a function that ignores the iterator pulls nothing
-    * and fails the incarnation with StateStoreCommitValidationFailed.
-    * One shared helper so the two crash-harness sinks cannot drift
-    * (the r15 scaffold-consolidation rule).
+    * partition's iterator dry. Load-bearing for the sink's skip of a
+    * redelivered batch: Spark 4.1's BatchCommitTracker requires every
+    * micro-batch's stateful plan to commit all its state partitions, and
+    * the plan only executes as rows are CONSUMED — a function that
+    * ignores the iterator pulls nothing and fails the incarnation with
+    * StateStoreCommitValidationFailed (q252's transformWithState replay).
+    * Re-execution on redelivery is what transformWithState recovery is
+    * built for: the store loads the state as of batch start and
+    * recommits the same deterministic version.
     */
-  def drainBatch(batch: Dataset[Row]): Unit =
+  private def drainBatch(batch: Dataset[Row]): Unit =
     batch.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
 
   /** The staged slices as a stream, one slice file per micro-batch. */
@@ -270,10 +275,76 @@ object StreamHarness {
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$stage/slice_*")
 
-  /** The replay-guarded versioned-parquet merge loop (scaladoc above).
-    * Streams `source` (usually [[sliceStream]]), applies
-    * `merge(prevState, batch)` per fresh batch id, writes state version
-    * v0, v1, … under a fresh temp dir, and returns the FINAL state frame.
+  /** Where an injected crash fires in a crash-restart incarnation: on
+    * batch `batchId`, just before the sink's rename-commit (its output is
+    * staged, not committed) or just after it (committed, but the
+    * streaming checkpoint has not recorded the batch, so it is
+    * redelivered).
+    */
+  private[streaming] final case class CrashPoint(batchId: Long, afterCommit: Boolean)
+
+  private val Committed = """v(\d+)_b(\d+)""".r
+
+  private def names(dir: Path): Seq[String] = {
+    val it = Files.list(dir)
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(it.iterator()).asScala
+      .map(_.getFileName.toString).toVector
+    finally it.close()
+  }
+
+  /** The sink's commit log, read back from the names of its committed
+    * versions: (version, batchId), oldest first.
+    */
+  private[streaming] def ledger(dir: Path): Seq[(Long, Long)] =
+    names(dir).collect { case Committed(v, b) => (v.toLong, b.toLong) }.sortBy(_._1)
+
+  /** The committed version `entry` of the sink in `dir`. */
+  private[streaming] def versionPath(dir: Path, entry: (Long, Long)): String =
+    s"$dir/v${entry._1}_b${entry._2}"
+
+  /** Staged writes that never committed (a crash before the rename). */
+  private[streaming] def uncommitted(dir: Path): Seq[Path] =
+    names(dir).filter(_.startsWith("tmp_b")).map(dir.resolve)
+
+  /** The exactly-once versioned sink over `dir` (scaladoc above), as a
+    * foreachBatch function. Per fresh batch id it writes
+    * `merge(latest committed version's path, batch)` to `tmp_b<id>` and
+    * commits it by atomic rename to the next `v<version>_b<id>`; a
+    * redelivered batch id (the last one applied) is drained, not merged.
+    * The ledger is read back from `dir` when the sink is built, so a new
+    * query incarnation resumes where the last commit left off. `crash`
+    * injects one failure at the rename-commit; None in every harness but
+    * the crash-restart ones.
+    */
+  private[streaming] def versionedMergeSink(dir: Path, crash: Option[CrashPoint] = None)
+      (merge: (Option[String], DataFrame) => DataFrame): (Dataset[Row], Long) => Unit = {
+    var (version, lastApplied) = ledger(dir).lastOption.getOrElse((-1L, -1L))
+    (batch, id) =>
+      if (id == lastApplied) drainBatch(batch)
+      else {
+        val prev = if (version < 0) None else Some(versionPath(dir, (version, lastApplied)))
+        val tmp = dir.resolve(s"tmp_b$id")
+        // the write is the batch's action: a stateful upstream plan
+        // executes and commits its state inside it
+        merge(prev, batch.toDF()).write.mode("overwrite").parquet(tmp.toString)
+        if (crash.contains(CrashPoint(id, afterCommit = false)))
+          throw new RuntimeException(
+            s"injected crash BEFORE commit of batch $id (partial sink write staged)")
+        // commit point: atomic rename — a half-written version can never
+        // be visible under a committed name
+        Files.move(tmp, dir.resolve(s"v${version + 1}_b$id"), StandardCopyOption.ATOMIC_MOVE)
+        version += 1
+        lastApplied = id
+        if (crash.contains(CrashPoint(id, afterCommit = true)))
+          throw new RuntimeException(
+            s"injected crash AFTER commit of batch $id, before its checkpoint")
+      }
+  }
+
+  /** The versioned-parquet merge loop: [[versionedMergeSink]] plus one
+    * query. Streams `source` (usually [[sliceStream]]), applies
+    * `merge(prevState, batch)` per fresh batch id, writes each state
+    * version under a fresh temp dir, and returns the FINAL state frame.
     * Requires at least one batch (an empty stream is a harness bug, not
     * a valid run).
     */
@@ -281,23 +352,13 @@ object StreamHarness {
       (merge: (Option[DataFrame], DataFrame) => DataFrame): DataFrame = {
     val spark = source.sparkSession
     val stateBase = TempDirs.create(statePrefix)
-    def statePath(v: Long) = s"$stateBase/v$v"
-    var version = -1L
-    var lastApplied = -1L
-    val applyBatch: (Dataset[Row], Long) => Unit = { (batch, id) =>
-      // idempotent replay guard: a re-delivered batch id is a no-op —
-      // this is the exactly-once half the sink contributes
-      if (id != lastApplied) {
-        val prev = if (version < 0) None else Some(spark.read.parquet(statePath(version)))
-        merge(prev, batch.toDF())
-          .write.mode("overwrite").parquet(statePath(version + 1))
-        version += 1
-        lastApplied = id
-      }
+    val sink = versionedMergeSink(stateBase) { (prev, batch) =>
+      merge(prev.map(p => spark.read.parquet(p)), batch)
     }
-    val q = source.writeStream.foreachBatch(applyBatch).queryName(queryName).start()
+    val q = source.writeStream.foreachBatch(sink).queryName(queryName).start()
     try q.processAllAvailable() finally q.stop()
-    require(version >= 0, "stream produced no batches")
-    spark.read.parquet(statePath(version))
+    val last = ledger(stateBase).lastOption
+    require(last.isDefined, "stream produced no batches")
+    spark.read.parquet(versionPath(stateBase, last.get))
   }
 }

@@ -26,7 +26,8 @@ object TempDirs {
       registered.forEach(p => deleteRecursively(p))
     }, "graft-tempdir-cleanup"))
 
-  private def deleteRecursively(p: Path): Unit =
+  /** Delete `p` and everything under it; a missing path is a no-op. */
+  private[streaming] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       // reverse-sorted walk = children before parents
       val it = Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())

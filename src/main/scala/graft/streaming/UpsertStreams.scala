@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * combinable), the state table is keyed by user_id and rewritten per
   * batch — at 100 TB the rewrite becomes a partitioned MERGE INTO on
   * the key (same dataflow, storage-format detail), and the batch-id
-  * ledger lives in the table's commit log instead of a driver var.
+  * ledger lives in the table's commit log instead of the state
+  * directories' `v<version>_b<batchId>` names.
   * The running sum is kept as exact integer 1e-4 micros, so merge order
   * and batch boundaries cannot perturb it.
   */

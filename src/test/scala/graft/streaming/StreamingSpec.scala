@@ -372,8 +372,9 @@ class StreamingSpec extends SparkSpec {
     // RocksDB version but BEFORE the sink commit (recovery re-executes
     // the batch against state as of batch start — the torn version is
     // superseded, not corrupting), a kill after the sink commit but
-    // before the checkpoint (redelivery skipped by the ledger guard,
-    // batch plan NOT re-executed), and a clean drain
+    // before the checkpoint (the redelivery gets no second write from the
+    // ledger guard, while drainBatch still re-executes the batch plan),
+    // and a clean drain
     val run = RestartStreams.twsRestart(spark, sf001)
     assert(run.runIds.distinct.size === 4, s"expected 4 incarnations, saw ${run.runIds}")
     assert(run.batches.head === 1,
@@ -402,9 +403,10 @@ class StreamingSpec extends SparkSpec {
     // the crash-before-commit left a REAL partial sink write (with the
     // batch's RocksDB version already committed) for the janitor
     assert(run.orphanTmps >= 1, "the mid-batch kill must leave a staged partial write")
-    // exactly-once sink log: each batch committed exactly once
-    assert(run.committedBatches === Seq(0L, 1L, 2L),
-      s"each batch must commit exactly once, saw ${run.committedBatches}")
+    // exactly-once sink log: each batch committed exactly once, versions
+    // contiguous
+    assert(run.committed === Seq((0L, 0L), (1L, 1L), (2L, 2L)),
+      s"each batch must commit exactly once, saw ${run.committed}")
     // row-for-row ≡ the single-query sessionization (q129 path): every
     // open-session ValueState survived both kills and the redelivery
     val restart = run.result.collect().toSeq
@@ -416,6 +418,36 @@ class StreamingSpec extends SparkSpec {
       .collect().toSeq
     assert(restart == single, "crash-recovered output must equal the single-run sessionization")
     assert(restart.nonEmpty)
+  }
+
+  test("versioned sink drains a redelivered batch id without a second merge") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val dir = TempDirs.create("spec_sink_")
+    val pulled = spark.sparkContext.longAccumulator("spec_sink_rows_pulled")
+    // a static batch of 10 rows that counts each row as it is consumed
+    def batch(lo: Long) = spark.range(lo, lo + 10).toDF("k")
+      .filter { (_: Row) => pulled.add(1); true }
+    var merges = 0
+    val sink = StreamHarness.versionedMergeSink(dir) { (prev, b) =>
+      merges += 1
+      val delta = b.agg(count(lit(1)).as("n"))
+      prev.fold(delta)(p => spark.read.parquet(p).unionByName(delta).agg(sum("n").as("n")))
+    }
+    sink(batch(0), 0L)
+    sink(batch(10), 1L)
+    val pulledBefore = pulled.value
+    sink(batch(10), 1L) // batch 1 redelivered
+    assert(merges === 2, "a redelivered batch id must not be merged again")
+    assert(pulled.value === pulledBefore + 10,
+      "the redelivered batch must still be consumed (drainBatch)")
+    assert(StreamHarness.ledger(dir) === Seq((0L, 0L), (1L, 1L)))
+    val listing = java.nio.file.Files.list(dir)
+    val names = try listing.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      finally listing.close()
+    assert(!names.exists(_.startsWith("tmp_b")), s"uncommitted staging left behind: $names")
+    assert(spark.read.parquet(StreamHarness.versionPath(dir, (1L, 1L)))
+      .collect().toSeq === Seq(Row(20L)))
   }
 
   test("HARD-KILL recovery: upsert sink survives crash-before-commit and crash-after-commit exactly once") {
@@ -437,8 +469,8 @@ class StreamingSpec extends SparkSpec {
     // janitor to find on the next recovery
     assert(run.orphanTmps >= 1, "the mid-batch kill must leave a staged partial write")
     // exactly-once ledger: each batch committed once, versions contiguous
-    assert(run.committedLedger === Seq((0L, 0L), (1L, 1L), (2L, 2L)),
-      s"commit log must be one version per batch, saw ${run.committedLedger}")
+    assert(run.committed === Seq((0L, 0L), (1L, 1L), (2L, 2L)),
+      s"commit log must be one version per batch, saw ${run.committed}")
     // final state ≡ the no-restart upsert (q203 path): every batch applied
     // exactly once despite two hard kills and one redelivery
     val restart = run.result.collect().toSeq
