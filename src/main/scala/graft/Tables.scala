@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Loaders for the driver fixture tables (see /root/repo/FIXTURES.md).
   *
@@ -37,27 +37,41 @@ object Tables {
   def registerViews(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
-  /** The fixture's `ts` physical type is untrusted input — the driver has
-    * shipped it both as INT64 TIMESTAMP(NANOS,false) and as plain
-    * timestamp[us] with isAdjustedToUTC=false. Normalize every known shape
-    * to session-UTC TimestampType so all downstream event-time operators
-    * (cast-to-long, unix_micros, withWatermark) see one type:
-    *  - Long (nanos via spark.sql.legacy.parquet.nanosAsLong=true):
-    *    truncate to micros (floor — matches DuckDB's TIMESTAMP_NS cast)
-    *    and rebuild a timestamp.
-    *  - TIMESTAMP_NTZ (micros, not UTC-adjusted): cast to TimestampType;
-    *    with spark.sql.session.timeZone=UTC this is value-preserving.
-    */
+  /** The events fixture, with `ts` normalised by [[eventsTs]]. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        // integral `div`, not `/`: ns-since-epoch (~1.7e18) overflows double's
-        // 53-bit mantissa, so float division would corrupt low-order digits.
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    eventsTs(raw.schema).normalize(raw)
   }
+
+  /** What a harness does with the events `ts` column, given the frame's
+    * physical schema: `normalize` turns it into session-UTC TimestampType
+    * (the type every event-time operator and withWatermark expects), and
+    * `plusDays(d)` is `ts` moved `d` days later in its PHYSICAL type (the
+    * heartbeat harnesses write rows that their stream reads back with the
+    * fixture's own schema).
+    */
+  final case class EventsTs(normalize: DataFrame => DataFrame, plusDays: Long => Column)
+
+  /** The one place that knows the shapes of the events `ts` column. It is
+    * untrusted input: the fixture has shipped both as INT64
+    * TIMESTAMP(NANOS,false) and as timestamp[us] with isAdjustedToUTC=false.
+    *  - Long (nanos via spark.sql.legacy.parquet.nanosAsLong=true): floor
+    *    to micros, as DuckDB's TIMESTAMP_NS cast does, and rebuild a
+    *    timestamp.
+    *  - TIMESTAMP_NTZ (micros, not UTC-adjusted): cast to TimestampType;
+    *    with spark.sql.session.timeZone=UTC this is value-preserving.
+    *  - TimestampType: already normalised.
+    */
+  def eventsTs(physical: StructType): EventsTs = physical("ts").dataType match {
+    case LongType =>
+      // integral `div`, not `/`: ns-since-epoch (~1.7e18) overflows double's
+      // 53-bit mantissa; `div` truncates toward zero, so subtract the pmod
+      // first to floor a pre-1970 value
+      EventsTs(_.withColumn("ts", timestamp_micros(expr("(ts - pmod(ts, 1000)) div 1000"))),
+        days => (col("ts") + lit(days * 86400L * 1000000000L)).as("ts"))
+    case TimestampNTZType => EventsTs(_.withColumn("ts", col("ts").cast("timestamp")), plusInterval)
+    case _ => EventsTs(identity, plusInterval)
+  }
+
+  private def plusInterval(days: Long): Column = (col("ts") + expr(s"INTERVAL $days DAYS")).as("ts")
 }

@@ -783,15 +783,9 @@ object DedupQueries {
   val q146 = GQuery(
     "q146_stream_windowed_dedup",
     (s, dir) => {
-      // TempDirs, not deleteOnExit: deleteOnExit silently skips non-empty
-      // dirs and this one always holds the symlink (review finding, r14)
-      val stage = graft.streaming.TempDirs.create("graft_wdedup_q146_")
-      java.nio.file.Files.createSymbolicLink(
-        stage.resolve("documents.parquet"),
-        java.nio.file.Paths.get(s"$dir/documents.parquet").toAbsolutePath)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val (docs, _) = graft.streaming.StreamHarness.fixtureStream(s, dir, "documents")
       graft.streaming.DedupStreams.windowedCrossSourceDedup(
-        s, stage.toString, schema, queryName = "stream_windowed_dedup_q146")
+        s, docs, queryName = "stream_windowed_dedup_q146")
     },
     Some("""WITH d AS (
         SELECT doc_id,

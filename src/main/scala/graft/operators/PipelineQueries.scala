@@ -141,15 +141,9 @@ object PipelineQueries {
   val q114 = GQuery(
     "q114_stream_contamination",
     (s, dir) => {
-      // TempDirs, not deleteOnExit: deleteOnExit silently skips non-empty
-      // dirs and this one always holds the symlink (review finding, r14)
-      val stage = graft.streaming.TempDirs.create("graft_contam_q114_")
-      java.nio.file.Files.createSymbolicLink(
-        stage.resolve("documents.parquet"),
-        java.nio.file.Paths.get(s"$dir/documents.parquet").toAbsolutePath)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val (docs, stage) = graft.streaming.StreamHarness.fixtureStream(s, dir, "documents")
       graft.streaming.ContaminationStreams.contaminationStream(
-        s, stage.toString, schema, dir, queryName = "stream_contamination_q114")
+        s, docs, stage.toString, dir, queryName = "stream_contamination_q114")
     },
     Some(contaminationOracle))
 

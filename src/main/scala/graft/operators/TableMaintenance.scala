@@ -202,15 +202,9 @@ object TableMaintenance {
   val q181 = GQuery(
     "q181_stream_rollup",
     (s, dir) => {
-      // TempDirs, not deleteOnExit: deleteOnExit silently skips non-empty
-      // dirs and this one always holds the symlink (review finding, r14)
-      val stage = graft.streaming.TempDirs.create("graft_rollup_q181_")
-      java.nio.file.Files.createSymbolicLink(
-        stage.resolve("orders.parquet"),
-        java.nio.file.Paths.get(s"$dir/orders.parquet").toAbsolutePath)
-      val schema = s.read.parquet(s"$dir/orders.parquet").schema
+      val (orders, _) = graft.streaming.StreamHarness.fixtureStream(s, dir, "orders")
       graft.streaming.RollupStreams.streamingRollup(
-        s, stage.toString, schema, dir, queryName = "stream_rollup_q181")
+        s, orders, dir, queryName = "stream_rollup_q181")
     },
     q179.oracle)
 

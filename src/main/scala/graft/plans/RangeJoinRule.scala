@@ -71,9 +71,10 @@ import org.apache.spark.sql.types.{
   * Bins are `BinSeconds` (3600 s) wide — ≳ the typical interval span, so
   * most intervals replicate into ≤ 2 bins.
   *
-  * Config: spark.graft.rangeJoin.enabled (default true),
-  * spark.graft.rangeJoin.maxBinsPerInterval (default 256; ≤ 0 disables
-  * the split and bins every interval unconditionally).
+  * Config: spark.graft.rangeJoin.maxBinsPerInterval (default 256; ≤ 0
+  * disables the split and bins every interval unconditionally). Spark's
+  * own spark.sql.optimizer.excludedRules=graft.plans.RangeJoinRewrite
+  * turns the rule off.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
@@ -100,8 +101,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan]
   private val NoRewriteTag =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean]("graft.rangeJoin.noRewrite")
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.rangeJoin.enabled", "true").toBoolean
   private def maxBinsPerInterval: Long =
     conf.getConfString("spark.graft.rangeJoin.maxBinsPerInterval", "256").toLong
 
@@ -140,8 +139,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan]
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transform {
+    plan.transform {
       case j @ Join(left, right, Inner, Some(cond), hint)
           if j.getTagValue(NoRewriteTag).isEmpty &&
             !(left.output ++ right.output).exists(a => markerNames(a.name)) =>

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.functions.Metrics
@@ -31,9 +30,14 @@ import graft.functions.Metrics
   */
 object ContaminationStreams {
 
-  def contaminationStream(spark: SparkSession, dir: String, schema: StructType,
+  /** @param source  the incoming documents as a parquet file stream
+    * @param landing the path (or glob) `source` streams; the per-doc
+    *                n-gram totals are a batch read of it with
+    *                `source`'s schema, so they cover exactly the
+    *                streamed documents
+    */
+  def contaminationStream(spark: SparkSession, source: DataFrame, landing: String,
                           staticDir: String, mod: Long = 17, n: Int = 8,
-                          maxFilesPerTrigger: Option[Int] = None,
                           queryName: String = "stream_contamination"): DataFrame =
     StreamHarness.withStreamConf(spark) {
     // static side: benchmark n-gram set, distinct-reduced (broadcast-sized
@@ -44,10 +48,7 @@ object ContaminationStreams {
       .select(xxhash64(col("ng_str")).as("ng"))
       .distinct()
 
-    val reader = maxFilesPerTrigger.foldLeft(spark.readStream.schema(schema)) {
-      (r, m) => r.option("maxFilesPerTrigger", m)
-    }
-    val hitsQuery = reader.parquet(dir)
+    val hitsQuery = source
       .filter(col("doc_id") % mod =!= 0)
       .select(col("doc_id"), call_function("graft_ngrams", col("text"), lit(n)).as("ng_str"))
       .select(col("doc_id"), xxhash64(col("ng_str")).as("ng"))
@@ -62,14 +63,14 @@ object ContaminationStreams {
       .select(col("doc_id"), size(col("ngs")).cast("long").as("n_contaminated"))
 
     // batch-side totals (row-local per doc — no stream state needed),
-    // read from the LANDING dir, not staticDir: the denominators must
+    // over the LANDED documents, not staticDir: the denominators must
     // describe the documents that actually streamed. Reading staticDir
     // only worked while every caller fed a byte-identical mirror of it —
     // a landing doc absent from staticDir silently vanished from the
     // report (inner join) and a same-id/different-text doc got the wrong
-    // n_ngrams (review finding, r14). The stream is fully drained above,
-    // so this batch read sees every landed file.
-    val totals = spark.read.schema(schema).parquet(dir)
+    // n_ngrams. The stream is fully drained above, so a batch read of
+    // the landing files sees every one of them.
+    val totals = spark.read.schema(source.schema).parquet(landing)
       .filter(col("doc_id") % mod =!= 0)
       .select(col("doc_id"), call_function("graft_ngrams", col("text"), lit(n)).as("ng_str"))
       .select(col("doc_id"), xxhash64(col("ng_str")).as("ng"))

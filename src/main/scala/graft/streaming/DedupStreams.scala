@@ -109,19 +109,16 @@ object DedupStreams {
   /** Streaming (doc_id, text) → (doc_id, dup_of, n_eq) pairs, where
     * dup_of is an earlier-seen document agreeing on ≥ minAgree of the
     * signature slots and sharing at least one LSH band bucket. Runs the
-    * stream to completion against `dir` (a landing directory of parquet
-    * files) and returns the collected result — test/local harness shape,
-    * like the other EventStreams entry points.
+    * `source` stream to completion and returns the collected result —
+    * test/local harness shape, like the other EventStreams entry points.
     */
-  def nearDupStream(spark: SparkSession, dir: String, schema: org.apache.spark.sql.types.StructType,
+  def nearDupStream(spark: SparkSession, source: DataFrame,
                     minAgree: Int = NumHashes / 2, bucketCap: Int = 50,
-                    queryName: String = "stream_neardup",
-                    docFilter: Option[Column] = None): DataFrame =
-    runNearDupStream(spark, dir, schema, sigOf(_),
+                    queryName: String = "stream_neardup"): DataFrame =
+    runNearDupStream(spark, source, sigOf(_),
       bands = Bands, rows = NumHashes / Bands,
       bandKey = (sig, b, r) => xxhash64(slice(sig, b * r + 1, r).cast("string")).cast("string"),
-      minAgree = minAgree, bucketCap = bucketCap, queryName = queryName,
-      docFilter = docFilter)
+      minAgree = minAgree, bucketCap = bucketCap, queryName = queryName)
 
   /** The md5/K-M twin of [[nearDupStream]] (8 slots, 4 string-keyed bands —
     * the q56/q83/q99 signature scheme): identical stateful dataflow, but
@@ -130,33 +127,24 @@ object DedupStreams {
     * the slot values joined by '-' (no bucket-hash collisions to reason
     * about cross-engine).
     */
-  def nearDupStreamMd5(spark: SparkSession, dir: String, schema: org.apache.spark.sql.types.StructType,
+  def nearDupStreamMd5(spark: SparkSession, source: DataFrame,
                        nHashes: Int = 8, minAgree: Int = 4, bucketCap: Int = 50,
-                       queryName: String = "stream_neardup_md5",
-                       docFilter: Option[Column] = None): DataFrame =
-    runNearDupStream(spark, dir, schema, sigOfMd5(_, nHashes),
+                       queryName: String = "stream_neardup_md5"): DataFrame =
+    runNearDupStream(spark, source, sigOfMd5(_, nHashes),
       bands = nHashes / 2, rows = 2,
       bandKey = (sig, b, r) =>
         array_join(transform(slice(sig, b * r + 1, r), _.cast("string")), "-"),
-      minAgree = minAgree, bucketCap = bucketCap, queryName = queryName,
-      docFilter = docFilter)
+      minAgree = minAgree, bucketCap = bucketCap, queryName = queryName)
 
-  private def runNearDupStream(spark: SparkSession, dir: String,
-                               schema: org.apache.spark.sql.types.StructType,
+  private def runNearDupStream(spark: SparkSession, source: DataFrame,
                                sigFn: String => Option[Array[Long]],
                                bands: Int, rows: Int,
                                bandKey: (Column, Int, Int) => Column,
                                minAgree: Int, bucketCap: Int,
-                               queryName: String,
-                               docFilter: Option[Column] = None): DataFrame =
+                               queryName: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
     import spark.implicits._
-    // docFilter prunes documents BEFORE the per-doc signature hashing —
-    // the pipeline's dominant cost — so callers can run the full
-    // stateful dataflow on a deterministic corpus sample (the q100
-    // registry entry). None = whole corpus (the StreamingSpec fixtures).
-    val scanned = spark.readStream.schema(schema).parquet(dir)
-    val docs = docFilter.fold(scanned)(scanned.filter)
+    val docs = source
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
         sigFn(text).map(sig => (id, sig.toSeq)) })
@@ -224,8 +212,7 @@ object DedupStreams {
     * (earliest reference witness + match count) is the batch finishing
     * step on the sink.
     */
-  def windowedCrossSourceDedup(spark: SparkSession, landingDir: String,
-                               schema: org.apache.spark.sql.types.StructType,
+  def windowedCrossSourceDedup(spark: SparkSession, source: DataFrame,
                                windowMinutes: Int = 60,
                                queryName: String = "stream_windowed_dedup"): DataFrame =
     StreamHarness.withStreamConf(spark) {
@@ -238,7 +225,7 @@ object DedupStreams {
     // mirrored verbatim in the q146 oracle so malformed sources behave
     // identically cross-engine (a bare substring cast would NULL here
     // but raise in DuckDB)
-    val docs = spark.readStream.schema(schema).parquet(landingDir)
+    val docs = source
       .select(col("doc_id"), col("source"), canonFp.as("fp"),
         timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"),
         coalesce(regexp_extract(col("source"), "(\\d+)$", 1).cast("int") % 2 === 0,

@@ -18,32 +18,13 @@ import StreamHarness.{runToMemory, withStreamConf}
   */
 object EventStreams extends Serializable {
 
-  /** Streaming source over the events fixture, normalizing the NANOS
-    * timestamp exactly like Tables.events does for batch. Returns the
-    * staging directory too so callers can feed FURTHER files into the
-    * running stream (the multi-batch harness [[sessionizeEvictAll]]
-    * needs).
+  /** The events fixture as a stream ([[StreamHarness.fixtureStream]]),
+    * its `ts` normalised exactly as Tables.events does for batch, and the
+    * stage dir the heartbeat harnesses feed further files into.
     */
   def eventsStreamStaged(spark: SparkSession, dir: String): (DataFrame, java.nio.file.Path) = {
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // FileStreamSource wants a directory; the fixture is a single file.
-    // Stage a symlink in a temp dir — a cluster deployment streams a real
-    // landing directory (or Kafka) and this staging disappears.
-    val stage = TempDirs.create("graft_stream_")
-    java.nio.file.Files.createSymbolicLink(
-      stage.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet").toAbsolutePath)
-    val raw = spark.readStream.schema(batchSchema).parquet(stage.toString)
-    // Same shape normalization as Tables.events: Long-nanos or TIMESTAMP_NTZ
-    // → session-UTC TimestampType (the type withWatermark requires).
-    val df = batchSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-    (df, stage)
+    val (raw, stage) = StreamHarness.fixtureStream(spark, dir, "events")
+    (graft.Tables.eventsTs(raw.schema).normalize(raw), stage)
   }
 
   def eventsStream(spark: SparkSession, dir: String): DataFrame =
@@ -355,12 +336,9 @@ object EventStreams extends Serializable {
                               dayOffsets: Seq[Long] = Seq(10L, 11L),
                               linkPrefix: String = ""): Unit = {
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val dayNs = 86400L * 1000000000L
-    val shift: Long => org.apache.spark.sql.Column =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        days => (col("ts") + lit(days * dayNs)).as("ts")
-      else
-        days => (col("ts") + expr(s"INTERVAL $days DAYS")).as("ts")
+    // the heartbeat is read back with the fixture's schema: shift `ts` in
+    // its physical type
+    val shift = graft.Tables.eventsTs(raw.schema).plusDays
     dayOffsets.zipWithIndex.foreach { case (days, i) =>
       val name = s"hb${i + 1}"
       val hbDir = TempDirs.create(s"graft_${name}_")

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 
@@ -23,19 +22,14 @@ import graft.Tables
   */
 object RollupStreams {
 
-  /** @param landingDir directory of parquet delta files (orders schema)
+  /** @param source the delta feed as a stream (orders schema)
     * @return q179's changelog shape: (o_custkey, action, n_orders, rev_cents)
     */
-  def streamingRollup(spark: SparkSession, landingDir: String, schema: StructType,
-                      staticDir: String,
-                      maxFilesPerTrigger: Option[Int] = None,
+  def streamingRollup(spark: SparkSession, source: DataFrame, staticDir: String,
                       queryName: String = "stream_rollup"): DataFrame =
     StreamHarness.withStreamConf(spark) {
       val cents = (c: org.apache.spark.sql.Column) => floor(c * 100 + 0.5).cast("long")
-      val reader = maxFilesPerTrigger.foldLeft(spark.readStream.schema(schema)) {
-        (r, m) => r.option("maxFilesPerTrigger", m)
-      }
-      val running = reader.parquet(landingDir)
+      val running = source
         .filter(col("o_orderkey") % 10 === 0)
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_delta"), sum(cents(col("o_totalprice"))).as("rev_delta"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,6 +14,9 @@ import org.apache.spark.sql.types.StructType
   * happen (r15 verdict item 2: the merge scaffold had been copy-pasted
   * across eight sites, and a divergence in one copy is exactly the
   * cross-batch-pair defect class the r14 review caught in IndexStreams).
+  *
+  *  - [[fixtureStream]]: a fixture file as a file stream over a staged
+  *    landing dir — the one source of every fixture-fed harness.
   *
   *  - [[withStreamConf]]: run a harness with the state partition count
   *    and, for transformWithState, the RocksDB state store provider set
@@ -268,6 +271,23 @@ object StreamHarness {
     */
   private def drainBatch(batch: Dataset[Row]): Unit =
     batch.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
+
+  /** The fixture `<dir>/<table>.parquet` as a file stream, with the
+    * fixture's own schema (read once), and the stage dir it streams.
+    * FileStreamSource reads a directory and the fixture is one file, so
+    * the stage is a [[TempDirs]] dir holding one symlink to it —
+    * TempDirs, not `File.deleteOnExit`, which skips non-empty dirs and
+    * would leak every stage. The heartbeat harnesses feed further files
+    * into the stage dir while the stream runs. A cluster deployment
+    * streams a real landing directory (or Kafka) instead.
+    */
+  def fixtureStream(spark: SparkSession, dir: String, table: String): (DataFrame, Path) = {
+    val file = Paths.get(s"$dir/$table.parquet").toAbsolutePath
+    val schema = spark.read.parquet(file.toString).schema
+    val stage = TempDirs.create(s"graft_${table}_stream_")
+    Files.createSymbolicLink(stage.resolve(s"$table.parquet"), file)
+    (spark.readStream.schema(schema).parquet(stage.toString), stage)
+  }
 
   /** The staged slices as a stream, one slice file per micro-batch. */
   def sliceStream(spark: SparkSession, stage: Path, schema: StructType): DataFrame =

@@ -246,7 +246,7 @@ class OpsSpec extends SparkSpec {
 
   test("CSV roundtrip with explicit schema (S1/S6)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv_").toString
+    val tmp = graft.streaming.TempDirs.create("graft_csv_").toString
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("id", "name", "v")
     CsvIo.writeSingleCsv(df, s"$tmp/out")
     val schema = StructType(Seq(

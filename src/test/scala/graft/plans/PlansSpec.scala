@@ -39,7 +39,7 @@ class PlansSpec extends SparkSpec {
     // returned frame must surface as a captured hit with its true record
     // count, while the benign returned frame must not mask it.
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_spa_").toString
+    val tmp = graft.streaming.TempDirs.create("graft_spa_").toString
     val hits = graft.SinglePartitionAudit.auditedHits(spark) {
       val base = spark.range(10000).select(col("id"), (col("id") % 7).as("k"))
       // the eager intermediate job carrying the funnel (never returned)
@@ -70,8 +70,7 @@ class PlansSpec extends SparkSpec {
       val (stage, schema) = graft.streaming.StreamHarness.stageSlices(
         Tables.orders(spark, sf001).select(col("o_orderkey")),
         pmod(col("o_orderkey"), lit(2)), 0 to 1, "graft_spastream_")
-      val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(s"$stage/slice_*")
+      val q = graft.streaming.StreamHarness.sliceStream(spark, stage, schema)
         .repartition(1)
         .writeStream.format("noop").queryName("spa_stream_pin").start()
       q.processAllAvailable(); q.stop()
@@ -259,7 +258,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("ORC and JSON-lines roundtrip, ORC predicate pushdown (S9 extension)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fmt_").toString
+    val tmp = graft.streaming.TempDirs.create("graft_fmt_").toString
     val o = Tables.orders(spark, sf001)
     o.write.mode("overwrite").orc(s"$tmp/orc")
     val orcBack = spark.read.orc(s"$tmp/orc")
@@ -380,7 +379,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("date-partitioned writes give partition pruning at read (PLANS.md claim)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part_").toString
+    val tmp = graft.streaming.TempDirs.create("graft_part_").toString
     val l = Tables.lineitem(spark, sf001)
       .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
     l.write.mode("overwrite").partitionBy("ship_month").parquet(s"$tmp/li")
@@ -469,7 +468,7 @@ class PlansSpec extends SparkSpec {
 
   test("dynamic partition pruning: a dim-side filter prunes fact partitions at runtime") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp_").toString
+    val tmp = graft.streaming.TempDirs.create("graft_dpp_").toString
     Tables.lineitem(spark, sf001)
       .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
       .write.mode("overwrite").partitionBy("ship_month").parquet(s"$tmp/li")

@@ -98,8 +98,9 @@ class RangeJoinRuleSpec extends SparkSpec {
     val q12ish = Tables.customer(spark, sf001)
       .join(broadcast(bands), col("c_acctbal") >= col("lo") && col("c_acctbal") < col("hi"))
     assert(!planString(q12ish).contains("__graft_rj_bin"))
-    // conf off → naive stays naive
-    Session.withConf(spark, "spark.graft.rangeJoin.enabled" -> "false") {
+    // rule excluded → naive stays naive
+    assert(RangeJoinRewrite.ruleName == "graft.plans.RangeJoinRewrite")
+    Session.withConf(spark, "spark.sql.optimizer.excludedRules" -> RangeJoinRewrite.ruleName) {
       val naive = clicks.limit(50).join(purchases.limit(50),
         col("click_ts") >= col("lo") && col("click_ts") <= col("p_ts"))
       assert(!planString(naive).contains("__graft_rj_bin"))
@@ -174,16 +175,8 @@ class RangeJoinRuleSpec extends SparkSpec {
     // union landed — the regression this test pins closed). Streaming
     // interval bounds are query-constant watermark offsets, so the wide-
     // interval hazard the cap defends against cannot arise there.
-    val stage = java.nio.file.Files.createTempDirectory("graft_rjstream_")
-    stage.toFile.deleteOnExit()
-    java.nio.file.Files.createSymbolicLink(
-      stage.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$sf001/events.parquet"))
-    val schema = spark.read.parquet(s"$sf001/events.parquet").schema
-    // fixture ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP (UTC
-    // session, so the cast is a relabel — Tables.events does the same)
-    val s = spark.readStream.schema(schema).parquet(stage.toString)
-      .withColumn("ts", col("ts").cast("timestamp"))
+    // watermarks require TIMESTAMP: eventsStream normalises ts to it
+    val s = graft.streaming.EventStreams.eventsStream(spark, sf001)
     val a = s.select(col("event_id").as("a_id"), col("user_id").as("a_uid"),
         col("ts").as("a_ts"))
       .withWatermark("a_ts", "2 hours")
@@ -224,14 +217,8 @@ class RangeJoinRuleSpec extends SparkSpec {
     // old stream bypass (bin everything) would re-open the unbounded
     // explode the cap guards against. The cap must stay ON — both Union
     // branches are stateless stream-batch inner joins.
-    val stage = java.nio.file.Files.createTempDirectory("graft_rjsb_")
-    stage.toFile.deleteOnExit()
-    java.nio.file.Files.createSymbolicLink(
-      stage.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$sf001/events.parquet"))
-    val schema = spark.read.parquet(s"$sf001/events.parquet").schema
-    val pts = spark.readStream.schema(schema).parquet(stage.toString)
-      .select(col("user_id").as("f_uid"), col("ts").cast("timestamp").as("f_ts"))
+    val events = graft.streaming.EventStreams.eventsStream(spark, sf001)
+    val pts = events.select(col("user_id").as("f_uid"), col("ts").as("f_ts"))
     val dim = Seq(
       ("2020-03-15 00:00:00", "2020-03-16 00:00:00", "v1"),
       ("2020-03-16 00:00:01", "9999-12-31 00:00:00", "v2"))
@@ -249,10 +236,8 @@ class RangeJoinRuleSpec extends SparkSpec {
     // streaming INTERVAL side over batch points: no safe shape — binning
     // unconditionally risks the explode, the Union is the stream-split
     // wedge — so the rule declines and leaves the original join
-    val ivs = spark.readStream.schema(schema).parquet(stage.toString)
-      .select(col("user_id").as("s_uid"),
-        col("ts").cast("timestamp").as("valid_from"),
-        (col("ts").cast("timestamp") + expr("INTERVAL 1 HOUR")).as("valid_to"))
+    val ivs = events.select(col("user_id").as("s_uid"), col("ts").as("valid_from"),
+        (col("ts") + expr("INTERVAL 1 HOUR")).as("valid_to"))
     val bpts = Seq("2020-03-15 12:00:00").toDF("t")
       .select(col("t").cast("timestamp").as("f_ts"))
     val joined2 = bpts.join(ivs,

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,7 +16,7 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("mergeSchema unions evolved schemas; explicit schema avoids the footer scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_evolve_").toString
+    val dir = graft.streaming.TempDirs.create("graft_evolve_").toString
     // v1 files: (id, v); v2 adds a quality column
     Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
       .write.mode("overwrite").parquet(s"$dir/p=1")

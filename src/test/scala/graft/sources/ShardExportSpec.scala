@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -14,7 +12,7 @@ class ShardExportSpec extends SparkSpec {
 
   test("written shards match the manifest: partition, order, completeness") {
     val docs = Tables.documents(spark, sf001)
-    val out = Files.createTempDirectory("shard_export").toString
+    val out = graft.streaming.TempDirs.create("shard_export").toString
     val n = 4
     ShardExport.write(docs, "doc_id", out, nShards = n, seed = "graft")
 

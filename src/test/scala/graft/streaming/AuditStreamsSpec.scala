@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.streaming.OutputMode
@@ -13,23 +12,15 @@ class AuditStreamsSpec extends SparkSpec {
 
   test("watermark drops are counted and observe() audits every arriving row") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_audit_").toString
-    def feed(rows: Seq[(Long, Timestamp)], name: String): Unit = {
-      val staging = Files.createTempDirectory("graft_audit_stage_")
-      rows.toDF("event_id", "ts").coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-      val listing = Files.list(staging)
-      try {
-        val part = listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(part, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-      } finally listing.close()
-    }
+    val dir = TempDirs.create("graft_audit_")
+    def feed(rows: Seq[(Long, Timestamp)], name: String): Unit =
+      Landing.feed(rows.toDF("event_id", "ts"), dir, name)
     // batch 1: three on-time rows; max ts 12:00 → watermark 11:30
     feed(Seq((1L, ts("2024-01-01 11:00:00")), (2L, ts("2024-01-01 11:05:00")),
       (3L, ts("2024-01-01 12:00:00"))), "b1.parquet")
     val schema = spark.read.parquet(s"$dir/b1.parquet").schema
     val q = AuditStreams.windowCounts(
-        spark.readStream.schema(schema).parquet(dir))
+        spark.readStream.schema(schema).parquet(dir.toString))
       .writeStream.outputMode(OutputMode.Update)
       .format("memory").queryName("audit_spec").start()
     q.processAllAvailable()

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -29,16 +28,9 @@ class StateStoreSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def feed(dir: String, name: String, rows: Seq[(Long, Timestamp)]): Unit = {
+  private def frame(rows: Seq[(Long, Timestamp)]): DataFrame = {
     import spark.implicits._
-    val staging = Files.createTempDirectory("graft_ss_stage_")
-    rows.toDF("event_id", "ts").coalesce(1)
-      .write.mode("overwrite").parquet(staging.toString)
-    val listing = Files.list(staging)
-    try {
-      val part = listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-      Files.move(part, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-    } finally listing.close()
+    rows.toDF("event_id", "ts")
   }
 
   private def windowed(src: DataFrame): DataFrame =
@@ -54,9 +46,8 @@ class StateStoreSpec extends SparkSpec {
     (4L, ts("2024-01-01 10:07:00")), // lands in the FIRST window: state reuse
     (5L, ts("2024-01-01 10:21:00")))
 
-  private def runToEnd(dir: String, queryName: String, checkpoint: String): Unit = {
-    val schema = spark.read.parquet(s"$dir").schema
-    val q = windowed(spark.readStream.schema(schema).parquet(dir))
+  private def runToEnd(source: DataFrame, queryName: String, checkpoint: String): Unit = {
+    val q = windowed(source)
       .writeStream.outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpoint)
       .format("memory").queryName(queryName).start()
@@ -68,11 +59,9 @@ class StateStoreSpec extends SparkSpec {
     def runWith(provider: Option[String]): Map[Timestamp, Long] =
       Session.withConf(spark,
           provider.map("spark.sql.streaming.stateStore.providerClass" -> _).toSeq: _*) {
-        val dir = Files.createTempDirectory("graft_ss_rocks_").toString
-        feed(dir, "b1.parquet", rows1)
-        feed(dir, "b2.parquet", rows2)
+        val source = Landing.sliceBatches(Seq(frame(rows1), frame(rows2)), "graft_ss_rocks_")
         val name = s"ss_${provider.isDefined}"
-        runToEnd(dir, name, Files.createTempDirectory("graft_ck_").toString)
+        runToEnd(source, name, TempDirs.create("graft_ck_").toString)
         spark.table(name).collect()
           .map(r => r.getTimestamp(0) -> r.getLong(1))
           .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max } // Update mode: last wins
@@ -87,11 +76,11 @@ class StateStoreSpec extends SparkSpec {
   test("restart from checkpoint resumes without loss or double counting") {
     // the memory sink refuses recovery by design; foreachBatch is the
     // recoverable sink (the q203 upsert pattern)
-    val dir = Files.createTempDirectory("graft_ss_restart_").toString
-    val ck = Files.createTempDirectory("graft_ck_restart_").toString
+    val dir = TempDirs.create("graft_ss_restart_")
+    val ck = TempDirs.create("graft_ck_restart_").toString
     def runOnce(): Unit = {
-      val schema = spark.read.parquet(dir).schema
-      val q = windowed(spark.readStream.schema(schema).parquet(dir))
+      val schema = spark.read.parquet(dir.toString).schema
+      val q = windowed(spark.readStream.schema(schema).parquet(dir.toString))
         .writeStream.outputMode(OutputMode.Update)
         .option("checkpointLocation", ck)
         .foreachBatch { (df: DataFrame, _: Long) =>
@@ -104,9 +93,9 @@ class StateStoreSpec extends SparkSpec {
       q.stop()
     }
     StateStoreSpec.sink.clear()
-    feed(dir, "b1.parquet", rows1)
+    Landing.feed(frame(rows1), dir, "b1.parquet")
     runOnce() // first run sees only batch 1, then stops
-    feed(dir, "b2.parquet", rows2)
+    Landing.feed(frame(rows2), dir, "b2.parquet")
     runOnce() // RESTART on the same checkpoint
     // the restarted run's updates layered over run 1 must equal the
     // one-shot batch answer — event 4 UPDATES the 10:00 window to 3

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
@@ -92,7 +90,7 @@ class StreamShufflePartitionsSpec extends SparkSpec {
   }
 
   test("runToMemory stops its query when the hook throws; the name is free again") {
-    val dir = Files.createTempDirectory("graft_run_to_memory_").toString
+    val dir = TempDirs.create("graft_run_to_memory_").toString
     spark.range(3).write.mode("overwrite").parquet(dir)
     def source = spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
     val name = "spec_run_to_memory"

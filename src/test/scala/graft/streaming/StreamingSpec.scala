@@ -31,24 +31,14 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup (dropDuplicatesWithinWatermark) emits each event_id once across micro-batches") {
     import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     import java.sql.Timestamp
     def ts(s: String) = Timestamp.valueOf(s)
-    val dir = Files.createTempDirectory("graft_dedup_").toString
-    def feed(rows: Seq[(Long, Timestamp, Double)], name: String): Unit = {
-      val staging = Files.createTempDirectory("graft_dedup_stage_")
-      rows.toDF("event_id", "ts", "value").coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-      val listing = Files.list(staging)
-      try {
-        val part = listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        // atomic move: the running stream must never list a half-written file
-        Files.move(part, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-      } finally listing.close()
-    }
+    val dir = TempDirs.create("graft_dedup_")
+    def feed(rows: Seq[(Long, Timestamp, Double)], name: String): Unit =
+      Landing.feed(rows.toDF("event_id", "ts", "value"), dir, name)
     feed(Seq((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-01 10:05:00"), 2.0)), "b1.parquet")
     val schema = spark.read.parquet(s"$dir/b1.parquet").schema
-    val deduped = spark.readStream.schema(schema).parquet(dir)
+    val deduped = spark.readStream.schema(schema).parquet(dir.toString)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
     val q = deduped.writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
@@ -117,29 +107,16 @@ class StreamingSpec extends SparkSpec {
 
   test("md5 streaming near-dup agrees with its batch twin across micro-batches") {
     import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_neardup_md5_").toString
-    def feed(rows: Seq[(Long, String)], name: String): Unit = {
-      val staging = Files.createTempDirectory("graft_neardup_md5_stage_")
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-      val listing = Files.list(staging)
-      try {
-        val part = listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(part, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-      } finally listing.close()
-    }
     val base = (1 to 50).map(i => s"w$i").mkString(" ")
     val near = ((1 to 47).map(i => s"w$i") ++ Seq("x1", "x2", "x3")).mkString(" ")
     val near2 = ((1 to 48).map(i => s"w$i") ++ Seq("y1", "y2")).mkString(" ")
     val other = (100 to 150).map(i => s"w$i").mkString(" ")
     val batch1 = Seq(1L -> base, 2L -> near, 3L -> other)
     val batch2 = Seq(4L -> near2, 5L -> "tiny")
-    feed(batch1, "b1.parquet")
-    feed(batch2, "b2.parquet")
-    val schema = batch1.toDF("doc_id", "text").schema
+    val source = Landing.sliceBatches(
+      Seq(batch1.toDF("doc_id", "text"), batch2.toDF("doc_id", "text")), "graft_neardup_md5_")
     val stream = graft.streaming.DedupStreams
-      .nearDupStreamMd5(spark, dir, schema, queryName = "spec_neardup_md5")
+      .nearDupStreamMd5(spark, source, queryName = "spec_neardup_md5")
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet // (earlier, later)
     val all = (batch1 ++ batch2).toDF("doc_id", "text")
     val batchPairs = graft.operators.DedupPipeline.nearDupPairsMd5(
@@ -152,18 +129,6 @@ class StreamingSpec extends SparkSpec {
 
   test("windowed cross-source dedup matches across micro-batches, only inside the window (q146)") {
     import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_wdedup_spec_").toString
-    def feed(rows: Seq[(Long, String, String)], name: String): Unit = {
-      val staging = Files.createTempDirectory("graft_wdedup_stage_")
-      rows.toDF("doc_id", "source", "text").coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-      val listing = Files.list(staging)
-      try {
-        val part = listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(part, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-      } finally listing.close()
-    }
     // even sources = reference feed; odd = incoming. ts = doc_id seconds.
     val batch1 = Seq(
       (10L, "src2", "alpha beta gamma"),
@@ -173,39 +138,25 @@ class StreamingSpec extends SparkSpec {
       (105L, "src7", "three two one"),             // mirror of 20 -> dup
       (5000L, "src3", "beta gamma alpha"),         // mirror of 10 but 4990s > 60min -> clean
       (200L, "src5", "purple monkey dishwasher"))  // no ref match -> clean
-    feed(batch1, "b1.parquet")
-    feed(batch2, "b2.parquet")
-    val schema = batch1.toDF("doc_id", "source", "text").schema
+    val source = Landing.sliceBatches(
+      Seq(batch1, batch2).map(_.toDF("doc_id", "source", "text")), "graft_wdedup_spec_")
     val got = graft.streaming.DedupStreams
-      .windowedCrossSourceDedup(spark, dir, schema, queryName = "spec_wdedup")
+      .windowedCrossSourceDedup(spark, source, queryName = "spec_wdedup")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == Map(100L -> ((10L, 1L)), 105L -> ((20L, 1L))), s"got $got")
   }
 
   test("streaming near-dup detection agrees with batch LSH across micro-batches") {
     import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_neardup_").toString
-    def feed(rows: Seq[(Long, String)], name: String): Unit = {
-      val staging = Files.createTempDirectory("graft_neardup_stage_")
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-      val listing = Files.list(staging)
-      try {
-        val part = listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(part, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-      } finally listing.close()
-    }
     val base = (1 to 50).map(i => s"w$i").mkString(" ")
     val near = ((1 to 47).map(i => s"w$i") ++ Seq("x1", "x2", "x3")).mkString(" ")
     val near2 = ((1 to 48).map(i => s"w$i") ++ Seq("y1", "y2")).mkString(" ")
     val other = (100 to 150).map(i => s"w$i").mkString(" ")
     val batch1 = Seq(1L -> base, 2L -> near, 3L -> other)
     val batch2 = Seq(4L -> near2, 5L -> "tiny") // 4 ~ 1/2 arrives a batch LATER
-    feed(batch1, "b1.parquet")
-    feed(batch2, "b2.parquet")
-    val schema = batch1.toDF("doc_id", "text").schema
-    val stream = graft.streaming.DedupStreams.nearDupStream(spark, dir, schema)
+    val source = Landing.sliceBatches(
+      Seq(batch1.toDF("doc_id", "text"), batch2.toDF("doc_id", "text")), "graft_neardup_")
+    val stream = graft.streaming.DedupStreams.nearDupStream(spark, source)
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet // (earlier, later)
     val all = (batch1 ++ batch2).toDF("doc_id", "text")
     val batchPairs = graft.operators.DedupPipeline.nearDupPairs(
@@ -223,25 +174,14 @@ class StreamingSpec extends SparkSpec {
     // micro-batch; ascending fixtures never exercised it. Feed the ids in
     // DESCENDING order across batches and require batch parity.
     import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Files.createTempDirectory("graft_neardup_rev_").toString
-    def feed(rows: Seq[(Long, String)], name: String): Unit = {
-      val staging = Files.createTempDirectory("graft_neardup_rev_stage_")
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-      val listing = Files.list(staging)
-      try {
-        val part = listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(part, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-      } finally listing.close()
-    }
     val base = (1 to 50).map(i => s"w$i").mkString(" ")
     val near = ((1 to 47).map(i => s"w$i") ++ Seq("x1", "x2", "x3")).mkString(" ")
-    feed(Seq(10L -> base, 12L -> "unrelated words only here"), "b1.parquet")
-    feed(Seq(4L -> near), "b2.parquet") // the SMALLER id arrives later
-    val schema = Seq(10L -> base).toDF("doc_id", "text").schema
+    val source = Landing.sliceBatches(Seq(
+      Seq(10L -> base, 12L -> "unrelated words only here").toDF("doc_id", "text"),
+      Seq(4L -> near).toDF("doc_id", "text")), // the SMALLER id arrives later
+      "graft_neardup_rev_")
     val stream = graft.streaming.DedupStreams
-      .nearDupStream(spark, dir, schema, queryName = "spec_neardup_rev")
+      .nearDupStream(spark, source, queryName = "spec_neardup_rev")
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet // (smaller, larger)
     val all = Seq(10L -> base, 12L -> "unrelated words only here", 4L -> near)
       .toDF("doc_id", "text")
@@ -510,31 +450,33 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming rollup equals batch q179 regardless of micro-batching") {
-    import java.nio.file.Files
+    import org.apache.spark.sql.functions.{col, countDistinct, lit, pmod}
     val orders = spark.read.parquet(s"$sf001/orders.parquet")
-    // several landing files + maxFilesPerTrigger=1 → several micro-batches;
-    // count/sum partials are commutative, so the merged changelog must not
-    // depend on how the delta feed was split
-    val landing = Files.createTempDirectory("graft_rollup_spec_").toString
-    orders.repartition(3).write.mode("overwrite").parquet(landing)
+    // three slices → three micro-batches, cut by order key so one
+    // customer's orders land in several batches and its count/sum state
+    // is merged across them; the partials are commutative, so the merged
+    // changelog must not depend on how the delta feed was split
+    val sliceOf = pmod(col("o_orderkey"), lit(3))
+    assert(orders.groupBy("o_custkey").agg(countDistinct(sliceOf).as("n"))
+      .filter(col("n") > 1).count() > 0, "no customer spans two micro-batches")
+    val (stage, schema) = StreamHarness.stageSlices(orders, sliceOf, 0 to 2, "graft_rollup_spec_")
     val streamed = RollupStreams.streamingRollup(
-        spark, landing, orders.schema, sf001,
-        maxFilesPerTrigger = Some(1), queryName = "rollup_spec")
+        spark, StreamHarness.sliceStream(spark, stage, schema), sf001, queryName = "rollup_spec")
       .collect().toSeq
     val batch = Registry.queries("q179_incremental_rollup")(spark, sf001).collect().toSeq
     assert(streamed == batch)
   }
 
   test("streaming contamination equals batch q109 regardless of micro-batching") {
-    import java.nio.file.Files
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
-    // several landing files + maxFilesPerTrigger=1 → several micro-batches;
-    // overlap is a set property, so the result must not depend on the split
-    val landing = Files.createTempDirectory("graft_contam_spec_").toString
-    docs.repartition(3).write.mode("overwrite").parquet(landing)
+    // three slices → three micro-batches; overlap is a set property, so
+    // the result must not depend on the split
+    val (stage, schema) = StreamHarness.stageSlices(
+      docs, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_contam_spec_")
     val streamed = ContaminationStreams.contaminationStream(
-        spark, landing, docs.schema, sf001,
-        maxFilesPerTrigger = Some(1), queryName = "contam_spec")
+        spark, StreamHarness.sliceStream(spark, stage, schema), s"$stage/slice_*", sf001,
+        queryName = "contam_spec")
       .collect().toSeq
     val batch = Registry.queries("q109_contamination")(spark, sf001).collect().toSeq
     assert(streamed == batch)

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -18,23 +16,9 @@ class WatermarkSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  /** Stage df as a single parquet file inside the watched dir (atomic move
-    * so the running stream never lists a half-written file).
-    */
-  private def feed(df: DataFrame, watched: String, name: String): Unit = {
-    val staging = Files.createTempDirectory("graft_wm_stage_")
-    df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val listing = Files.list(staging)
-    try {
-      val part = listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
-      Files.move(part, Paths.get(watched, name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } finally listing.close()
-  }
-
   test("append-mode windowed agg drops events behind the watermark") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_wm_").toString
+    val dir = TempDirs.create("graft_wm_")
 
     val b1 = Seq(
       (1L, ts("2024-01-01 10:05:00"), 1.0),
@@ -46,16 +30,16 @@ class WatermarkSpec extends SparkSpec {
       (5L, ts("2024-01-01 12:40:00"), 8.0)    // closes the 12:00 window
     ).toDF("event_id", "ts", "value")
 
-    feed(b1, dir, "batch1.parquet")
+    Landing.feed(b1, dir, "batch1.parquet")
     val stream = spark.readStream.schema(b1.schema)
-      .parquet(dir)
+      .parquet(dir.toString)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "30 minutes").as("w"))
       .agg(sum("value").as("total"), count(lit(1)).as("n"))
     val q = stream.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("wm_spec").start()
     q.processAllAvailable() // batch 1 only → watermark now 11:50
-    feed(b2, dir, "batch2.parquet")
+    Landing.feed(b2, dir, "batch2.parquet")
     q.processAllAvailable() // batch 2: late row dropped, 12:00 window closes
     q.stop()
 
