@@ -58,6 +58,14 @@ object Metrics {
     floor(c * k + 0.5) / k
   }
 
+  /** Salted 60-bit hash: the first 15 hex digits of md5("salt:key") as a
+    * non-negative long. The DuckDB oracles spell the same value
+    * `CAST(('0x' || substr(md5('salt:' || key), 1, 15)) AS BIGINT)`.
+    */
+  def h60(salt: String, key: Column): Column =
+    conv(substring(md5(concat_ws(":", lit(salt), key.cast("string"))), 1, 15), 16, 10)
+      .cast("long")
+
   /** Order-independent exact sum of a double expression: accumulate as
     * DECIMAL(18,4) (exact integer arithmetic — associative, so partition
     * order can't change the result), surface as double. This is what makes

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Metrics
 import graft.registry.GQuery
 
 /** Bradley-Terry pairwise preference model (Bradley & Terry 1952) fit by
@@ -43,16 +44,12 @@ object BradleyTerry {
   /** MM rounds; each output snapped at 1e-6 (see determinism note). */
   val Rounds = 5
 
-  private def h60(salt: String, key: Column): Column =
-    conv(substring(md5(concat_ws(":", lit(salt), key.cast("string"))), 1, 15), 16, 10)
-      .cast("long")
-
   /** Per-document planted preference score: tier·50 + hash noise. */
   def prefFrame(docs: DataFrame): DataFrame = {
     val sidx = substring(col("source"), 4, 8).cast("int")
     docs.select(
       col("doc_id"), col("lang"), sidx.as("sidx"),
-      ((sidx % 5) * 50 + pmod(h60("btn", col("doc_id")), lit(200))).as("pref"))
+      ((sidx % 5) * 50 + pmod(Metrics.h60("btn", col("doc_id")), lit(200))).as("pref"))
   }
 
   /** Canonical win matrix: one row per unordered source pair (lo < hi)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Metrics
 import graft.registry.GQuery
 
 /** Count-min sketch heavy hitters (Cormode & Muthukrishnan 2005) — the
@@ -47,12 +48,8 @@ object CountMinSketch {
   val W = 64
   val TopK = 20
 
-  private def h60(salt: String, key: Column): Column =
-    conv(substring(md5(concat_ws(":", lit(salt), key.cast("string"))), 1, 15), 16, 10)
-      .cast("long")
-
   private def bucket(r: Int, key: Column): Column =
-    pmod(h60(s"cms$r", key), lit(W))
+    pmod(Metrics.h60(s"cms$r", key), lit(W))
 
   /** Per-lang (feature, count) frame — ONE corpus-sized pass (map-side
     * combinable), shared by the matrix build and the key frame so the

@@ -217,9 +217,12 @@ object EventQueries {
 
   /** As-of join (point-in-time): each click matched to the user's most
     * recent prior-or-equal purchase. Oracle is DuckDB's native ASOF JOIN;
-    * ours is the union+window composition (operators.AsOfJoin). The right
-    * side is deduped to unique (user, ts) first — ASOF semantics are
-    * undefined under tied reference timestamps.
+    * ours is plans.NativeAsOfJoin, the custom physical operator
+    * (AsOfJoinNode + Strategy + AsOfJoinExec injected via GraftExtensions):
+    * one hash shuffle per side and a streaming in-partition merge sweep.
+    * The right side is deduped to unique (user, ts) first — ASOF semantics
+    * are undefined under tied reference timestamps. AsOfJoinPlanSpec pins
+    * the plan shape and the NULL semantics.
     */
   val q39 = GQuery(
     "q39_asof_join",
@@ -229,7 +232,7 @@ object EventQueries {
         .select(col("event_id"), col("user_id"), col("ts").as("click_ts"))
       val purchases = e.filter(col("event_type") === "purchase")
         .groupBy("user_id", "ts").agg(max("value").as("value"))
-      AsOfJoin.asof(clicks, purchases, "user_id", "click_ts", "ts", Seq("value"))
+      graft.plans.NativeAsOfJoin.asof(clicks, purchases, "user_id", "click_ts", "ts", Seq("value"))
         .select(col("event_id"), col("user_id"),
           col("click_ts").cast("timestamp_ntz").as("click_ts"),
           col("asof_ts").cast("timestamp_ntz").as("purchase_ts"),
@@ -247,73 +250,22 @@ object EventQueries {
       FROM clicks c ASOF LEFT JOIN purch p ON c.user_id = p.user_id AND c.ts >= p.ts
       ORDER BY c.event_id"""))
 
-  /** The same point-in-time alignment through the custom physical operator
-    * (plans.NativeAsOfJoin / AsOfJoinExec — LogicalPlan + Strategy +
-    * SparkPlan injected via GraftExtensions): one hash shuffle per side, a
-    * streaming in-partition merge sweep, no union row inflation. Shares
-    * q39's DuckDB ASOF JOIN oracle, so the custom exec itself is
-    * hash-verified cross-engine; AsOfJoinPlanSpec pins plan shape and
-    * composition parity.
+  /** q39 under the name the benchmark's olap_mix replays: the same
+    * builder and the same DuckDB ASOF JOIN oracle.
     */
-  val q118 = GQuery(
-    "q118_asof_native",
-    (s, dir) => {
-      val e = Tables.events(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts").as("click_ts"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts").agg(max("value").as("value"))
-      graft.plans.NativeAsOfJoin.asof(clicks, purchases, "user_id", "click_ts", "ts", Seq("value"))
-        .select(col("event_id"), col("user_id"),
-          col("click_ts").cast("timestamp_ntz").as("click_ts"),
-          col("asof_ts").cast("timestamp_ntz").as("purchase_ts"),
-          graft.functions.Metrics.canonRound(col("asof_value"), 4).as("purchase_value"))
-        .orderBy("event_id")
-    },
-    q39.oracle)
+  val q118 = q39.copy(name = "q118_asof_native")
 
   /** Attribution-window range join: clicks within the 30 minutes before
-    * each purchase by the same user, counted per purchase. Exercises
-    * operators.RangeJoin — the LARGE×LARGE interval join (bin-bucketed
-    * equi join + exact re-filter), where q12's broadcast band join stops
-    * scaling. Oracle is the plain inequality join.
+    * each purchase by the same user, counted per purchase. Written as the
+    * plain `join(uid === uid && ts >= lo && ts <= hi)`; the optimizer rule
+    * plans.RangeJoinRewrite plans it as a binned equi join — bin-bucketed
+    * candidates plus the exact predicate, where q12's broadcast band join
+    * stops scaling. Oracle is the plain
+    * inequality join; RangeJoinRuleSpec pins the plan shape (bin key
+    * present, no nested-loop join even with the equi key removed).
     */
   val q68 = GQuery(
     "q68_attribution_window",
-    (s, dir) => {
-      val e = Tables.events(s, dir)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-        .withColumn("lo", col("p_ts") - expr("INTERVAL 30 MINUTES"))
-      val joined = RangeJoin.pointInInterval(
-        clicks, purchases, "click_ts", "lo", "p_ts", Seq("user_id"), binSeconds = 1800L)
-      joined.groupBy("purchase_id", "user_id")
-        .agg(count(lit(1)).as("n_clicks"), max(col("p_ts")).as("p_ts"))
-        .select(col("purchase_id"), col("user_id"),
-          col("p_ts").cast("timestamp_ntz").as("purchase_ts"), col("n_clicks"))
-        .orderBy("purchase_id")
-    },
-    Some("""SELECT p.event_id AS purchase_id, p.user_id,
-        CAST(p.ts AS TIMESTAMP) AS purchase_ts, count(*) AS n_clicks
-      FROM events p JOIN events c
-        ON p.event_type = 'purchase' AND c.event_type = 'click'
-        AND p.user_id = c.user_id
-        AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
-      GROUP BY 1, 2, 3 ORDER BY purchase_id"""))
-
-  /** q68's attribution window in the NAIVE spelling — a plain
-    * `join(cond && ts >= lo && ts <= hi)` with no RangeJoin helper call —
-    * relying on plans.RangeJoinRewrite (the optimizer rule that detects
-    * the equi-key + interval conjunction and rewrites it to the binned
-    * equi join). Same oracle as q68, so the driver hash-verifies that
-    * the RULE-generated plan computes exactly what the hand-built helper
-    * computes; RangeJoinRuleSpec separately pins the plan shape (bin key
-    * present, no nested-loop join even with the equi key removed).
-    */
-  val q224 = GQuery(
-    "q224_range_join_rule",
     (s, dir) => {
       val e = Tables.events(s, dir)
       val clicks = e.filter(col("event_type") === "click")
@@ -330,7 +282,18 @@ object EventQueries {
           col("p_ts").cast("timestamp_ntz").as("purchase_ts"), col("n_clicks"))
         .orderBy("purchase_id")
     },
-    q68.oracle)
+    Some("""SELECT p.event_id AS purchase_id, p.user_id,
+        CAST(p.ts AS TIMESTAMP) AS purchase_ts, count(*) AS n_clicks
+      FROM events p JOIN events c
+        ON p.event_type = 'purchase' AND c.event_type = 'click'
+        AND p.user_id = c.user_id
+        AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
+      GROUP BY 1, 2, 3 ORDER BY purchase_id"""))
+
+  /** q68 under the name the benchmark's olap_mix replays: the same
+    * builder and the same oracle.
+    */
+  val q224 = q68.copy(name = "q224_range_join_rule")
 
   /** Cohort retention: users bucketed by first-seen month, distinct active
     * users counted per (cohort, months-since-cohort). Two shuffles total —
@@ -768,19 +731,22 @@ object EventQueries {
     * Weights are pure functions of (n, rank) computed identically in both
     * engines; credit = purchase value × weight on the 1e-4 grid.
     *
-    * Scale: the same binned interval join as q68 (RangeJoin — never a
-    * full cross of clicks × purchases), then one per-purchase window rank
-    * over the handful of attributed clicks per purchase.
+    * Scale: the same plain interval join as q68, which
+    * plans.RangeJoinRewrite bins (never a full cross of clicks ×
+    * purchases), then one per-purchase window rank over the handful of
+    * attributed clicks per purchase.
     */
   def multiTouchAttribution(events: DataFrame): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
+      .select(col("event_id").as("click_id"), col("user_id").as("c_uid"),
+        col("ts").as("click_ts"))
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
         col("ts").as("p_ts"), col("value"))
       .withColumn("lo", col("p_ts") - expr("INTERVAL 30 MINUTES"))
-    val joined = RangeJoin.pointInInterval(
-      clicks, purchases, "click_ts", "lo", "p_ts", Seq("user_id"), binSeconds = 1800L)
+    val joined = clicks.join(purchases,
+      col("c_uid") === col("user_id") &&
+        col("click_ts") >= col("lo") && col("click_ts") <= col("p_ts"))
     val wn = Window.partitionBy("purchase_id")
     val wr = wn.orderBy(col("click_ts").asc, col("click_id").asc)
     val n = col("n_touch")

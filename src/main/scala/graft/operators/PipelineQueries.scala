@@ -498,19 +498,19 @@ object PipelineQueries {
 
   /** Point-in-time (PIT) enrichment against an SCD-2 dimension — the
     * composition NOTES/round-5 queued: q111 builds the versioned history,
-    * [[AsOfJoin]] probes it. Dimension = each customer's cumulative state
-    * per order DAY (version key (o_custkey, valid_from) is unique by
-    * construction — the daily grain removes same-timestamp version ties that
-    * would make an as-of pick ambiguous); fact = every lineitem, probing
-    * at its ship date through the order's customer. The question answered
-    * is the feature-store staple: "what was the customer's cumulative
-    * order count / spend AS OF the moment this line shipped" — with no
-    * leakage from later versions.
+    * plans.NativeAsOfJoin probes it. Dimension = each customer's
+    * cumulative state per order DAY (version key (o_custkey, valid_from)
+    * is unique by construction — the daily grain removes same-timestamp
+    * version ties that would make an as-of pick ambiguous); fact = every
+    * lineitem, probing at its ship date through the order's customer.
+    * The question answered is the feature-store staple: "what was the
+    * customer's cumulative order count / spend AS OF the moment this line
+    * shipped" — with no leakage from later versions.
     *
     * Scale: the fact→orders key join shuffles on orderkey (or broadcasts
-    * the order projection when it fits); the as-of itself is AsOfJoin's
-    * single shuffle on custkey + one ordered in-partition sweep — never a
-    * per-row interval scan. Cumulative spend accumulates as
+    * the order projection when it fits); the as-of itself is AsOfJoinExec's
+    * one shuffle per side on custkey + one ordered in-partition merge
+    * sweep — never a per-row interval scan. Cumulative spend accumulates as
     * DECIMAL(18,2) snapped to the cent grid, so the running sums are
     * exact and order-independent in both engines.
     */
@@ -530,7 +530,7 @@ object PipelineQueries {
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey"), col("l_shipdate"))
-      AsOfJoin.asof(fact, hist, key = "o_custkey",
+      graft.plans.NativeAsOfJoin.asof(fact, hist, key = "o_custkey",
           leftTime = "l_shipdate", rightTime = "valid_from",
           rightCols = Seq("cum_orders", "cum_spend"), prefix = "pit_")
         // inner as-of semantics: the fixture has lines shipping BEFORE the

@@ -57,10 +57,6 @@ import graft.registry.GQuery
   */
 object RecordLinkage {
 
-  private def h60(salt: String, key: Column): Column =
-    conv(substring(md5(concat_ws(":", lit(salt), key.cast("string"))), 1, 15), 16, 10)
-      .cast("long")
-
   /** Master side: customers with their comparison fields. */
   def masterRecords(cust: DataFrame): DataFrame =
     cust.select(
@@ -75,17 +71,17 @@ object RecordLinkage {
   def dirtyRecords(cust: DataFrame): DataFrame = {
     val k = col("c_custkey")
     cust
-      .filter(pmod(h60("pick", k), lit(3)) === 0)
+      .filter(pmod(Metrics.h60("pick", k), lit(3)) === 0)
       .select(
         (-k - 1).as("rec_id"), k.as("src_key"),
-        when(pmod(h60("nm", k), lit(100)) < 20, concat(col("c_name"), lit("~")))
+        when(pmod(Metrics.h60("nm", k), lit(100)) < 20, concat(col("c_name"), lit("~")))
           .otherwise(col("c_name")).as("d_name"),
-        when(pmod(h60("nt", k), lit(100)) < 10, pmod(col("c_nationkey") + 7, lit(25)))
+        when(pmod(Metrics.h60("nt", k), lit(100)) < 10, pmod(col("c_nationkey") + 7, lit(25)))
           .otherwise(col("c_nationkey")).as("d_nation"),
-        when(pmod(h60("sg", k), lit(100)) < 15, lit("CORRUPTED"))
+        when(pmod(Metrics.h60("sg", k), lit(100)) < 15, lit("CORRUPTED"))
           .otherwise(col("c_mktsegment")).as("d_seg"),
         (floor(col("c_acctbal") / 500).cast("long") +
-          when(pmod(h60("bb", k), lit(100)) < 25, 1L).otherwise(0L)).as("d_band"))
+          when(pmod(Metrics.h60("bb", k), lit(100)) < 25, 1L).otherwise(0L)).as("d_band"))
   }
 
   /** One-row m/u weight frame: six snapped DECIMAL(18,6) log2 weights.

@@ -14,14 +14,17 @@ import org.apache.spark.sql.graftbridge.Bridge
   * a whole-operator as-of join shipped as LogicalPlan + SparkStrategy +
   * SparkPlan, injected via GraftExtensions.
   *
-  * `operators.AsOfJoin` (the union+window composition) proves the same
-  * semantics with built-ins and remains the default; this node exists to
-  * make the "composition == what a custom exec would do" claim measurable
-  * instead of rhetorical, and as the template for operators that genuinely
-  * cannot be composed. The physical algorithm is the one a native engine
-  * would run (reference behavior: point-in-time alignment of a probe stream
-  * to the latest reference row, /root/reference/kaggle/kaggle.py:791-ish
-  * temporal-fold alignment): both sides hash-clustered on the key and
+  * This is the engine's one as-of join: q39 and q132 call
+  * `NativeAsOfJoin.asof`, and it is the template for operators that
+  * cannot be composed from built-ins. A union+window composition could
+  * spell the same point-in-time pick, but it inflates the shuffle with
+  * the union's rows, buffers a window per key, and lets a NULL key or a
+  * NULL right-side time match.
+  *
+  * The physical algorithm is the one a native engine would run
+  * (reference behavior: point-in-time alignment of a probe stream to the
+  * latest reference row, kaggle/kaggle.py:791-ish temporal-fold
+  * alignment): both sides hash-clustered on the key and
   * sorted by (key, time), then ONE in-partition merge sweep carrying O(1)
   * state — the last reference row at-or-before the probe time. Exactly one
   * shuffle per side, no union row inflation, no window buffering.
@@ -33,7 +36,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Semantics (SQL-style, matching DuckDB ASOF LEFT JOIN): a NULL key or
   * NULL time never matches — left rows still emit with NULL carried
   * columns. Ties on (key, rightTime) resolve to the lexicographically
-  * largest carried payload, same as the composition's struct tie-break.
+  * largest carried payload.
   */
 case class AsOfJoinNode(
     left: LogicalPlan,
@@ -103,8 +106,8 @@ case class AsOfJoinExec(
     ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
   // right-side tie-break: carried payload ascending, so "last row wins"
-  // under equal (key, time) = max payload, bit-identical to the
-  // composition's struct-ordered last() (AsOfJoin.scala tie-break note)
+  // under equal (key, time) = max payload — deterministic whatever the
+  // partition order of tied right rows
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTime, Ascending),
     rightKeys.map(SortOrder(_, Ascending)) ++
@@ -176,7 +179,9 @@ case class AsOfJoinExec(
   }
 }
 
-/** Public API — same signature and output shape as `operators.AsOfJoin`. */
+/** Public API: every left row, with the latest right row at or before its
+  * time carried as `prefix` + column (NULL when there is none).
+  */
 object NativeAsOfJoin {
 
   /** @param left      probe side

@@ -11,9 +11,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{
   ArrayType, LongType, TimestampNTZType, TimestampType}
 
-/** Optimizer rule promoting the binned range join (operators.RangeJoin)
-  * from an opt-in helper to something EVERY point-in-interval join gets —
-  * the survey's own named candidate (SURVEY.md §4.3 "range-join rule").
+/** Optimizer rule that plans EVERY point-in-interval join as a binned
+  * equi join — the survey's own named candidate (SURVEY.md §4.3
+  * "range-join rule"), and the engine's one range-join implementation:
+  * q68 and q163 write the plain inequality join and reach it here.
   *
   * The problem: `points.join(intervals, keysEq && p >= lo && p <= hi)`
   * with no equi conjunct plans as a BroadcastNestedLoopJoin (fatal when
@@ -24,8 +25,8 @@ import org.apache.spark.sql.types.{
   * fixed-width bins, replicate each interval into every bin it covers,
   * and equi-join points to intervals on the bin — candidates become
   * bin-local, and the exact predicate (kept in the rewritten join's
-  * condition) restores exactness. RangeJoin.pointInInterval writes that
-  * by hand; this rule grants it to the naive spelling, including SQL.
+  * condition) restores exactness. Any spelling of the join gets it,
+  * DataFrame or SQL.
   *
   * Pattern matched on an Inner join condition's conjuncts: a lower bound
   * (p >= lo or p > lo) and an upper bound (p <= hi or p < hi) over the
@@ -36,10 +37,9 @@ import org.apache.spark.sql.types.{
   * preserved verbatim, so with equi keys present the bin simply becomes
   * one more join key bounding the per-key fan-out.
   *
-  * Rewrite (same construction as RangeJoin.pointInInterval, on raw
-  * Catalyst nodes): bin(x) = (unix_micros(x) − pmod(unix_micros, w))
-  * div w — pmod keeps floor semantics pre-1970, and the subtraction
-  * makes the division exact. The interval side explodes
+  * Rewrite, on raw Catalyst nodes: bin(x) = (unix_micros(x) −
+  * pmod(unix_micros, w)) div w — pmod keeps floor semantics pre-1970,
+  * and the subtraction makes the division exact. The interval side explodes
   * sequence(bin(lo), bin(hi)); an inverted interval (lo > hi, which the
   * naive join silently emits zero rows for) gets an empty array rather
   * than sequence()'s descending-step surprise, and a NULL bound nulls
@@ -49,42 +49,39 @@ import org.apache.spark.sql.types.{
   *
   * Guard against re-fire (the rule runs in the operator-optimization
   * FIX-POINT, and the rewritten join still contains the range
-  * conjuncts): skip joins whose children already carry a bin column —
-  * ours (__graft_rj_bin) or the hand-written helper's (__bin), so a
-  * query already routed through RangeJoin.pointInInterval is not
-  * double-binned after filter-pushdown folds its exact re-filter back
-  * into the join condition.
+  * conjuncts): the joins this rule generates carry a tree tag the
+  * rule skips, and joins whose children already carry one of its bin
+  * columns (__graft_rj_bin_p / __graft_rj_bin_i) are skipped too.
   *
   * Wide-interval cap: the explode is one row per covered bin, so an
   * open-ended or sentinel-dated interval (SCD2 valid_to = 9999-12-31)
   * would span ~70M bins at the 3600 s width — blowing up the Generate,
   * and Sequence errors outright past 2^31 elements. The interval side is
   * therefore SPLIT at plan time on the per-row bin span: intervals
-  * covering ≤ maxBinsPerInterval bins take the binned equi-join path;
-  * wider ones keep the ORIGINAL join (with all original conjuncts — an
-  * equi-keyed SCD2 probe stays a plain equi join with a range residual),
-  * and the two branches union. NULL-bounded rows drop from both filters,
-  * matching the inner join they could never satisfy. The fallback branch
-  * trips the re-fire guard via a constant marker column so the fixpoint
-  * does not re-bin it.
+  * covering ≤ MaxBinsPerInterval (256) bins take the binned equi-join
+  * path; wider ones keep the ORIGINAL join (with all original conjuncts —
+  * an equi-keyed SCD2 probe stays a plain equi join with a range
+  * residual), and the two branches union. NULL-bounded rows drop from
+  * both filters, matching the inner join they could never satisfy. The
+  * fallback join carries the re-fire tag, so the fixpoint does not re-bin
+  * it. When BOTH sides stream, every interval is binned and there is no
+  * fallback branch (see the streaming note in `rewrite`).
   *
   * Bins are `BinSeconds` (3600 s) wide — ≳ the typical interval span, so
   * most intervals replicate into ≤ 2 bins.
-  *
-  * Config: spark.graft.rangeJoin.maxBinsPerInterval (default 256; ≤ 0
-  * disables the split and bins every interval unconditionally). Spark's
-  * own spark.sql.optimizer.excludedRules=graft.plans.RangeJoinRewrite
-  * turns the rule off.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
 
   private val PointBin = "__graft_rj_bin_p"
   private val IntervalBin = "__graft_rj_bin_i"
-  private val markerNames = Set(PointBin, IntervalBin, "__bin")
+  private val markerNames = Set(PointBin, IntervalBin)
 
   /** Bin width in seconds (see the object doc). */
   private val BinSeconds = 3600L
+
+  /** Widest interval, in bins, that a batch join bins (see the object doc). */
+  private val MaxBinsPerInterval = 256L
 
   /** Re-fire guard for the joins this rule GENERATES. The name-based
     * markerNames guard alone is not optimizer-stable for the fallback
@@ -100,9 +97,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan]
     */
   private val NoRewriteTag =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean]("graft.rangeJoin.noRewrite")
-
-  private def maxBinsPerInterval: Long =
-    conf.getConfString("spark.graft.rangeJoin.maxBinsPerInterval", "256").toLong
 
   private def isTs(e: Expression): Boolean =
     e.dataType == TimestampType || e.dataType == TimestampNTZType
@@ -191,7 +185,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan]
       val bothStreaming = left.isStreaming && right.isStreaming
       if (intervalSide.isStreaming && !bothStreaming) None
       else Some {
-      val maxBins = if (bothStreaming) 0 else maxBinsPerInterval
+      val maxBins = if (bothStreaming) 0 else MaxBinsPerInterval
       // point side: one bin column
       val pBinAlias = Alias(binOf(p, binMicros), PointBin)()
       val pointProj = Project(pointSide.output :+ pBinAlias, pointSide)

@@ -103,7 +103,8 @@ object EventStreams extends Serializable {
     * purchase-side watermark passes click_ts + 30min (Spark derives the
     * eviction bound from the time-interval condition) — the property that
     * keeps an unbounded 100 TB/day stream from accumulating state forever.
-    * StreamingSpec asserts pair-level equality with the batch RangeJoin.
+    * StreamingSpec asserts pair-level equality with the batch plain
+    * interval join planned without plans.RangeJoinRewrite.
     */
   private def attributionJoined(spark: SparkSession, dir: String, queryName: String): DataFrame = withStreamConf(spark) {
     val e = eventsStream(spark, dir)

@@ -3,6 +3,7 @@ package graft.operators
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import graft.plans.NativeAsOfJoin
 
 class AsOfJoinSpec extends SparkSpec {
 
@@ -22,7 +23,7 @@ class AsOfJoinSpec extends SparkSpec {
       (20L, ts("2024-01-01 12:00:00"), 3.0)
     ).toDF("k", "rt", "v")
 
-    val out = AsOfJoin.asof(left, right, "k", "t", "rt", Seq("v"))
+    val out = NativeAsOfJoin.asof(left, right, "k", "t", "rt", Seq("v"))
       .select("id", "asof_rt", "asof_v")
       .collect().map(r => r.getLong(0) -> ((Option(r.getTimestamp(1)), Option(r.get(2))))).toMap
 
@@ -36,7 +37,7 @@ class AsOfJoinSpec extends SparkSpec {
     import spark.implicits._
     val left = Seq((1L, 1L, ts("2024-01-01 10:00:00"))).toDF("id", "k", "t")
     val right = Seq((2L, ts("2024-01-01 09:00:00"), 9.9)).toDF("k", "rt", "v")
-    val out = AsOfJoin.asof(left, right, "k", "t", "rt", Seq("v")).collect()
+    val out = NativeAsOfJoin.asof(left, right, "k", "t", "rt", Seq("v")).collect()
     assert(out.length == 1 && out(0).isNullAt(out(0).fieldIndex("asof_v")))
   }
 }

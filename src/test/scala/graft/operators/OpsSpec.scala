@@ -224,22 +224,26 @@ class OpsSpec extends SparkSpec {
   test("binned range join matches the naive theta join and avoids nested loops") {
     val e = Tables.events(spark, sf001)
     val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"))
+      .select(col("user_id").as("c_uid"), col("ts").as("click_ts"))
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
       .withColumn("lo", col("p_ts") - expr("INTERVAL 30 MINUTES"))
-    val binned = RangeJoin.pointInInterval(
-      clicks, purchases, "click_ts", "lo", "p_ts", Seq("user_id"), binSeconds = 1800L)
-    val naive = clicks.as("c").join(purchases.as("p"),
-      expr("c.user_id = p.user_id AND c.click_ts >= p.lo AND c.click_ts <= p.p_ts"))
-    assert(binned.count() == naive.count())
-    val key = binned.select("purchase_id", "user_id", "click_ts").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSet
-    val naiveKey = naive.select(col("p.purchase_id"), col("p.user_id"), col("c.click_ts")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSet
-    assert(key == naiveKey)
-    // candidate generation must be an equi join — never a nested loop
+    def pairs() = clicks.join(purchases,
+        col("c_uid") === col("user_id") &&
+          col("click_ts") >= col("lo") && col("click_ts") <= col("p_ts"))
+      .select("purchase_id", "user_id", "click_ts")
+    def keys(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime)).toSeq.sorted
+    val binned = pairs()
+    // the naive theta join: the same spelling, planned without the rule
+    val naiveKey = graft.Session.withConf(spark,
+        "spark.sql.optimizer.excludedRules" -> graft.plans.RangeJoinRewrite.ruleName) {
+      keys(pairs())
+    }
+    assert(keys(binned) == naiveKey)
+    // candidate generation must be an equi join on the bin — never a nested loop
     val plan = binned.queryExecution.executedPlan.toString
+    assert(plan.contains("__graft_rj_bin"), plan.linesIterator.take(10).mkString("\n"))
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       plan.linesIterator.take(10).mkString("\n"))
   }

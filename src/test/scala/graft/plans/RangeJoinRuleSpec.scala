@@ -1,18 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{
+  BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
 import graft.{Session, SparkSpec, Tables}
-import graft.operators.RangeJoin
 
 /** RangeJoinRewrite — the optimizer rule that turns a naively-spelled
   * point-in-interval join into the binned equi join. Each test asserts
   * the PLAN property (no nested-loop, rule fired / correctly held back)
-  * and pins the rewritten result against the hand-built RangeJoin
-  * helper, which q68/q163's oracles already hash-verify cross-engine.
+  * and pins the rewritten result against the same join planned with the
+  * rule excluded; q68/q163's oracles hash-verify the rule cross-engine.
   */
-class RangeJoinRuleSpec extends SparkSpec {
+class RangeJoinRuleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def clicks: DataFrame =
     Tables.events(spark, sf001).filter(col("event_type") === "click")
@@ -28,6 +30,19 @@ class RangeJoinRuleSpec extends SparkSpec {
   private def planString(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Rows of `df` planned with the rule excluded: the plain, unbinned
+    * join. `df` is built inside the conf so its plan sees the exclusion.
+    */
+  private def unbinnedRows(df: => DataFrame): Seq[Row] =
+    Session.withConf(spark, "spark.sql.optimizer.excludedRules" -> RangeJoinRewrite.ruleName) {
+      val d = df
+      assert(!planString(d).contains("__graft_rj_bin"), planString(d).take(800))
+      d.collect().toSeq
+    }
+
+  private def sameRows(a: Seq[Row], b: Seq[Row]): Boolean =
+    a.diff(b).isEmpty && b.diff(a).isEmpty
+
   test("naive pure-range join (no equi key) plans the binned equi join, not a nested loop") {
     // without the rule this is a BroadcastNestedLoopJoin — the fatal
     // large×large shape. No user filter: the fixture's events are sparse
@@ -36,7 +51,7 @@ class RangeJoinRuleSpec extends SparkSpec {
     // is a Union: the binned equi branch carries every narrow interval
     // (here: all of them — 30-minute spans), and the wide-interval
     // fallback branch (runtime-empty here) keeps the original join shape
-    // for intervals past the maxBinsPerInterval cap — keyless, that
+    // for intervals past the rule's 256-bin cap — keyless, that
     // branch IS a nested loop, so the assertion pins the binned branch
     // specifically: a hash/sort equi join on the bin column.
     val p = clicks
@@ -50,14 +65,13 @@ class RangeJoinRuleSpec extends SparkSpec {
     assert(plan.matches(
       "(?s).*(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[__graft_rj_bin.*"),
       plan.take(1200))
-    // exactness: identical pair set to the uncapped nested-loop semantics,
-    // via the proven helper (keyless: join on bin only)
-    val viaHelper = RangeJoin.pointInInterval(
-        p, i, "click_ts", "lo", "p_ts", keys = Nil, binSeconds = 3600L)
-      .select("click_id", "purchase_id")
-    val viaRule = naive.select("click_id", "purchase_id")
-    assert(viaRule.exceptAll(viaHelper).isEmpty && viaHelper.exceptAll(viaRule).isEmpty)
-    assert(viaRule.count() > 0)
+    // exactness: identical pair set to the unbinned nested-loop join
+    val reference = unbinnedRows(p.join(i,
+        col("click_ts") >= col("lo") && col("click_ts") <= col("p_ts"))
+      .select("click_id", "purchase_id"))
+    val viaRule = naive.select("click_id", "purchase_id").collect().toSeq
+    assert(sameRows(viaRule, reference))
+    assert(viaRule.nonEmpty)
   }
 
   test("equi-key + interval conjunction gets the bin as an extra join key") {
@@ -67,15 +81,15 @@ class RangeJoinRuleSpec extends SparkSpec {
     val plan = planString(naive)
     assert(plan.contains("__graft_rj_bin"), plan.take(800))
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"))
-    // same aggregate as the registered q68 (which runs the helper): the
-    // rewritten naive spelling must reproduce it row-for-row
-    val viaRule = naive.groupBy("purchase_id")
-      .agg(count(lit(1)).as("n_clicks"))
-    val viaHelper = RangeJoin.pointInInterval(
-        clicks, purchases, "click_ts", "lo", "p_ts", Seq.empty, 3600L)
-      .filter(col("c_uid") === col("user_id"))
-      .groupBy("purchase_id").agg(count(lit(1)).as("n_clicks"))
-    assert(viaRule.exceptAll(viaHelper).isEmpty && viaHelper.exceptAll(viaRule).isEmpty)
+    // q68's aggregate: the rewritten spelling must reproduce the unbinned
+    // join's counts row-for-row
+    def perPurchase(j: DataFrame) =
+      j.groupBy("purchase_id").agg(count(lit(1)).as("n_clicks"))
+    val viaRule = perPurchase(naive).collect().toSeq
+    val reference = unbinnedRows(perPurchase(clicks.join(purchases,
+      col("c_uid") === col("user_id") &&
+        col("click_ts") >= col("lo") && col("click_ts") <= col("p_ts"))))
+    assert(sameRows(viaRule, reference))
   }
 
   test("strict bounds and flipped operand order still match; exactness preserved") {
@@ -105,11 +119,6 @@ class RangeJoinRuleSpec extends SparkSpec {
         col("click_ts") >= col("lo") && col("click_ts") <= col("p_ts"))
       assert(!planString(naive).contains("__graft_rj_bin"))
     }
-    // the helper's own output carries a __bin marker through the join —
-    // the guard must not double-bin it
-    val helper = RangeJoin.pointInInterval(
-      clicks, purchases, "click_ts", "lo", "p_ts", Seq.empty, 3600L)
-    assert(!planString(helper).contains("__graft_rj_bin"))
   }
 
   test("sentinel-dated (SCD2) intervals take the fallback branch, not a 70M-bin explode") {
@@ -156,15 +165,29 @@ class RangeJoinRuleSpec extends SparkSpec {
       ("u1", "2020-03-15 12:00:00.0", "v1"),
       ("u1", "2021-07-04 09:00:00.0", "v2"),
       ("u2", "2023-01-01 00:00:00.0", "v1")))
-    // every interval wide: cap=1 bin — still exact, all rows via fallback
-    Session.withConf(spark, "spark.graft.rangeJoin.maxBinsPerInterval" -> "1") {
-      assert(joined.count() === 3)
-    }
-    // cap off (≤ 0): single binned branch, no Union — the pre-cap shape
-    Session.withConf(spark, "spark.graft.rangeJoin.maxBinsPerInterval" -> "0") {
-      val narrowOnly = facts.join(dim.filter(col("ver") === "zzz"),
+    // every interval wide: the sentinel rows alone — still exact, all
+    // rows via the fallback (the 2020-03-15 fact now has no version)
+    val wideJoined = facts.join(dim.filter(year(col("valid_to")) === 9999),
+      col("f_uid") === col("uid") &&
         col("f_ts") >= col("valid_from") && col("f_ts") <= col("valid_to"))
-      assert(!planString(narrowOnly).contains("Union"))
+    val gotWide = wideJoined.select("f_uid", "f_ts", "ver").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1).toString, r.getString(2))).toSet
+    assert(gotWide === Set(
+      ("u1", "2021-07-04 09:00:00.0", "v2"),
+      ("u2", "2023-01-01 00:00:00.0", "v1")))
+  }
+
+  test("registry q68 and q163 join on the rule's point bin, never a nested loop") {
+    for (name <- Seq("q68_attribution_window", "q163_multitouch_attribution")) {
+      val df = graft.registry.Registry.queries(name)(spark, sf001)
+      df.collect() // materialize so AQE finalizes the plan
+      val plan = df.queryExecution.executedPlan
+      val joins = collectWithSubqueries(plan) { case j: BaseJoinExec => j }
+      assert(joins.exists(j => (j.leftKeys ++ j.rightKeys)
+          .exists(_.references.exists(_.name == "__graft_rj_bin_p"))), s"$name:\n$plan")
+      assert(!joins.exists {
+        case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => true
+        case _ => false }, s"$name:\n$plan")
     }
   }
 

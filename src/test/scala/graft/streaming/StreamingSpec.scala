@@ -66,14 +66,19 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime)).toSet
     val e = graft.Tables.events(spark, sf001)
     val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"))
+      .select(col("user_id").as("c_uid"), col("ts").as("click_ts"))
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
       .withColumn("lo", col("p_ts") - expr("INTERVAL 30 MINUTES"))
-    val batch = graft.operators.RangeJoin.pointInInterval(
-      clicks, purchases, "click_ts", "lo", "p_ts", Seq("user_id"), 1800L)
-      .select(col("purchase_id"), col("user_id"), col("click_ts"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime)).toSet
+    // the plain batch interval join, planned without the binning rule
+    val batch = graft.Session.withConf(spark,
+        "spark.sql.optimizer.excludedRules" -> graft.plans.RangeJoinRewrite.ruleName) {
+      clicks.join(purchases,
+          col("c_uid") === col("user_id") &&
+            col("click_ts") >= col("lo") && col("click_ts") <= col("p_ts"))
+        .select(col("purchase_id"), col("user_id"), col("click_ts"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime)).toSet
+    }
     assert(streamed == batch,
       s"stream-only: ${(streamed -- batch).take(3)}; batch-only: ${(batch -- streamed).take(3)}")
   }
