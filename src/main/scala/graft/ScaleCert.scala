@@ -171,7 +171,7 @@ object ScaleCert {
       println(s"[scale] fixture fingerprint changed — rebuilding $dest")
       Files.delete(marker) // a crash mid-rebuild must not leave a stale OK
     }
-    def load(t: String): DataFrame = spark.read.parquet(s"$sfDir/$t.parquet")
+    def load(t: String): DataFrame = Tables.raw(spark, sfDir, t)
     // each table lands as ONE FILE named <t>.parquet, exactly the fixture
     // layout: the streaming harnesses symlink `<dir>/events.parquet` into
     // their staging dir and a parquet DIRECTORY there streams zero rows.

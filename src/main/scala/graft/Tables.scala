@@ -1,14 +1,29 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
-/** Loaders for the driver fixture tables (see /root/repo/FIXTURES.md).
+/** Loaders for the driver fixture tables (see FIXTURES.md), and
+  * the one place that opens a fixture.
   *
   * All loads are plain parquet scans so Catalyst column pruning and filter
   * pushdown reach the file source. At cluster scale these would be
   * partitioned table locations; the API shape is identical.
+  *
+  * Every load passes the fixture's physical schema from [[schema]], a
+  * JVM-wide memo, so it plans without Spark's footer-merge job (a
+  * schema-less `spark.read.parquet` runs one job per call to infer it).
+  * An entry is keyed on the qualified path, on the name, length and
+  * modification time of every leaf file under it (listed through the
+  * Hadoop FileSystem API, so any file system works), and on the session's
+  * `spark.sql.legacy.parquet.nanosAsLong`. The inferred schema
+  * is a function of exactly these, so the memo needs no SparkContext in
+  * its key and no eviction: a table rewritten at the same path has new
+  * leaf files, hence a new key, and never meets its old schema.
   */
 object Tables {
   val tpch: Seq[String] =
@@ -18,8 +33,40 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, dir)
-      case n        => spark.read.parquet(s"$dir/$n.parquet")
+      case n        => raw(spark, dir, n)
     }
+
+  /** `<dir>/<table>.parquet` as stored: its physical schema, no
+    * normalisation (the events `ts` keeps its file type).
+    */
+  def raw(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  /** nanosAsLong turns the events `ts` NANOS shape into a Long. */
+  private final case class SchemaKey(path: String, leaves: Seq[(String, Long, Long)],
+      nanosAsLong: Option[String])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** The physical schema of the parquet file or directory at `path`,
+    * inferred once per [[SchemaKey]]; a concurrent open of the same files
+    * waits for that one inference.
+    */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val leaves = Seq.newBuilder[(String, Long, Long)]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      leaves += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val key = SchemaKey(fs.makeQualified(p).toString, leaves.result().sorted,
+      spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong"))
+    schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")
@@ -39,8 +86,8 @@ object Tables {
 
   /** The events fixture, with `ts` normalised by [[eventsTs]]. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    eventsTs(raw.schema).normalize(raw)
+    val physical = raw(spark, dir, "events")
+    eventsTs(physical.schema).normalize(physical)
   }
 
   /** What a harness does with the events `ts` column, given the frame's

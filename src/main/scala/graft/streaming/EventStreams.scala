@@ -336,7 +336,7 @@ object EventStreams extends Serializable {
                               q: org.apache.spark.sql.streaming.StreamingQuery,
                               dayOffsets: Seq[Long] = Seq(10L, 11L),
                               linkPrefix: String = ""): Unit = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = graft.Tables.raw(spark, dir, "events")
     // the heartbeat is read back with the fixture's schema: shift `ts` in
     // its physical type
     val shift = graft.Tables.eventsTs(raw.schema).plusDays

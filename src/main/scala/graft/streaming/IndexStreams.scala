@@ -126,7 +126,11 @@ object IndexStreams {
       try q.processAllAvailable() finally q.stop()
       require(version >= 1, "stream produced no batches")
 
-      (spark.read.parquet(s"$pairsDir/batch_*").orderBy("id_a", "id_b"),
+      // the batch dirs by name: a glob path makes Spark's sink-metadata
+      // probe look for a directory literally named `batch_*`
+      val batches = pairsDir.toFile.listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("batch_")).map(_.toString).sorted
+      (spark.read.parquet(batches.toSeq: _*).orderBy("id_a", "id_b"),
         spark.read.parquet(indexPath(version)))
     }
 

@@ -273,7 +273,8 @@ object StreamHarness {
     batch.foreachPartition((it: Iterator[Row]) => it.foreach(_ => ()))
 
   /** The fixture `<dir>/<table>.parquet` as a file stream, with the
-    * fixture's own schema (read once), and the stage dir it streams.
+    * fixture's own schema (from [[graft.Tables.raw]], inferred once per
+    * file), and the stage dir it streams.
     * FileStreamSource reads a directory and the fixture is one file, so
     * the stage is a [[TempDirs]] dir holding one symlink to it —
     * TempDirs, not `File.deleteOnExit`, which skips non-empty dirs and
@@ -283,7 +284,7 @@ object StreamHarness {
     */
   def fixtureStream(spark: SparkSession, dir: String, table: String): (DataFrame, Path) = {
     val file = Paths.get(s"$dir/$table.parquet").toAbsolutePath
-    val schema = spark.read.parquet(file.toString).schema
+    val schema = graft.Tables.raw(spark, dir, table).schema
     val stage = TempDirs.create(s"graft_${table}_stream_")
     Files.createSymbolicLink(stage.resolve(s"$table.parquet"), file)
     (spark.readStream.schema(schema).parquet(stage.toString), stage)
