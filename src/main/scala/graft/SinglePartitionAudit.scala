@@ -340,7 +340,7 @@ object SinglePartitionAudit {
     }
   }
 
-  /** Known-benign UNMEASURED exchanges, keyed "queryName|origin". An
+  /** Known-benign UNMEASURED exchanges, keyed "<registry name>|<origin>". An
     * unmeasured exchange (planned but never executed at this SF — e.g.
     * behind an AQE-pruned branch) could be a funnel that only
     * materializes at larger scale, so since r18 it FAILS the run (exit 3)

@@ -784,8 +784,7 @@ object DedupQueries {
     "q146_stream_windowed_dedup",
     (s, dir) => {
       val (docs, _) = graft.streaming.StreamHarness.fixtureStream(s, dir, "documents")
-      graft.streaming.DedupStreams.windowedCrossSourceDedup(
-        s, docs, queryName = "stream_windowed_dedup_q146")
+      graft.streaming.DedupStreams.windowedCrossSourceDedup(s, docs)
     },
     Some("""WITH d AS (
         SELECT doc_id,
@@ -1013,8 +1012,7 @@ object DedupQueries {
     */
   val q215 = GQuery(
     "q215_stream_minhash_index",
-    (s, dir) => graft.streaming.IndexStreams.streamingMinhashIndex(
-      s, dir, queryName = "stream_minhash_index_q215"),
+    (s, dir) => graft.streaming.IndexStreams.streamingMinhashIndex(s, dir),
     Some {
       val mins = (0 until 8).map(i => s"min(xor(h1, h2 * $i)) AS m$i").mkString(", ")
       val bandArms = (0 until 4).map { bnd =>
@@ -1049,8 +1047,7 @@ object DedupQueries {
     */
   val q227 = GQuery(
     "q227_stream_components",
-    (s, dir) => graft.streaming.GraphStreams.streamingComponents(
-      s, dir, queryName = "stream_components_q227"),
+    (s, dir) => graft.streaming.GraphStreams.streamingComponents(s, dir),
     q83.oracle)
 
   def all: Seq[GQuery] = Seq(q47, q48, q56, q83, q99, q105, q140, q142, q146, q211, q214, q215, q227, q268)

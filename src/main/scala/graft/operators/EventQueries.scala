@@ -133,13 +133,13 @@ object EventQueries {
              coalesce(sv, 0.0) AS sum_value
       FROM axis LEFT JOIN daily ON axis.d = daily.d ORDER BY axis.d"""))
 
-  /** Structured Streaming twin of q30: readStream → watermark → tumbling
+  /** Structured Streaming twin of q30: file stream → watermark → tumbling
     * agg → memory sink. Shares q30's DuckDB oracle — the streaming and
     * batch answers must be numerically identical on a bounded input.
     */
   val q35 = GQuery(
     "q35_stream_tumbling",
-    (s, dir) => graft.streaming.EventStreams.tumblingCounts(s, dir, "stream_tumbling_q35"),
+    (s, dir) => graft.streaming.EventStreams.tumblingCounts(s, dir),
     q30.oracle)
 
   /** Ordered funnel (view → click → purchase): per-user min event times,
@@ -414,8 +414,7 @@ object EventQueries {
     "q100_stream_neardup",
     (s, dir) => {
       val (docs, _) = graft.streaming.StreamHarness.fixtureStream(s, dir, "documents")
-      graft.streaming.DedupStreams.nearDupStreamMd5(
-        s, docs.filter(col("doc_id") % 3 === 0), queryName = "stream_neardup_q100")
+      graft.streaming.DedupStreams.nearDupStreamMd5(s, docs.filter(col("doc_id") % 3 === 0))
     },
     Some {
       val nH = 8
@@ -474,7 +473,7 @@ object EventQueries {
   val q129 = GQuery(
     "q129_stream_sessions",
     (s, dir) => graft.streaming.EventStreams
-      .sessionizeStream(s, dir, queryName = "stream_sessions_q129")
+      .sessionizeStream(s, dir)
       .select(col("user_id"),
         col("session_start").cast("timestamp_ntz").as("session_start"),
         col("session_end").cast("timestamp_ntz").as("session_end"),
@@ -504,7 +503,7 @@ object EventQueries {
   val q249 = GQuery(
     "q249_tws_sessions",
     (s, dir) => graft.streaming.EventStreams
-      .sessionizeTws(s, dir, queryName = "stream_sessions_q249")
+      .sessionizeTws(s, dir)
       .select(col("user_id"),
         col("session_start").cast("timestamp_ntz").as("session_start"),
         col("session_end").cast("timestamp_ntz").as("session_end"),
@@ -523,7 +522,7 @@ object EventQueries {
   val q134 = GQuery(
     "q134_stream_session_evict",
     (s, dir) => graft.streaming.EventStreams
-      .sessionizeEvictAll(s, dir, queryName = "stream_sessions_evict_q134")
+      .sessionizeEvictAll(s, dir)
       .select(col("user_id"),
         col("session_start").cast("timestamp_ntz").as("session_start"),
         col("session_end").cast("timestamp_ntz").as("session_end"),
@@ -549,7 +548,7 @@ object EventQueries {
   val q250 = GQuery(
     "q250_tws_session_evict",
     (s, dir) => graft.streaming.EventStreams
-      .sessionizeTwsEvict(s, dir, queryName = "stream_sessions_tws_evict_q250")
+      .sessionizeTwsEvict(s, dir)
       .select(col("user_id"),
         col("session_start").cast("timestamp_ntz").as("session_start"),
         col("session_end").cast("timestamp_ntz").as("session_end"),
@@ -569,7 +568,7 @@ object EventQueries {
   val q138 = GQuery(
     "q138_stream_attribution",
     (s, dir) => graft.streaming.EventStreams
-      .attributionStreamAgg(s, dir, queryName = "stream_attribution_q138"),
+      .attributionStreamAgg(s, dir),
     q68.oracle)
 
   /** First-order Markov model of user behavior: per-user event-type
@@ -804,7 +803,7 @@ object EventQueries {
   val q162 = GQuery(
     "q162_stream_sliding_trend",
     (s, dir) => graft.streaming.EventStreams
-      .slidingTrending(s, dir, queryName = "stream_sliding_trend_q162"),
+      .slidingTrending(s, dir),
     Some("""WITH e AS (
         SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) - to_hours(k) AS win_start, event_type
         FROM events CROSS JOIN (SELECT unnest([0,1]) AS k)),
@@ -1457,7 +1456,7 @@ object EventQueries {
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-      val counts = graft.streaming.StreamHarness.runToMemory(agg, "stream_cusum_q222",
+      val counts = graft.streaming.StreamHarness.runToMemory(agg,
         org.apache.spark.sql.streaming.OutputMode.Complete)()
       // localCheckpoint: the finisher references the counts THREE times
       // (axis, types, the dense left join) and the raw memory-sink plan

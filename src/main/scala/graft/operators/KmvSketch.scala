@@ -235,8 +235,7 @@ object KmvSketch {
     */
   val q221 = GQuery(
     "q221_stream_kmv",
-    (s, dir) => graft.streaming.SketchStreams.streamingKmv(
-      s, dir, queryName = "stream_kmv_q221"),
+    (s, dir) => graft.streaming.SketchStreams.streamingKmv(s, dir),
     q219.oracle)
 
   def all: Seq[GQuery] = Seq(q219, q221)

@@ -142,8 +142,7 @@ object PipelineQueries {
     "q114_stream_contamination",
     (s, dir) => {
       val (docs, stage) = graft.streaming.StreamHarness.fixtureStream(s, dir, "documents")
-      graft.streaming.ContaminationStreams.contaminationStream(
-        s, docs, stage.toString, dir, queryName = "stream_contamination_q114")
+      graft.streaming.ContaminationStreams.contaminationStream(s, docs, stage.toString, dir)
     },
     Some(contaminationOracle))
 

@@ -172,8 +172,7 @@ object QuantileSketchQueries {
     */
   val q226 = GQuery(
     "q226_stream_quantile_sketch",
-    (s, dir) => graft.streaming.SketchStreams.streamingQuantileSketch(
-      s, dir, queryName = "stream_qsketch_q226"),
+    (s, dir) => graft.streaming.SketchStreams.streamingQuantileSketch(s, dir),
     q225.oracle)
 
   def all: Seq[GQuery] = Seq(q225, q226)

@@ -203,8 +203,7 @@ object TableMaintenance {
     "q181_stream_rollup",
     (s, dir) => {
       val (orders, _) = graft.streaming.StreamHarness.fixtureStream(s, dir, "orders")
-      graft.streaming.RollupStreams.streamingRollup(
-        s, orders, dir, queryName = "stream_rollup_q181")
+      graft.streaming.RollupStreams.streamingRollup(s, orders, dir)
     },
     q179.oracle)
 

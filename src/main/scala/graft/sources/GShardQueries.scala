@@ -52,8 +52,7 @@ object GShardQueries {
       val source = s.readStream.format("graft.sources.GShardSource")
         .option("maxFilesPerTrigger", 3)
         .load(stage)
-      graft.streaming.StreamHarness.runVersionedMerge(source, "gshard-q236-state-",
-          "gshard_stream") { (prev, batch) =>
+      graft.streaming.StreamHarness.runVersionedMerge(source) { (prev, batch) =>
         val delta = batch.groupBy("source")
           .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
         prev.fold(delta)(_.unionByName(delta))

@@ -13,7 +13,7 @@ import graft.functions.Metrics
   * are flagged before they ever enter the training corpus (the batch
   * query finds them after the fact).
   *
-  * Dataflow: readStream → graft_ngrams generator → xxhash64 keys →
+  * Dataflow: file stream → graft_ngrams generator → xxhash64 keys →
   * stream-static equi join against the distinct-reduced benchmark set →
   * one stateful aggregation (collect_set per doc — state is bounded by
   * the CONTAMINATED volume only, because the join prunes clean n-grams
@@ -37,8 +37,7 @@ object ContaminationStreams {
     *                streamed documents
     */
   def contaminationStream(spark: SparkSession, source: DataFrame, landing: String,
-                          staticDir: String, mod: Long = 17, n: Int = 8,
-                          queryName: String = "stream_contamination"): DataFrame =
+                          staticDir: String, mod: Long = 17, n: Int = 8): DataFrame =
     StreamHarness.withStreamConf(spark) {
     // static side: benchmark n-gram set, distinct-reduced (broadcast-sized
     // relative to the corpus; Spark re-plans it into every micro-batch)
@@ -59,7 +58,7 @@ object ContaminationStreams {
       // doing it inside the one aggregation keeps the query single-stateful
       .agg(collect_set(col("ng")).as("ngs"))
 
-    val hits = StreamHarness.runToMemory(hitsQuery, queryName, OutputMode.Complete)()
+    val hits = StreamHarness.runToMemory(hitsQuery, OutputMode.Complete)()
       .select(col("doc_id"), size(col("ngs")).cast("long").as("n_contaminated"))
 
     // batch-side totals (row-local per doc — no stream state needed),

@@ -113,12 +113,11 @@ object DedupStreams {
     * test/local harness shape, like the other EventStreams entry points.
     */
   def nearDupStream(spark: SparkSession, source: DataFrame,
-                    minAgree: Int = NumHashes / 2, bucketCap: Int = 50,
-                    queryName: String = "stream_neardup"): DataFrame =
+                    minAgree: Int = NumHashes / 2, bucketCap: Int = 50): DataFrame =
     runNearDupStream(spark, source, sigOf(_),
       bands = Bands, rows = NumHashes / Bands,
       bandKey = (sig, b, r) => xxhash64(slice(sig, b * r + 1, r).cast("string")).cast("string"),
-      minAgree = minAgree, bucketCap = bucketCap, queryName = queryName)
+      minAgree = minAgree, bucketCap = bucketCap)
 
   /** The md5/K-M twin of [[nearDupStream]] (8 slots, 4 string-keyed bands —
     * the q56/q83/q99 signature scheme): identical stateful dataflow, but
@@ -128,20 +127,18 @@ object DedupStreams {
     * about cross-engine).
     */
   def nearDupStreamMd5(spark: SparkSession, source: DataFrame,
-                       nHashes: Int = 8, minAgree: Int = 4, bucketCap: Int = 50,
-                       queryName: String = "stream_neardup_md5"): DataFrame =
+                       nHashes: Int = 8, minAgree: Int = 4, bucketCap: Int = 50): DataFrame =
     runNearDupStream(spark, source, sigOfMd5(_, nHashes),
       bands = nHashes / 2, rows = 2,
       bandKey = (sig, b, r) =>
         array_join(transform(slice(sig, b * r + 1, r), _.cast("string")), "-"),
-      minAgree = minAgree, bucketCap = bucketCap, queryName = queryName)
+      minAgree = minAgree, bucketCap = bucketCap)
 
   private def runNearDupStream(spark: SparkSession, source: DataFrame,
                                sigFn: String => Option[Array[Long]],
                                bands: Int, rows: Int,
                                bandKey: (Column, Int, Int) => Column,
-                               minAgree: Int, bucketCap: Int,
-                               queryName: String): DataFrame =
+                               minAgree: Int, bucketCap: Int): DataFrame =
     StreamHarness.withStreamConf(spark) {
     import spark.implicits._
     val docs = source
@@ -189,7 +186,7 @@ object DedupStreams {
       .groupByKey(d => (d.band, d.bh))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
     // a pair found through several bands appears once per band — collapse
-    StreamHarness.runToMemory(dups, queryName, OutputMode.Append)()
+    StreamHarness.runToMemory(dups, OutputMode.Append)()
       .groupBy("doc_id", "dup_of").agg(max("n_eq").as("n_eq"))
       .orderBy("doc_id", "dup_of")
   }
@@ -213,8 +210,7 @@ object DedupStreams {
     * step on the sink.
     */
   def windowedCrossSourceDedup(spark: SparkSession, source: DataFrame,
-                               windowMinutes: Int = 60,
-                               queryName: String = "stream_windowed_dedup"): DataFrame =
+                               windowMinutes: Int = 60): DataFrame =
     StreamHarness.withStreamConf(spark) {
     // canonical fingerprint (q43's sorted-distinct-token form): catches
     // reorder-only mirrors, which is what actually crosses source feeds
@@ -239,7 +235,7 @@ object DedupStreams {
     val joined = inc.join(ref,
       expr(s"""a_fp = b_fp AND
                a_ts >= b_ts - INTERVAL $windowMinutes MINUTES AND a_ts <= b_ts"""))
-    StreamHarness.runToMemory(joined, queryName, OutputMode.Append)()
+    StreamHarness.runToMemory(joined, OutputMode.Append)()
       .groupBy(col("b_id").as("doc_id"))
       .agg(min("a_id").as("dup_of"), count(lit(1)).as("n_ref_dups"))
       .orderBy("doc_id")

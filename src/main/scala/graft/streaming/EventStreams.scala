@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import StreamHarness.{runToMemory, withStreamConf}
 
 /** Structured Streaming twins of the batch event-time queries
-  * (SURVEY.md §2.6 streaming row): readStream → watermark → windowed agg /
+  * (SURVEY.md §2.6 streaming row): file stream → watermark → windowed agg /
   * stateful sessionization → sink. Locally a parquet file drives the
   * stream synchronously (processAllAvailable); on a cluster the same code
   * reads a directory/Kafka source incrementally — only the source/sink
@@ -46,8 +46,7 @@ object EventStreams extends Serializable {
     * dataflow: at production scale the same query reads Kafka and the
     * finisher runs on each emitted window.
     */
-  def slidingTrending(spark: SparkSession, dir: String,
-      queryName: String = "stream_sliding_trend"): DataFrame = withStreamConf(spark) {
+  def slidingTrending(spark: SparkSession, dir: String): DataFrame = withStreamConf(spark) {
     val agg = eventsStream(spark, dir)
       // no withWatermark: Complete mode ignores it for eviction, and an
       // inert watermark would misstate the query's state story (doc above)
@@ -55,7 +54,7 @@ object EventStreams extends Serializable {
       .agg(count(lit(1)).as("n"))
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy("win_start").orderBy(col("n").desc, col("event_type").asc)
-    runToMemory(agg, queryName, OutputMode.Complete)()
+    runToMemory(agg, OutputMode.Complete)()
       .select(col("w.start").cast("timestamp_ntz").as("win_start"), col("event_type"), col("n"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= 3)
@@ -69,13 +68,13 @@ object EventStreams extends Serializable {
     * state (the watermark does not evict); Append is the bounded-state
     * production form with identical per-window numbers.
     */
-  def tumblingCounts(spark: SparkSession, dir: String, queryName: String = "stream_tumbling"): DataFrame = withStreamConf(spark) {
+  def tumblingCounts(spark: SparkSession, dir: String): DataFrame = withStreamConf(spark) {
     val agg = eventsStream(spark, dir)
       // no withWatermark: inert under Complete mode (see slidingTrending)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         graft.functions.Metrics.canonRound(graft.functions.Metrics.exactSum(col("value")), 4).as("sum_value"))
-    runToMemory(agg, queryName, OutputMode.Complete)()
+    runToMemory(agg, OutputMode.Complete)()
       .select(col("w.start").cast("timestamp_ntz").as("hour_start"),
         col("event_type"), col("n"), col("sum_value"))
       .orderBy("hour_start", "event_type")
@@ -87,13 +86,13 @@ object EventStreams extends Serializable {
     * (only dedup keys containing the event-time column are evicted), which
     * would OOM a long-running job.
     */
-  def dedupStream(spark: SparkSession, dir: String, queryName: String = "stream_dedup"): DataFrame =
+  def dedupStream(spark: SparkSession, dir: String): DataFrame =
     withStreamConf(spark) {
       runToMemory(
         eventsStream(spark, dir)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id"),
-        queryName, OutputMode.Append)()
+        OutputMode.Append)()
     }
 
   /** Stream-stream interval join: clicks joined to purchases of the same
@@ -106,7 +105,7 @@ object EventStreams extends Serializable {
     * StreamingSpec asserts pair-level equality with the batch plain
     * interval join planned without plans.RangeJoinRewrite.
     */
-  private def attributionJoined(spark: SparkSession, dir: String, queryName: String): DataFrame = withStreamConf(spark) {
+  private def attributionJoined(spark: SparkSession, dir: String): DataFrame = withStreamConf(spark) {
     val e = eventsStream(spark, dir)
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
@@ -118,12 +117,11 @@ object EventStreams extends Serializable {
     val joined = clicks.join(purchases,
       expr("""c_user = p_user AND
               click_ts >= p_ts - INTERVAL 30 MINUTES AND click_ts <= p_ts"""))
-    runToMemory(joined, queryName, OutputMode.Append)()
+    runToMemory(joined, OutputMode.Append)()
   }
 
-  def attributionStream(spark: SparkSession, dir: String,
-                        queryName: String = "stream_attribution"): DataFrame =
-    attributionJoined(spark, dir, queryName)
+  def attributionStream(spark: SparkSession, dir: String): DataFrame =
+    attributionJoined(spark, dir)
       .select(col("purchase_id"), col("p_user").as("user_id"), col("click_ts"))
       .orderBy("purchase_id", "click_ts")
 
@@ -133,9 +131,8 @@ object EventStreams extends Serializable {
     * join and its watermark-bounded state) ran in the stream. Output grain
     * and oracle are exactly q68's.
     */
-  def attributionStreamAgg(spark: SparkSession, dir: String,
-                           queryName: String = "stream_attribution_agg"): DataFrame =
-    attributionJoined(spark, dir, queryName)
+  def attributionStreamAgg(spark: SparkSession, dir: String): DataFrame =
+    attributionJoined(spark, dir)
       .groupBy("purchase_id")
       .agg(max(col("p_user")).as("user_id"),
         max(col("p_ts")).cast("timestamp_ntz").as("purchase_ts"),
@@ -221,8 +218,7 @@ object EventStreams extends Serializable {
     * registry twin (q129) is oracle-checked: batch sessionization minus
     * each user's final session.
     */
-  def sessionizeStream(spark: SparkSession, dir: String,
-                       queryName: String = "stream_sessions"): DataFrame = withStreamConf(spark) {
+  def sessionizeStream(spark: SparkSession, dir: String): DataFrame = withStreamConf(spark) {
     import spark.implicits._
     val events = eventsStream(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -237,7 +233,7 @@ object EventStreams extends Serializable {
     val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
-    runToMemory(sessions, queryName, OutputMode.Append)().orderBy("user_id", "session_start")
+    runToMemory(sessions, OutputMode.Append)().orderBy("user_id", "session_start")
   }
 
   /** Sessionization via Spark 4's transformWithState — the NEW arbitrary
@@ -254,8 +250,7 @@ object EventStreams extends Serializable {
     * transformWithState requires the RocksDB state store provider, so
     * the harness runs under `withStreamConf(spark, rocksDb = true)`.
     */
-  def sessionizeTws(spark: SparkSession, dir: String,
-                    queryName: String = "stream_sessions_tws"): DataFrame =
+  def sessionizeTws(spark: SparkSession, dir: String): DataFrame =
     withStreamConf(spark, rocksDb = true) {
       import spark.implicits._
       val sessions = eventsStream(spark, dir)
@@ -263,7 +258,7 @@ object EventStreams extends Serializable {
         .as[Event]
         .groupByKey(_.user_id)
         .transformWithState(new SessionProcessor, TimeMode.None(), OutputMode.Append())
-      runToMemory(sessions, queryName, OutputMode.Append)().orderBy("user_id", "session_start")
+      runToMemory(sessions, OutputMode.Append)().orderBy("user_id", "session_start")
     }
 
   /** Sessionization with EVENT-TIME TIMEOUT eviction — the piece q129's
@@ -288,8 +283,7 @@ object EventStreams extends Serializable {
     * timeout can fire, so no eviction can ever split a session an
     * unprocessed event would have extended.
     */
-  def sessionizeEvictAll(spark: SparkSession, dir: String,
-                         queryName: String = "stream_sessions_evict"): DataFrame = withStreamConf(spark) {
+  def sessionizeEvictAll(spark: SparkSession, dir: String): DataFrame = withStreamConf(spark) {
     import spark.implicits._
     val (stream, stage) = eventsStreamStaged(spark, dir)
     val events = stream
@@ -316,7 +310,8 @@ object EventStreams extends Serializable {
     val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-    runToMemory(sessions, queryName, OutputMode.Append)(driveHeartbeats(spark, dir, stage, _))
+    runToMemory(sessions, OutputMode.Append)(
+        driveHeartbeats(graft.Tables.raw(spark, dir, "events"), stage, _))
       .filter(col("user_id") >= 0)
       .orderBy("user_id", "session_start")
   }
@@ -326,26 +321,33 @@ object EventStreams extends Serializable {
     * the engine's optional no-data microbatch. Each heartbeat harness
     * passes this as the `afterDrain` hook of
     * [[StreamHarness.runToMemory]], which stops the query even when a
-    * heartbeat write throws. The day offsets and the link-name prefix
-    * are the caller's: q255 derives its offsets from the fixture span
-    * (no profile may flush mid-stream) and prefixes its links so they
-    * sort after the slice files.
+    * heartbeat write throws.
+    *
+    * `files` is a batch read of the files the stream reads (the raw
+    * fixture for q134/q250, the normalised events for q255's slices):
+    * each heartbeat is written in exactly its schema, `ts` shifted in the
+    * type it has there, or the stream's read of the heartbeat fails with
+    * a column type mismatch when the fixture's `ts` type differs from the
+    * slices'. The day offsets and the link-name prefix are the caller's:
+    * q255 derives its offsets from the fixture span (no profile may flush
+    * mid-stream) and prefixes its links so they sort after the slice
+    * files.
     */
-  private[streaming] def driveHeartbeats(spark: SparkSession, dir: String,
-                              stage: java.nio.file.Path,
+  private[streaming] def driveHeartbeats(files: DataFrame, stage: java.nio.file.Path,
                               q: org.apache.spark.sql.streaming.StreamingQuery,
                               dayOffsets: Seq[Long] = Seq(10L, 11L),
                               linkPrefix: String = ""): Unit = {
-    val raw = graft.Tables.raw(spark, dir, "events")
-    // the heartbeat is read back with the fixture's schema: shift `ts` in
-    // its physical type
-    val shift = graft.Tables.eventsTs(raw.schema).plusDays
+    val shift = graft.Tables.eventsTs(files.schema).plusDays
+    val fixed = Map("event_id" -> lit(-1L), "user_id" -> lit(-1L),
+      "event_type" -> lit("heartbeat"), "value" -> lit(0.0), "props" -> lit("{}"))
     dayOffsets.zipWithIndex.foreach { case (days, i) =>
       val name = s"hb${i + 1}"
       val hbDir = TempDirs.create(s"graft_${name}_")
-      raw.orderBy(col("ts").desc).limit(1)
-        .select(lit(-1L).as("event_id"), shift(days), lit(-1L).as("user_id"),
-          lit("heartbeat").as("event_type"), lit(0.0).as("value"), lit("{}").as("props"))
+      files.orderBy(col("ts").desc).limit(1)
+        .select(files.schema.fields.map { f =>
+          val c = if (f.name == "ts") shift(days) else fixed.getOrElse(f.name, col(f.name))
+          c.cast(f.dataType).as(f.name)
+        }: _*)
         .write.mode("overwrite").parquet(hbDir.toString)
       val part = hbDir.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.createSymbolicLink(
@@ -365,8 +367,7 @@ object EventStreams extends Serializable {
     * gap-closed = batch-sessionization identity, so q250 reuses q134's
     * oracle VERBATIM.
     */
-  def sessionizeTwsEvict(spark: SparkSession, dir: String,
-                         queryName: String = "stream_sessions_tws_evict"): DataFrame =
+  def sessionizeTwsEvict(spark: SparkSession, dir: String): DataFrame =
     withStreamConf(spark, rocksDb = true) {
       import spark.implicits._
       import org.apache.spark.sql.streaming.ExpiredTimerInfo
@@ -392,7 +393,8 @@ object EventStreams extends Serializable {
         .as[Event]
         .groupByKey(_.user_id)
         .transformWithState(new EvictingProcessor, TimeMode.EventTime(), OutputMode.Append())
-      runToMemory(sessions, queryName, OutputMode.Append)(driveHeartbeats(spark, dir, stage, _))
+      runToMemory(sessions, OutputMode.Append)(
+          driveHeartbeats(graft.Tables.raw(spark, dir, "events"), stage, _))
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "session_start")
     }

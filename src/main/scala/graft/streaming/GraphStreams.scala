@@ -46,18 +46,15 @@ object GraphStreams {
     * the component forest across them, and return q83's cluster report
     * computed from the STREAM-BUILT state.
     */
-  def streamingComponents(spark: SparkSession, dir: String,
-                          queryName: String = "stream_components"): DataFrame =
+  def streamingComponents(spark: SparkSession, dir: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
       // the edge pipeline (minhash + banded self-join + eq-count filter)
       // runs exactly ONCE: stageSlices writes every slice in a single
-      // pass (r19), so the eager cache+count that used to shield it from
-      // three per-slice scans is gone
+      // pass, so it needs no cache+count against three per-slice scans
       val edges = DedupQueries.dedupEdges(spark, dir)
-      val (stage, schema) = StreamHarness.stageSlices(
-        edges, pmod(xxhash64(col("u"), col("v")), lit(3)), 0 to 2, "graft_cc_stage_")
-      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
-        "graft_cc_state_", queryName) { (prev, batch) =>
+      val (slices, _) = StreamHarness.stageSlices(
+        edges, pmod(xxhash64(col("u"), col("v")), lit(3)), 0 to 2)
+      val state = StreamHarness.runVersionedMerge(slices) { (prev, batch) =>
         mergeStep(prev, batch.select(col("u"), col("v")))
       }
       DedupQueries.clusterReport(spark, dir, state)

@@ -66,15 +66,13 @@ object IndexStreams {
     * slices, maintain the index per batch, and return the accumulated
     * candidate-pair log: (id_a, id_b, n_bands) over the whole corpus.
     */
-  def streamingMinhashIndex(spark: SparkSession, dir: String,
-      queryName: String = "stream_minhash_index"): DataFrame =
-    streamingMinhashIndexWithState(spark, dir, queryName)._1
+  def streamingMinhashIndex(spark: SparkSession, dir: String): DataFrame =
+    streamingMinhashIndexWithState(spark, dir)._1
 
   /** As [[streamingMinhashIndex]], also returning the FINAL index table
     * (doc_id, band, bh) — StreamingSpec pins it equal to the batch build.
     */
-  def streamingMinhashIndexWithState(spark: SparkSession, dir: String,
-      queryName: String = "stream_minhash_index"): (DataFrame, DataFrame) =
+  def streamingMinhashIndexWithState(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     StreamHarness.withStreamConf(spark) {
       val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val base = docs.filter(col("doc_id") % 3 === 0)
@@ -95,8 +93,8 @@ object IndexStreams {
       baseBands.unpersist()
 
       // landing slices: two micro-batches of new documents
-      val (stage, schema) = StreamHarness.stageSlices(
-        streamed, (col("doc_id") % 3).cast("int"), Seq(1, 2), "graft_mhidx_stage_")
+      val (slices, _) = StreamHarness.stageSlices(
+        streamed, (col("doc_id") % 3).cast("int"), Seq(1, 2))
 
       var version = 0L
       var lastApplied = -1L
@@ -121,9 +119,7 @@ object IndexStreams {
           batchBands.unpersist()
         }
       }
-      val q = StreamHarness.sliceStream(spark, stage, schema)
-        .writeStream.foreachBatch(applyBatch).queryName(queryName).start()
-      try q.processAllAvailable() finally q.stop()
+      StreamHarness.runQuery(slices.writeStream.foreachBatch(applyBatch))()
       require(version >= 1, "stream produced no batches")
 
       // the batch dirs by name: a glob path makes Spark's sink-metadata

@@ -22,17 +22,15 @@ object PreferenceStreams {
     * micro-batches, maintain the win-matrix state, and return q242's
     * ranking computed from the STREAM-BUILT matrix.
     */
-  def streamingBradleyTerry(spark: SparkSession, dir: String,
-                            queryName: String = "stream_bt"): DataFrame =
+  def streamingBradleyTerry(spark: SparkSession, dir: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
       val docs = graft.Tables.documents(spark, dir)
       // the judgment stream: generation happens batch-side (it needs
       // the adjacency window); what STREAMS is the per-event grain
       val comps = BradleyTerry.comparisonRows(docs)
-      val (stage, schema) = StreamHarness.stageSlices(
-        comps, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_bt_stage_")
-      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
-        "graft_bt_state_", queryName) { (prev, batch) =>
+      val (slices, _) = StreamHarness.stageSlices(
+        comps, pmod(col("doc_id"), lit(3)), 0 to 2)
+      val state = StreamHarness.runVersionedMerge(slices) { (prev, batch) =>
         // delta reduced to its own matrix BEFORE the merge: the
         // state write is always ≤ k² + k² rows, never event-sized
         val delta = BradleyTerry.matrixFrom(batch)

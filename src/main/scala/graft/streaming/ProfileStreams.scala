@@ -40,8 +40,7 @@ object ProfileStreams {
   case class ProfileOut(user_id: Long, event_type: String, n_events: Long,
                         sum_micros: Long, n_sessions: Long)
 
-  def userProfileTws(spark: SparkSession, dir: String,
-                     queryName: String = "tws_profile"): DataFrame =
+  def userProfileTws(spark: SparkSession, dir: String): DataFrame =
     StreamHarness.withStreamConf(spark, rocksDb = true) {
       import spark.implicits._
       import org.apache.spark.sql.streaming.{
@@ -58,9 +57,9 @@ object ProfileStreams {
 
       // time-ordered terciles (q252's slicing contract), via
       // DistributedRank.ntile — one range exchange, never the
-      // single-partition window sort (r15 verdict item 1)
-      val (stage, schema) = StreamHarness.stageTimeOrderedSlices(
-        batchEvents, Seq(col("ts"), col("event_id")), 3, "graft_twsprofile_stage_")
+      // single-partition window sort
+      val (slices, stage) = StreamHarness.stageTimeOrderedSlices(
+        batchEvents, Seq(col("ts"), col("event_id")), 3)
 
       class ProfileProcessor extends StatefulProcessor[Long, EventStreams.Event, ProfileOut] {
         @transient private var last: ValueState[Long] = _
@@ -106,18 +105,16 @@ object ProfileStreams {
         }
       }
 
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$stage/*")
-        .withWatermark("ts", "1 hour")
+      val profiles = slices.withWatermark("ts", "1 hour")
         .as[EventStreams.Event]
-      val profiles = stream.groupByKey(_.user_id)
+        .groupByKey(_.user_id)
         .transformWithState(new ProfileProcessor, TimeMode.EventTime(), OutputMode.Append())
       // heartbeat batches drive the watermark past every horizon —
-      // the shared scaffold, with span-derived offsets (no profile
-      // may flush mid-stream) and a link prefix that sorts the
-      // heartbeats after the slice files
-      StreamHarness.runToMemory(profiles, queryName, OutputMode.Append)(
-          EventStreams.driveHeartbeats(spark, dir, stage, _,
+      // the shared scaffold, written in the slices' schema, with
+      // span-derived offsets (no profile may flush mid-stream) and a
+      // link prefix that sorts the heartbeats after the slice files
+      StreamHarness.runToMemory(profiles, OutputMode.Append)(
+          EventStreams.driveHeartbeats(batchEvents, stage, _,
             dayOffsets = Seq(hbDays, hbDays + 1), linkPrefix = "zz_"))
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("event_type"), col("n_events"),

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.registry.GQuery
 import StreamHarness.CrashPoint
@@ -97,23 +96,26 @@ object RestartStreams {
   }
 
   /** The incarnation driver: the four-incarnation schedule above over one
-    * checkpoint. `staged` is a pending dir of slices (from
-    * StreamHarness.stageSlices); the first of `sliceIds` is published into
-    * the live source dir before incarnation 1 and the rest after it
-    * (atomic directory moves — the arrival pattern of a landing dir).
-    * Each incarnation first discards the sink's uncommitted writes, then
-    * runs `stream` over the live slices into the versioned sink, built
-    * with `merge` and the incarnation's crash point. `result` reads the
-    * final committed versions' paths, oldest first.
+    * checkpoint. `staged` is a pending stage of slices with their stream
+    * (from StreamHarness.stageSlices); the first of `sliceIds` is
+    * published into the live source dir before incarnation 1 and the rest
+    * after it (atomic directory moves — the arrival pattern of a landing
+    * dir). Each incarnation first discards the sink's uncommitted writes,
+    * then runs `stream` over the live slices, in the pending stream's
+    * schema, into the versioned sink, built with `merge` and the
+    * incarnation's crash point. It keeps its own start/stop loop rather
+    * than StreamHarness.runQuery: it records each incarnation's failure
+    * and progress. `result` reads the final committed versions' paths,
+    * oldest first.
     */
-  private def crashRestart(spark: SparkSession, staged: (Path, StructType),
-      sliceIds: Seq[Int], prefix: String)
+  private def crashRestart(spark: SparkSession, staged: (DataFrame, Path), sliceIds: Seq[Int])
       (stream: DataFrame => DataFrame, merge: (Option[String], DataFrame) => DataFrame)
       (result: Seq[String] => DataFrame): CrashRun = {
-    val (pending, schema) = staged
-    val stage = TempDirs.create(s"${prefix}stage_")
-    val ckpt = TempDirs.create(s"${prefix}ckpt_")
-    val sinkDir = TempDirs.create(s"${prefix}sink_")
+    val (pendingStream, pending) = staged
+    val schema = pendingStream.schema
+    val stage = TempDirs.create("graft_restart_stage_")
+    val ckpt = TempDirs.create("graft_restart_ckpt_")
+    val sinkDir = TempDirs.create("graft_restart_sink_")
     def publish(i: Int): Unit =
       Files.move(pending.resolve(s"slice_$i"), stage.resolve(s"slice_$i"))
     var orphans = 0
@@ -167,8 +169,8 @@ object RestartStreams {
       val staged = StreamHarness.stageTimeOrderedSlices(
         graft.Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value")),
-        Seq(col("ts"), col("event_id")), 3, "graft_twsrestart_pending_")
-      crashRestart(spark, staged, 1 to 3, "graft_twsrestart_")(
+        Seq(col("ts"), col("event_id")), 3)
+      crashRestart(spark, staged, 1 to 3)(
         _.as[Event].groupByKey(_.user_id)
           .transformWithState(new SessionProcessor, TimeMode.None(), OutputMode.Append())
           .toDF,
@@ -197,8 +199,8 @@ object RestartStreams {
       val staged = StreamHarness.stageSlices(
         graft.Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("user_id"), col("value")),
-        pmod(col("event_id"), lit(3)), 0 to 2, "graft_upres_pending_")
-      crashRestart(spark, staged, 0 to 2, "graft_upres_")(
+        pmod(col("event_id"), lit(3)), 0 to 2)
+      crashRestart(spark, staged, 0 to 2)(
         identity,
         (prev, batch) => UpsertStreams.mergeStep(prev.map(p => spark.read.parquet(p)),
           UpsertStreams.deltaAgg(batch))) { versions =>

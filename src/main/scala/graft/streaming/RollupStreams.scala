@@ -25,15 +25,14 @@ object RollupStreams {
   /** @param source the delta feed as a stream (orders schema)
     * @return q179's changelog shape: (o_custkey, action, n_orders, rev_cents)
     */
-  def streamingRollup(spark: SparkSession, source: DataFrame, staticDir: String,
-                      queryName: String = "stream_rollup"): DataFrame =
+  def streamingRollup(spark: SparkSession, source: DataFrame, staticDir: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
       val cents = (c: org.apache.spark.sql.Column) => floor(c * 100 + 0.5).cast("long")
       val running = source
         .filter(col("o_orderkey") % 10 === 0)
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_delta"), sum(cents(col("o_totalprice"))).as("rev_delta"))
-      val deltaState = StreamHarness.runToMemory(running, queryName, OutputMode.Complete)()
+      val deltaState = StreamHarness.runToMemory(running, OutputMode.Complete)()
       // batch finisher: merge the final streamed partials into the static
       // base rollup — identical to TableMaintenance.incrementalRollup's
       // merge stage, hence the shared oracle

@@ -22,14 +22,12 @@ object SampleStreams {
     * maintain the per-lang top-(k+1) priority state, and return q229's
     * report computed from the STREAM-BUILT state.
     */
-  def streamingPrioritySample(spark: SparkSession, dir: String,
-                              queryName: String = "stream_psample"): DataFrame =
+  def streamingPrioritySample(spark: SparkSession, dir: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
       val docs = graft.Tables.documents(spark, dir)
-      val (stage, schema) = StreamHarness.stageSlices(
-        docs, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_psample_stage_")
-      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
-        "graft_psample_state_", queryName) { (prev, batch) =>
+      val (slices, _) = StreamHarness.stageSlices(
+        docs, pmod(col("doc_id"), lit(3)), 0 to 2)
+      val state = StreamHarness.runVersionedMerge(slices) { (prev, batch) =>
         // topState's partial aggregation reduces the raw batch
         // priorities map-side, so the state write stays (k+1)·|langs|
         // rows however large the batch; the replay guard (not a
@@ -50,16 +48,14 @@ object SampleStreams {
     * for any slicing, so the final selection is q230's and q239 reuses
     * its oracle VERBATIM.
     */
-  def streamingDsirSelect(spark: SparkSession, dir: String,
-                          queryName: String = "stream_dsir"): DataFrame =
+  def streamingDsirSelect(spark: SparkSession, dir: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
       import graft.operators.DsirSelect
       val docs = graft.Tables.documents(spark, dir)
       val (_, raw) = DsirSelect.corpora(docs)
-      val (stage, schema) = StreamHarness.stageSlices(
-        raw, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_dsir_stage_")
-      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
-        "graft_dsir_state_", queryName) { (prev, batch) =>
+      val (slices, _) = StreamHarness.stageSlices(
+        raw, pmod(col("doc_id"), lit(3)), 0 to 2)
+      val state = StreamHarness.runVersionedMerge(slices) { (prev, batch) =>
         val delta = DsirSelect.rawBuckets(batch)
         prev.map(_.unionByName(delta)).getOrElse(delta)
           .groupBy("b").agg(sum("cr").as("cr"))

@@ -40,15 +40,13 @@ object SketchStreams {
     * maintain the per-source KMV state, and return q219's overlap report
     * computed from the STREAM-BUILT sketch.
     */
-  def streamingKmv(spark: SparkSession, dir: String, k: Int = 32,
-                   queryName: String = "stream_kmv"): DataFrame =
+  def streamingKmv(spark: SparkSession, dir: String, k: Int = 32): DataFrame =
     StreamHarness.withStreamConf(spark) {
       val docs = KmvSketch.augmentedDocs(spark, dir)
-      val (stage, schema) = StreamHarness.stageSlices(
+      val (slices, _) = StreamHarness.stageSlices(
         docs.select(col("doc_id"), col("source"), col("text")),
-        pmod(col("doc_id"), lit(3)), 0 to 2, "graft_kmv_stage_")
-      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
-        "graft_kmv_state_", queryName) { (prev, batch) =>
+        pmod(col("doc_id"), lit(3)), 0 to 2)
+      val state = StreamHarness.runVersionedMerge(slices) { (prev, batch) =>
         mergeStep(prev, KmvSketch.sketch(batch, k).select(col("source"), col("h")), k)
       }
       KmvSketch.overlapReport(spark, dir, state)
@@ -64,17 +62,15 @@ object SketchStreams {
     * slicing, so the returned report is q225's and reuses its oracle
     * verbatim.
     */
-  def streamingQuantileSketch(spark: SparkSession, dir: String,
-                              queryName: String = "stream_qsketch"): DataFrame =
+  def streamingQuantileSketch(spark: SparkSession, dir: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
       import graft.operators.QuantileSketchQueries
       val k = QuantileSketchQueries.K
       val rows = QuantileSketchQueries.base(spark, dir)
         .select(col("qkey"), col("h"), col("v"))
-      val (stage, schema) = StreamHarness.stageSlices(
-        rows, pmod(col("h"), lit(3)), 0 to 2, "graft_qsk_stage_")
-      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
-        "graft_qsk_state_", queryName) { (prev, batch) =>
+      val (slices, _) = StreamHarness.stageSlices(
+        rows, pmod(col("h"), lit(3)), 0 to 2)
+      val state = StreamHarness.runVersionedMerge(slices) { (prev, batch) =>
         val delta = batch.groupBy("qkey")
           .agg(call_function("graft_qsketch", col("h"), col("v"), lit(k)).as("sk"))
         prev.map(_.unionByName(delta)).getOrElse(delta)
@@ -92,15 +88,13 @@ object SketchStreams {
     * slicing and the post-stream heavy-hitter report is q246's (oracle
     * reused VERBATIM).
     */
-  def streamingCms(spark: SparkSession, dir: String,
-                   queryName: String = "stream_cms"): DataFrame =
+  def streamingCms(spark: SparkSession, dir: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
       import graft.operators.CountMinSketch
       val docs = graft.Tables.documents(spark, dir)
-      val (stage, schema) = StreamHarness.stageSlices(
-        docs, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_cms_stage_")
-      val state = StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
-        "graft_cms_state_", queryName) { (prev, batch) =>
+      val (slices, _) = StreamHarness.stageSlices(
+        docs, pmod(col("doc_id"), lit(3)), 0 to 2)
+      val state = StreamHarness.runVersionedMerge(slices) { (prev, batch) =>
         val delta = CountMinSketch.mergeMatrices(CountMinSketch.langMatrices(batch))
         prev.map(_.unionByName(delta)).getOrElse(delta)
           .groupBy("r", "b").agg(sum("c").as("c"))

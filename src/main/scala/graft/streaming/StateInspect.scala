@@ -48,12 +48,10 @@ object StateInspect {
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-      val q = agg.writeStream
+      StreamHarness.runQuery(agg.writeStream
         .outputMode(OutputMode.Append)
         .format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        .option("checkpointLocation", ckpt.toString))()
       val st = spark.read.format("statestore").option("path", ckpt.toString).load()
       val out = st.select(
         col("key.window.start").cast("timestamp_ntz").as("hour_start"),

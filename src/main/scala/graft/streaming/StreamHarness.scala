@@ -1,66 +1,31 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileVisitOption, Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** The shared local-harness scaffold behind every streaming query in
-  * this package: the session confs a harness runs under, the memory-sink
-  * query lifecycle, the slice staging and the exactly-once versioned
-  * sink. Each piece exists once so a divergence between copies cannot
-  * happen (r15 verdict item 2: the merge scaffold had been copy-pasted
-  * across eight sites, and a divergence in one copy is exactly the
-  * cross-batch-pair defect class the r14 review caught in IndexStreams).
+  * this package: the only code that names a streaming query, builds a
+  * file stream, or starts and drains a query, so a harness passes only
+  * its source, its slicing and its merge. Each piece exists once because
+  * copies drift: the merge scaffold was once copy-pasted across eight
+  * sites, and a divergence in one copy was the cross-batch-pair defect
+  * IndexStreams once had.
   *
-  *  - [[fixtureStream]]: a fixture file as a file stream over a staged
-  *    landing dir — the one source of every fixture-fed harness.
-  *
-  *  - [[withStreamConf]]: run a harness with the state partition count
-  *    and, for transformWithState, the RocksDB state store provider set
-  *    on the session, restored afterwards under one JVM lock.
-  *
-  *  - [[runToMemory]]: start a memory-sink query, drain it, run an
-  *    optional hook against the live query (the heartbeat harnesses feed
-  *    their watermark batches there), stop it in a `finally`, and return
-  *    the sink table. A failing drain or hook can never leave the named
-  *    query active.
-  *
-  *  - [[stageSlices]] / [[stageTimeOrderedSlices]]: write the input as N
-  *    single-file parquet slices that [[sliceStream]] then replays as N
-  *    micro-batches. ONE file per slice is load-bearing:
-  *    maxFilesPerTrigger=1 feeds part FILES, so a multi-part slice
-  *    silently becomes many tiny micro-batches (q227 measured 24 batches
-  *    / 23s of engine rounds for 3 intended slices before this). The
-  *    time-ordered variant routes through `DistributedRank.ntile` — NOT
-  *    `ntile().over(Window.orderBy(...))`, whose plan is a full-data
-  *    `Exchange SinglePartition` sort, the exact idiom the rest of the
-  *    library eliminated (r15 verdict item 1; StreamingSpec pins the
-  *    staging plan). Identical tercile assignment, one range exchange.
-  *
-  *  - [[versionedMergeSink]]: the exactly-once foreachBatch sink. Each
-  *    fresh batch's output is written to `tmp_b<id>` and committed by an
-  *    atomic rename to `v<version>_b<batchId>`; those names are the
-  *    sink's commit log, so a new incarnation reads its (version,
-  *    lastApplied) ledger back from them, and a redelivered batch id is
-  *    drained without a second write. The engine's at-least-once
-  *    delivery thus composes to exactly-once state. An optional
-  *    [[CrashPoint]] throws just before or just after the rename; only
-  *    RestartStreams' crash harnesses (q252, q253) set it, and they run
-  *    this same sink through their restart schedule.
-  *
-  *  - [[runVersionedMerge]]: that sink plus one query — the state table
-  *    rewritten per batch as the next version. At 100 TB the rewrite
-  *    becomes a partitioned MERGE INTO keyed on the state key, and the
-  *    batch-id ledger moves from directory names into the table's
-  *    commit log (the UpsertStreams scaladoc's scale story — it holds
-  *    for every caller, GShardQueries.q236 included, because the loop is
-  *    one function). Callers provide the source and the MERGE:
-  *    `(prevState, batch) => newState`, which must reduce the batch to
-  *    its bounded delta BEFORE touching the state so the state write
-  *    never scales with the stream.
+  *  - [[withStreamConf]]: the session confs a harness runs under.
+  *  - [[fixtureStream]], [[stageSlices]], [[stageTimeOrderedSlices]]: the
+  *    staged file sources, each returned as (stream, stage dir).
+  *  - [[runQuery]]: the one query lifecycle; [[runToMemory]] and
+  *    [[runVersionedMerge]] are its two sinks.
+  *  - [[versionedMergeSink]]: the exactly-once foreachBatch sink, which
+  *    RestartStreams' crash harnesses run through their own restarts.
   */
 object StreamHarness {
 
@@ -126,58 +91,74 @@ object StreamHarness {
 
   private val confLock = new Object
 
-  /** Run `ds` into a memory sink named `queryName` until every available
-    * input is processed, then `afterDrain` against the still-running
-    * query, and return the sink's table. The query is stopped in a
-    * `finally`: if the drain or the hook throws (a failed batch, a
-    * cancelled job group), the name is free for the next run instead of
-    * failing it with "already active". The memory sink holds its rows
-    * on the driver, so the returned frame outlives the query and any
-    * conf restore around it.
+  /** Start `writer`, process every available input, run `afterDrain`
+    * against the still-running query, and stop the query in a `finally`:
+    * if the drain or the hook throws (a failed batch, a cancelled job
+    * group), no query is left active.
     */
-  def runToMemory(ds: Dataset[_], queryName: String, outputMode: OutputMode)
-      (afterDrain: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val q = ds.writeStream.outputMode(outputMode).format("memory").queryName(queryName).start()
+  private[streaming] def runQuery(writer: DataStreamWriter[_])
+      (afterDrain: StreamingQuery => Unit = _ => ()): Unit = {
+    val q = writer.start()
     try {
       q.processAllAvailable()
       afterDrain(q)
     } finally q.stop()
-    ds.sparkSession.table(queryName)
+  }
+
+  private val memorySinks = new AtomicLong()
+
+  /** Run `ds` into a memory sink through [[runQuery]] and return the
+    * sink's rows. The sink's query name (hence its temp view) is unique
+    * in the JVM, so concurrent harnesses never collide, and the view is
+    * dropped before returning, whether the run returns or throws: the
+    * returned frame already holds the sink's plan, so it still collects
+    * afterwards, and nothing in the catalog keeps the rows alive once
+    * the frame is gone. The memory sink holds its rows on the driver, so
+    * the frame outlives the query and any conf restore around it.
+    */
+  def runToMemory(ds: Dataset[_], outputMode: OutputMode)
+      (afterDrain: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val name = s"graft_memory_sink_${memorySinks.incrementAndGet()}"
+    try {
+      runQuery(ds.writeStream.outputMode(outputMode).format("memory").queryName(name))(afterDrain)
+      ds.sparkSession.table(name)
+    } finally {
+      val _ = ds.sparkSession.catalog.dropTempView(name)
+    }
   }
 
   /** Stage one single-file parquet slice per id in `sliceIds`, slice i =
-    * rows where `sliceOf === i`. Returns (stage dir, slice schema).
+    * rows where `sliceOf === i`, under a fresh [[TempDirs]] stage dir.
+    * Returns (the slices as a stream, one slice per micro-batch in
+    * `sliceIds` order, the stage dir). ONE file per slice is
+    * load-bearing: maxFilesPerTrigger=1 feeds part FILES, so a
+    * multi-part slice silently becomes many tiny micro-batches (q227
+    * once ran 24 batches, 23s of engine rounds, for 3 intended slices).
     * Delivery order: FileStreamSource schedules unseen files by
     * MODIFICATION TIME only — a same-millisecond tie is broken by
-    * incidental file-index listing order, not by path (review finding,
-    * r16: the old scaladoc claimed a path tiebreak Spark doesn't
-    * guarantee). Sequential writes usually produce increasing mtimes
-    * anyway, but "usually" is not a contract the time-ordered callers
-    * (q252/q255's tercile folds) can rest on — so each slice's files are
-    * explicitly stamped strictly-increasing mtimes in `sliceIds` order,
-    * 2s apart. Files.move (the restart harnesses' publish step)
-    * preserves the stamps.
+    * incidental file-index listing order, not by path. Sequential writes
+    * usually produce increasing mtimes anyway, but "usually" is not a
+    * contract the time-ordered callers (q252/q255's tercile folds) can
+    * rest on — so each slice's files are explicitly stamped
+    * strictly-increasing mtimes in `sliceIds` order, 2s apart.
+    * Files.move (the restart harnesses' publish step) preserves the
+    * stamps.
     */
-  def stageSlices(df: DataFrame, sliceOf: Column, sliceIds: Seq[Int],
-      prefix: String): (Path, StructType) = {
+  def stageSlices(df: DataFrame, sliceOf: Column, sliceIds: Seq[Int]): (DataFrame, Path) = {
     val spark = df.sparkSession
-    val stage = TempDirs.create(prefix)
-    // ONE job writes every slice (r19; guide §1.2 step 1 — remove whole
-    // passes before tuning inside them): the old filter-per-slice loop
-    // re-ran the upstream plan once PER slice, so a caller staging an
-    // expensive frame paid N full scans (GraphStreams had to cache its
-    // banded join around the loop just to survive it, and
-    // stageTimeOrderedSlices carried an extra eager checkpoint for the
-    // same reason — both now gone). repartition(n, __slice) lands each
+    val stage = TempDirs.create("graft_slices_")
+    // ONE job writes every slice: a filter-per-slice loop would re-run
+    // the upstream plan once PER slice, so a caller staging an expensive
+    // frame would pay N full scans. repartition(n, __slice) lands each
     // slice's rows in exactly ONE task — two slices may share a task
     // (hash collision) but a slice never splits — so each partitionBy
     // directory holds exactly one data file, the invariant
     // maxFilesPerTrigger=1 rests on (still asserted below). Within-file
-    // row order becomes shuffle order instead of the old coalesce(1)
-    // scan order: every consumer is within-batch order-insensitive (the
-    // versioned merges are aggregations; the TWS folds sort per key —
-    // foldSessions, ProfileProcessor), and the time-ORDERED delivery
-    // contract is ACROSS slices, which the mtime stamps below carry.
+    // row order is shuffle order: every consumer is within-batch
+    // order-insensitive (the versioned merges are aggregations; the TWS
+    // folds sort per key — foldSessions, ProfileProcessor), and the
+    // time-ORDERED delivery contract is ACROSS slices, which the mtime
+    // stamps below carry.
     df.withColumn("__slice", sliceOf)
       .repartition(sliceIds.size, col("__slice"))
       .write.partitionBy("__slice").mode("overwrite").parquet(s"$stage/raw")
@@ -185,42 +166,33 @@ object StreamHarness {
     sliceIds.zipWithIndex.foreach { case (i, idx) =>
       val src = stage.resolve(s"raw/__slice=$i")
       // an EMPTY slice writes no directory — fail loudly rather than
-      // silently dropping a planned micro-batch (the old loop staged an
-      // empty file; no caller slices an empty id, so this is an assert,
-      // not a behavior change)
-      require(java.nio.file.Files.isDirectory(src),
+      // silently dropping a planned micro-batch
+      require(Files.isDirectory(src),
         s"slice_$i staged no rows — stageSlices requires every id in " +
           "sliceIds to be non-empty (a missing slice directory would " +
           "silently drop its planned micro-batch)")
       val dir = stage.resolve(s"slice_$i")
-      java.nio.file.Files.move(src, dir)
-      val files = java.nio.file.Files.list(dir)
-      val names = try
-        scala.jdk.CollectionConverters.IteratorHasAsScala(files.iterator()).asScala
-          .map { p =>
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(base + idx * 2000L))
-            p.getFileName.toString
-          }.toVector
-      finally files.close()
-      // the one-data-file invariant, ASSERTED: the shared
-      // mtime stamp above restores cross-slice ordering but would
-      // reintroduce the intra-slice same-millisecond tie between a
-      // slice's OWN files if the one-task-per-slice write ever silently
-      // regressed (e.g. a future maxRecordsPerFile conf splitting it) —
-      // fail loudly at staging time instead of nondeterministically
-      // downstream
-      val dataFiles = names.filter(n => !n.startsWith("_") && !n.startsWith("."))
+      Files.move(src, dir)
+      val files = names(dir)
+      files.foreach(n =>
+        Files.setLastModifiedTime(dir.resolve(n), FileTime.fromMillis(base + idx * 2000L)))
+      val dataFiles = files.filter(n => !n.startsWith("_") && !n.startsWith("."))
+      // the one-data-file invariant, ASSERTED: the shared mtime stamp
+      // above restores cross-slice ordering but would reintroduce the
+      // intra-slice same-millisecond tie between a slice's OWN files if
+      // the one-task-per-slice write ever silently regressed (e.g. a
+      // maxRecordsPerFile conf splitting it) — fail loudly at staging
+      // time instead of nondeterministically downstream
       require(dataFiles.size == 1,
         s"slice_$i staged ${dataFiles.size} data files (${dataFiles.mkString(", ")}) — " +
           "stageSlices requires exactly one per slice (maxFilesPerTrigger=1 " +
           "turns extra files into unintended extra micro-batches with tied mtimes)")
     }
     // only _SUCCESS remains under raw/ after the moves; remove it so the
-    // stage dir holds exactly the slice_<i> dirs the callers glob
+    // stage dir holds exactly the slice_<i> dirs
     TempDirs.deleteRecursively(stage.resolve("raw"))
     val schema = spark.read.parquet(s"$stage/slice_${sliceIds.head}").schema
-    (stage, schema)
+    (sliceStream(spark, stage, schema), stage)
   }
 
   /** TIME-ORDERED staging: slice i carries the i-th n-tile of `df` under
@@ -235,24 +207,16 @@ object StreamHarness {
     * semantics to `ntile(n).over(Window.orderBy(order))` (spec-pinned)
     * at ONE range exchange instead of a data-sized single-partition sort.
     */
-  def stageTimeOrderedSlices(df: DataFrame, order: Seq[Column], n: Int,
-      prefix: String): (Path, StructType) =
-    // no eager checkpoint anymore (r19): it existed to keep the offsets
-    // broadcast-join from re-executing once per slice write, and
-    // stageSlices now writes every slice in ONE pass — the assignment
-    // plan executes exactly once either way, so the checkpoint was a
-    // pure extra materialization
-    stageSlices(
-      graft.operators.DistributedRank.ntile(df, order, n, "__slice"),
-      col("__slice"), 1 to n, prefix)
+  def stageTimeOrderedSlices(df: DataFrame, order: Seq[Column], n: Int): (DataFrame, Path) =
+    // no eager checkpoint: stageSlices writes every slice in ONE pass, so
+    // the assignment plan (with its offsets broadcast join) executes
+    // exactly once either way
+    stageSlices(timeOrderedSlicesForAudit(df, order, n), col("__slice"), 1 to n)
 
-  /** Audit hook for StreamingSpec: the staging frame exactly as
-    * [[stageTimeOrderedSlices]] builds it — pre-write and PRE-checkpoint
-    * (the eager checkpoint above would hide the very plan the pin
-    * inspects behind a LogicalRDD) — so the spec can pin "no
-    * `Exchange SinglePartition` in the staging plan" (the r15 verdict's
-    * named scale-killer) and tercile parity with the window form
-    * without writing files.
+  /** The staging frame exactly as [[stageTimeOrderedSlices]] writes it,
+    * so StreamingSpec can pin "no `Exchange SinglePartition` in the
+    * staging plan" and tercile parity with the window form without
+    * writing files.
     */
   private[streaming] def timeOrderedSlicesForAudit(df: DataFrame,
       order: Seq[Column], n: Int): DataFrame =
@@ -274,27 +238,56 @@ object StreamHarness {
 
   /** The fixture `<dir>/<table>.parquet` as a file stream, with the
     * fixture's own schema (from [[graft.Tables.raw]], inferred once per
-    * file), and the stage dir it streams.
-    * FileStreamSource reads a directory and the fixture is one file, so
-    * the stage is a [[TempDirs]] dir holding one symlink to it —
+    * fixture), and the stage dir it streams.
+    * FileStreamSource reads a directory, so the stage is a [[TempDirs]]
+    * dir holding one symlink per data file of the fixture: the fixture
+    * itself when it is one file, else each leaf file of its directory at
+    * the same relative path (partition directories are real directories
+    * in the stage). Linking the directory itself would stream nothing:
+    * FileStreamSource does not descend into a symlinked directory.
     * TempDirs, not `File.deleteOnExit`, which skips non-empty dirs and
     * would leak every stage. The heartbeat harnesses feed further files
     * into the stage dir while the stream runs. A cluster deployment
     * streams a real landing directory (or Kafka) instead.
     */
   def fixtureStream(spark: SparkSession, dir: String, table: String): (DataFrame, Path) = {
-    val file = Paths.get(s"$dir/$table.parquet").toAbsolutePath
+    val fixture = Paths.get(s"$dir/$table.parquet").toAbsolutePath
     val schema = graft.Tables.raw(spark, dir, table).schema
     val stage = TempDirs.create(s"graft_${table}_stream_")
-    Files.createSymbolicLink(stage.resolve(s"$table.parquet"), file)
+    dataFiles(fixture).foreach { case (rel, file) =>
+      val link = stage.resolve(rel)
+      Files.createDirectories(link.getParent)
+      Files.createSymbolicLink(link, file)
+    }
     (spark.readStream.schema(schema).parquet(stage.toString), stage)
   }
 
-  /** The staged slices as a stream, one slice file per micro-batch. */
-  def sliceStream(spark: SparkSession, stage: Path, schema: StructType): DataFrame =
+  /** (path relative to a stage, file) for each data file of the parquet
+    * file or directory `path`: a file is its own one data file; in a
+    * directory, a path with a part named `.…` or `_…` (a checksum, a
+    * `_SUCCESS` marker) is not data, as Spark's file index has it.
+    */
+  private def dataFiles(path: Path): Seq[(Path, Path)] =
+    if (!Files.isDirectory(path)) Seq(path.getFileName -> path)
+    else {
+      def hidden(n: String) = n.startsWith(".") || n.startsWith("_")
+      val it = Files.walk(path, FileVisitOption.FOLLOW_LINKS)
+      try it.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => path.relativize(f) -> f)
+        .filter { case (rel, _) => !rel.iterator().asScala.exists(n => hidden(n.toString)) }
+        .toVector.sortBy(_._1.toString)
+      finally it.close()
+    }
+
+  /** The stage dir's files and directories as a stream, one file per
+    * micro-batch: the staged slices, then whatever a harness feeds in
+    * while the stream runs.
+    */
+  private[streaming] def sliceStream(spark: SparkSession, stage: Path,
+      schema: StructType): DataFrame =
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(s"$stage/slice_*")
+      .parquet(s"$stage/*")
 
   /** Where an injected crash fires in a crash-restart incarnation: on
     * batch `batchId`, just before the sink's rename-commit (its output is
@@ -308,8 +301,7 @@ object StreamHarness {
 
   private def names(dir: Path): Seq[String] = {
     val it = Files.list(dir)
-    try scala.jdk.CollectionConverters.IteratorHasAsScala(it.iterator()).asScala
-      .map(_.getFileName.toString).toVector
+    try it.iterator().asScala.map(_.getFileName.toString).toVector
     finally it.close()
   }
 
@@ -327,15 +319,17 @@ object StreamHarness {
   private[streaming] def uncommitted(dir: Path): Seq[Path] =
     names(dir).filter(_.startsWith("tmp_b")).map(dir.resolve)
 
-  /** The exactly-once versioned sink over `dir` (scaladoc above), as a
-    * foreachBatch function. Per fresh batch id it writes
+  /** The exactly-once versioned sink over `dir`, as a foreachBatch
+    * function. Per fresh batch id it writes
     * `merge(latest committed version's path, batch)` to `tmp_b<id>` and
-    * commits it by atomic rename to the next `v<version>_b<id>`; a
-    * redelivered batch id (the last one applied) is drained, not merged.
-    * The ledger is read back from `dir` when the sink is built, so a new
-    * query incarnation resumes where the last commit left off. `crash`
-    * injects one failure at the rename-commit; None in every harness but
-    * the crash-restart ones.
+    * commits it by atomic rename to the next `v<version>_b<id>`; those
+    * names are the sink's commit log. A redelivered batch id (the last
+    * one applied) is drained, not merged, so the engine's at-least-once
+    * delivery composes to exactly-once state. The ledger is read back
+    * from `dir` when the sink is built, so a new query incarnation
+    * resumes where the last commit left off. `crash` injects one failure
+    * just before or just after the rename-commit; only RestartStreams'
+    * crash harnesses (q252, q253) set it.
     */
   private[streaming] def versionedMergeSink(dir: Path, crash: Option[CrashPoint] = None)
       (merge: (Option[String], DataFrame) => DataFrame): (Dataset[Row], Long) => Unit = {
@@ -363,21 +357,26 @@ object StreamHarness {
   }
 
   /** The versioned-parquet merge loop: [[versionedMergeSink]] plus one
-    * query. Streams `source` (usually [[sliceStream]]), applies
-    * `merge(prevState, batch)` per fresh batch id, writes each state
-    * version under a fresh temp dir, and returns the FINAL state frame.
-    * Requires at least one batch (an empty stream is a harness bug, not
-    * a valid run).
+    * query through [[runQuery]]. Streams `source` (usually a
+    * [[stageSlices]] stream), applies `merge(prevState, batch)` per fresh
+    * batch id, writes each state version under a fresh temp dir, and
+    * returns the FINAL state frame. Requires at least one batch (an
+    * empty stream is a harness bug, not a valid run). `merge` must reduce
+    * the batch to its bounded delta BEFORE touching the state, so the
+    * state write never scales with the stream. At 100 TB the rewrite
+    * becomes a partitioned MERGE INTO keyed on the state key, and the
+    * batch-id ledger moves into the table's commit log (UpsertStreams'
+    * scale story, which holds for every caller because the loop is one
+    * function).
     */
-  def runVersionedMerge(source: DataFrame, statePrefix: String, queryName: String)
+  def runVersionedMerge(source: DataFrame)
       (merge: (Option[DataFrame], DataFrame) => DataFrame): DataFrame = {
     val spark = source.sparkSession
-    val stateBase = TempDirs.create(statePrefix)
+    val stateBase = TempDirs.create("graft_merge_state_")
     val sink = versionedMergeSink(stateBase) { (prev, batch) =>
       merge(prev.map(p => spark.read.parquet(p)), batch)
     }
-    val q = source.writeStream.foreachBatch(sink).queryName(queryName).start()
-    try q.processAllAvailable() finally q.stop()
+    runQuery(source.writeStream.foreachBatch(sink))()
     val last = ledger(stateBase).lastOption
     require(last.isDefined, "stream produced no batches")
     spark.read.parquet(versionPath(stateBase, last.get))

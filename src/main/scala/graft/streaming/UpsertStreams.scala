@@ -56,19 +56,15 @@ object UpsertStreams {
     * independent of the slicing — so the batch oracle verifies any
     * microbatch layout.
     */
-  def streamingUpsert(spark: SparkSession, dir: String,
-      queryName: String = "stream_upsert"): DataFrame =
+  def streamingUpsert(spark: SparkSession, dir: String): DataFrame =
     StreamHarness.withStreamConf(spark) {
       val events = graft.Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       // local staging harness: slice by event_id so every slice carries
       // every user; a cluster deployment reads a real landing directory
-      val (stage, schema) = StreamHarness.stageSlices(
-        events, pmod(col("event_id"), lit(3)), 0 to 2, "graft_upsert_stage_")
-      StreamHarness.runVersionedMerge(StreamHarness.sliceStream(spark, stage, schema),
-          "graft_upsert_state_", queryName) { (prev, batch) =>
-          mergeStep(prev, deltaAgg(batch))
-        }
+      val (slices, _) = StreamHarness.stageSlices(
+        events, pmod(col("event_id"), lit(3)), 0 to 2)
+      StreamHarness.runVersionedMerge(slices)((prev, batch) => mergeStep(prev, deltaAgg(batch)))
         .select(col("user_id"),
           col("n_events"),
           graft.functions.Metrics.canonRound(col("sum_micros").cast("double") / 1e4, 4)

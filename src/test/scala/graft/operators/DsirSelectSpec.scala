@@ -34,7 +34,7 @@ class DsirSelectSpec extends SparkSpec {
 
   test("streamed model equals the batch selection row-for-row (q239 ≡ q230)") {
     val streamed = graft.streaming.SampleStreams
-      .streamingDsirSelect(spark, sf001, queryName = "dsir_spec")
+      .streamingDsirSelect(spark, sf001)
     assert(streamed.exceptAll(top).count() == 0 &&
       top.exceptAll(streamed).count() == 0)
   }

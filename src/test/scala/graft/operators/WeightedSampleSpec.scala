@@ -86,7 +86,7 @@ class WeightedSampleSpec extends SparkSpec {
 
   test("streamed state equals the batch sample row-for-row (q233 ≡ q229)") {
     val streamed = graft.streaming.SampleStreams
-      .streamingPrioritySample(spark, sf001, queryName = "psample_spec")
+      .streamingPrioritySample(spark, sf001)
     assert(streamed.exceptAll(out).count() == 0 &&
       out.exceptAll(streamed).count() == 0)
   }

@@ -67,12 +67,10 @@ class PlansSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val total = Tables.orders(spark, sf001).count()
     val hits = graft.SinglePartitionAudit.auditedHits(spark) {
-      val (stage, schema) = graft.streaming.StreamHarness.stageSlices(
+      val (slices, stage) = graft.streaming.StreamHarness.stageSlices(
         Tables.orders(spark, sf001).select(col("o_orderkey")),
-        pmod(col("o_orderkey"), lit(2)), 0 to 1, "graft_spastream_")
-      val q = graft.streaming.StreamHarness.sliceStream(spark, stage, schema)
-        .repartition(1)
-        .writeStream.format("noop").queryName("spa_stream_pin").start()
+        pmod(col("o_orderkey"), lit(2)), 0 to 1)
+      val q = slices.repartition(1).writeStream.format("noop").start()
       q.processAllAvailable(); q.stop()
       spark.read.parquet(s"$stage/slice_0") // returned frame: plain scan
     }

@@ -24,13 +24,12 @@ object Landing {
 
   /** `batches`, staged before the stream starts, as a stream that
     * delivers them in order, one micro-batch each
-    * ([[StreamHarness.stageSlices]] + [[StreamHarness.sliceStream]]).
+    * ([[StreamHarness.stageSlices]]).
     */
-  def sliceBatches(batches: Seq[DataFrame], prefix: String): DataFrame = {
+  def sliceBatches(batches: Seq[DataFrame]): DataFrame = {
     val tagged = batches.zipWithIndex
       .map { case (b, i) => b.withColumn("__batch", lit(i)) }
       .reduce(_ unionByName _)
-    val (stage, schema) = StreamHarness.stageSlices(tagged, col("__batch"), batches.indices, prefix)
-    StreamHarness.sliceStream(tagged.sparkSession, stage, schema).drop("__batch")
+    StreamHarness.stageSlices(tagged, col("__batch"), batches.indices)._1.drop("__batch")
   }
 }

@@ -59,7 +59,7 @@ class StateStoreSpec extends SparkSpec {
     def runWith(provider: Option[String]): Map[Timestamp, Long] =
       Session.withConf(spark,
           provider.map("spark.sql.streaming.stateStore.providerClass" -> _).toSeq: _*) {
-        val source = Landing.sliceBatches(Seq(frame(rows1), frame(rows2)), "graft_ss_rocks_")
+        val source = Landing.sliceBatches(Seq(frame(rows1), frame(rows2)))
         val name = s"ss_${provider.isDefined}"
         runToEnd(source, name, TempDirs.create("graft_ck_").toString)
         spark.table(name).collect()

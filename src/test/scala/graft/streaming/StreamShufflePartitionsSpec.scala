@@ -93,17 +93,24 @@ class StreamShufflePartitionsSpec extends SparkSpec {
     val dir = TempDirs.create("graft_run_to_memory_").toString
     spark.range(3).write.mode("overwrite").parquet(dir)
     def source = spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
-    val name = "spec_run_to_memory"
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables
     val e = intercept[IllegalStateException] {
-      StreamHarness.runToMemory(source, name, OutputMode.Append) { q =>
+      StreamHarness.runToMemory(source, OutputMode.Append) { q =>
         assert(q.isActive)
         throw new IllegalStateException("hook failed")
       }
     }
     assert(e.getMessage === "hook failed")
     assert(spark.streams.active.isEmpty)
-    val rows = StreamHarness.runToMemory(source, name, OutputMode.Append)()
-    assert(rows.collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L, 2L))
+    val first = StreamHarness.runToMemory(source, OutputMode.Append)()
+    val second = StreamHarness.runToMemory(source, OutputMode.Append)()
     assert(spark.streams.active.isEmpty)
+    // no memory-sink view survives either call, and a returned frame
+    // still collects once its view is gone
+    assert(tables === before)
+    Seq(first, second).foreach { rows =>
+      assert(rows.collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L, 2L))
+    }
   }
 }

@@ -6,14 +6,14 @@ import graft.registry.Registry
 class StreamingSpec extends SparkSpec {
 
   test("streaming tumbling agg equals batch tumbling agg (bounded input)") {
-    val stream = EventStreams.tumblingCounts(spark, sf001, "spec_stream_tumbling").collect()
+    val stream = EventStreams.tumblingCounts(spark, sf001).collect()
     val batch = Registry.queries("q30_tumbling_window")(spark, sf001).collect()
     assert(stream.toSeq == batch.toSeq)
   }
 
   test("streaming sliding trend equals the batch sliding count + top-3 finisher (q162)") {
     import org.apache.spark.sql.functions._
-    val stream = EventStreams.slidingTrending(spark, sf001, "spec_stream_sliding").collect()
+    val stream = EventStreams.slidingTrending(spark, sf001).collect()
     // batch replay: every event in both its 2h windows, top-3 per window
     val e = graft.Tables.events(spark, sf001)
     val batch = e
@@ -54,7 +54,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedupStream over the fixture keeps all (already-distinct) events exactly once") {
-    val out = EventStreams.dedupStream(spark, sf001, "dedup_fixture_spec")
+    val out = EventStreams.dedupStream(spark, sf001)
     val n = graft.Tables.events(spark, sf001).count()
     assert(out.count() == n)
     assert(out.select("event_id").distinct().count() == n)
@@ -62,7 +62,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream interval join equals the batch binned range join") {
     import org.apache.spark.sql.functions.{col, expr}
-    val streamed = EventStreams.attributionStream(spark, sf001, queryName = "spec_stream_attr")
+    val streamed = EventStreams.attributionStream(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime)).toSet
     val e = graft.Tables.events(spark, sf001)
     val clicks = e.filter(col("event_type") === "click")
@@ -119,9 +119,9 @@ class StreamingSpec extends SparkSpec {
     val batch1 = Seq(1L -> base, 2L -> near, 3L -> other)
     val batch2 = Seq(4L -> near2, 5L -> "tiny")
     val source = Landing.sliceBatches(
-      Seq(batch1.toDF("doc_id", "text"), batch2.toDF("doc_id", "text")), "graft_neardup_md5_")
+      Seq(batch1.toDF("doc_id", "text"), batch2.toDF("doc_id", "text")))
     val stream = graft.streaming.DedupStreams
-      .nearDupStreamMd5(spark, source, queryName = "spec_neardup_md5")
+      .nearDupStreamMd5(spark, source)
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet // (earlier, later)
     val all = (batch1 ++ batch2).toDF("doc_id", "text")
     val batchPairs = graft.operators.DedupPipeline.nearDupPairsMd5(
@@ -144,9 +144,9 @@ class StreamingSpec extends SparkSpec {
       (5000L, "src3", "beta gamma alpha"),         // mirror of 10 but 4990s > 60min -> clean
       (200L, "src5", "purple monkey dishwasher"))  // no ref match -> clean
     val source = Landing.sliceBatches(
-      Seq(batch1, batch2).map(_.toDF("doc_id", "source", "text")), "graft_wdedup_spec_")
+      Seq(batch1, batch2).map(_.toDF("doc_id", "source", "text")))
     val got = graft.streaming.DedupStreams
-      .windowedCrossSourceDedup(spark, source, queryName = "spec_wdedup")
+      .windowedCrossSourceDedup(spark, source)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == Map(100L -> ((10L, 1L)), 105L -> ((20L, 1L))), s"got $got")
   }
@@ -160,7 +160,7 @@ class StreamingSpec extends SparkSpec {
     val batch1 = Seq(1L -> base, 2L -> near, 3L -> other)
     val batch2 = Seq(4L -> near2, 5L -> "tiny") // 4 ~ 1/2 arrives a batch LATER
     val source = Landing.sliceBatches(
-      Seq(batch1.toDF("doc_id", "text"), batch2.toDF("doc_id", "text")), "graft_neardup_")
+      Seq(batch1.toDF("doc_id", "text"), batch2.toDF("doc_id", "text")))
     val stream = graft.streaming.DedupStreams.nearDupStream(spark, source)
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet // (earlier, later)
     val all = (batch1 ++ batch2).toDF("doc_id", "text")
@@ -183,10 +183,9 @@ class StreamingSpec extends SparkSpec {
     val near = ((1 to 47).map(i => s"w$i") ++ Seq("x1", "x2", "x3")).mkString(" ")
     val source = Landing.sliceBatches(Seq(
       Seq(10L -> base, 12L -> "unrelated words only here").toDF("doc_id", "text"),
-      Seq(4L -> near).toDF("doc_id", "text")), // the SMALLER id arrives later
-      "graft_neardup_rev_")
+      Seq(4L -> near).toDF("doc_id", "text"))) // the SMALLER id arrives later
     val stream = graft.streaming.DedupStreams
-      .nearDupStream(spark, source, queryName = "spec_neardup_rev")
+      .nearDupStream(spark, source)
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet // (smaller, larger)
     val all = Seq(10L -> base, 12L -> "unrelated words only here", 4L -> near)
       .toDF("doc_id", "text")
@@ -232,7 +231,7 @@ class StreamingSpec extends SparkSpec {
     // single-partition write) fails LOUDLY at staging time.
     import org.apache.spark.sql.functions._
     val df = spark.range(100).select(col("id"), pmod(col("id"), lit(2)).as("k"))
-    val (stage, _) = StreamHarness.stageSlices(df, col("k"), 0 to 1, "graft_slicepin_")
+    val (_, stage) = StreamHarness.stageSlices(df, col("k"), 0 to 1)
     (0 to 1).foreach { i =>
       val files = java.nio.file.Files.list(stage.resolve(s"slice_$i"))
       val data = try
@@ -244,7 +243,7 @@ class StreamingSpec extends SparkSpec {
     }
     Session.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> "10") {
       val e = intercept[IllegalArgumentException] {
-        StreamHarness.stageSlices(df, col("k"), 0 to 1, "graft_slicepin_bad_")
+        StreamHarness.stageSlices(df, col("k"), 0 to 1)
       }
       assert(e.getMessage.contains("exactly one per slice"), e.getMessage)
     }
@@ -252,7 +251,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stateful streaming sessionization agrees with the batch window idiom") {
     import org.apache.spark.sql.functions.col
-    val streamed = EventStreams.sessionizeStream(spark, sf001, queryName = "spec_stream_sessions")
+    val streamed = EventStreams.sessionizeStream(spark, sf001)
       .select("user_id", "session_start", "n_events")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2)))
     val batch = Registry.queries("q32_sessionize")(spark, sf001)
@@ -270,9 +269,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transformWithState sessionization equals the flatMapGroupsWithState output row-for-row") {
-    val tws = EventStreams.sessionizeTws(spark, sf001, queryName = "spec_tws_sessions")
+    val tws = EventStreams.sessionizeTws(spark, sf001)
       .collect().toSeq
-    val fmg = EventStreams.sessionizeStream(spark, sf001, queryName = "spec_fmg_sessions")
+    val fmg = EventStreams.sessionizeStream(spark, sf001)
       .collect().toSeq
     assert(tws == fmg, "the two stateful APIs must produce identical sessions")
   }
@@ -280,8 +279,7 @@ class StreamingSpec extends SparkSpec {
   test("tws multi-handle profile (ValueState+ListState+MapState+timer) equals the batch profile") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val streamed = ProfileStreams.userProfileTws(spark, sf001,
-      queryName = "spec_tws_profile").collect().toSeq
+    val streamed = ProfileStreams.userProfileTws(spark, sf001).collect().toSeq
     // batch twin of the same profile, straight Spark: per-(user, type)
     // counts + exact micros sums, session count via the lag-window idiom
     val e = graft.Tables.events(spark, sf001)
@@ -355,7 +353,7 @@ class StreamingSpec extends SparkSpec {
     // row-for-row ≡ the single-query sessionization (q129 path): every
     // open-session ValueState survived both kills and the redelivery
     val restart = run.result.collect().toSeq
-    val single = EventStreams.sessionizeStream(spark, sf001, queryName = "spec_restart_ref")
+    val single = EventStreams.sessionizeStream(spark, sf001)
       .select(org.apache.spark.sql.functions.col("user_id"),
         org.apache.spark.sql.functions.col("session_start").cast("timestamp_ntz"),
         org.apache.spark.sql.functions.col("session_end").cast("timestamp_ntz"),
@@ -419,17 +417,15 @@ class StreamingSpec extends SparkSpec {
     // final state ≡ the no-restart upsert (q203 path): every batch applied
     // exactly once despite two hard kills and one redelivery
     val restart = run.result.collect().toSeq
-    val single = UpsertStreams.streamingUpsert(spark, sf001, queryName = "spec_restart_upsert")
+    val single = UpsertStreams.streamingUpsert(spark, sf001)
       .collect().toSeq
     assert(restart == single, "crash-recovered upsert state must equal the single-run state")
     assert(restart.nonEmpty)
   }
 
   test("transformWithState TIMER eviction equals the GroupStateTimeout eviction row-for-row") {
-    val tws = EventStreams.sessionizeTwsEvict(spark, sf001,
-      queryName = "spec_tws_evict").collect().toSeq
-    val gst = EventStreams.sessionizeEvictAll(spark, sf001,
-      queryName = "spec_gst_evict").collect().toSeq
+    val tws = EventStreams.sessionizeTwsEvict(spark, sf001).collect().toSeq
+    val gst = EventStreams.sessionizeEvictAll(spark, sf001).collect().toSeq
     assert(tws == gst, "timer eviction must match the timeout eviction")
   }
 
@@ -438,10 +434,8 @@ class StreamingSpec extends SparkSpec {
     def sessSet(df: org.apache.spark.sql.DataFrame) = df
       .select("user_id", "session_start", "n_events")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1).toInstant.toEpochMilli, r.getLong(2))).toSet
-    val evicted = sessSet(EventStreams.sessionizeEvictAll(spark, sf001,
-      queryName = "spec_stream_sessions_evict"))
-    val closedOnly = sessSet(EventStreams.sessionizeStream(spark, sf001,
-      queryName = "spec_stream_sessions_noev"))
+    val evicted = sessSet(EventStreams.sessionizeEvictAll(spark, sf001))
+    val closedOnly = sessSet(EventStreams.sessionizeStream(spark, sf001))
     // the NoTimeout set (gap-closed sessions) must be strictly contained,
     // and the complement — emittable only through the hasTimedOut path —
     // is exactly one open session per user
@@ -464,10 +458,8 @@ class StreamingSpec extends SparkSpec {
     val sliceOf = pmod(col("o_orderkey"), lit(3))
     assert(orders.groupBy("o_custkey").agg(countDistinct(sliceOf).as("n"))
       .filter(col("n") > 1).count() > 0, "no customer spans two micro-batches")
-    val (stage, schema) = StreamHarness.stageSlices(orders, sliceOf, 0 to 2, "graft_rollup_spec_")
-    val streamed = RollupStreams.streamingRollup(
-        spark, StreamHarness.sliceStream(spark, stage, schema), sf001, queryName = "rollup_spec")
-      .collect().toSeq
+    val (slices, _) = StreamHarness.stageSlices(orders, sliceOf, 0 to 2)
+    val streamed = RollupStreams.streamingRollup(spark, slices, sf001).collect().toSeq
     val batch = Registry.queries("q179_incremental_rollup")(spark, sf001).collect().toSeq
     assert(streamed == batch)
   }
@@ -477,11 +469,9 @@ class StreamingSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     // three slices → three micro-batches; overlap is a set property, so
     // the result must not depend on the split
-    val (stage, schema) = StreamHarness.stageSlices(
-      docs, pmod(col("doc_id"), lit(3)), 0 to 2, "graft_contam_spec_")
+    val (slices, stage) = StreamHarness.stageSlices(docs, pmod(col("doc_id"), lit(3)), 0 to 2)
     val streamed = ContaminationStreams.contaminationStream(
-        spark, StreamHarness.sliceStream(spark, stage, schema), s"$stage/slice_*", sf001,
-        queryName = "contam_spec")
+        spark, slices, s"$stage/slice_*", sf001)
       .collect().toSeq
     val batch = Registry.queries("q109_contamination")(spark, sf001).collect().toSeq
     assert(streamed == batch)
@@ -506,7 +496,7 @@ class StreamingSpec extends SparkSpec {
     assert(canon(fwd) == canon(UpsertStreams.deltaAgg(e)), "merge must equal batch agg")
     // end-to-end: the streaming run (3 real microbatches through the
     // replay-guarded foreachBatch sink) matches the direct batch form
-    val streamed = UpsertStreams.streamingUpsert(spark, sf001, queryName = "upsert_spec")
+    val streamed = UpsertStreams.streamingUpsert(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val batch = e.groupBy("user_id")
       .agg(count(lit(1)).as("n"),
@@ -550,7 +540,7 @@ class StreamingSpec extends SparkSpec {
     // pair log ≡ batch banded self-join (the q215 oracle's claim, checked
     // here engine-internally so the spec fails close to the cause)
     val (pairLog, finalIndex) =
-      IndexStreams.streamingMinhashIndexWithState(spark, sf001, "mhidx_spec")
+      IndexStreams.streamingMinhashIndexWithState(spark, sf001)
     val streamedPairs = pairLog
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val allBands = IndexStreams.batchBands(spark, sf001).cache()

@@ -49,9 +49,10 @@ def prepare(side):
                     "build.build(); run.fixtures()"], cwd=side, check=True)
 
 
-def run_once(side, workload, seed, seconds):
+def run_once(side, workload, seed, seconds, trace=0):
+    """One run; its metrics are the end-to-end ones, or with trace=1 the per-layer ones."""
     out = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                          "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
                          cwd=side, capture_output=True, text=True)
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if out.returncode != 0 or len(lines) < 2:
