@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.registry.GQuery
 import StreamHarness.CrashPoint
@@ -96,23 +97,21 @@ object RestartStreams {
   }
 
   /** The incarnation driver: the four-incarnation schedule above over one
-    * checkpoint. `staged` is a pending stage of slices with their stream
-    * (from StreamHarness.stageSlices); the first of `sliceIds` is
-    * published into the live source dir before incarnation 1 and the rest
-    * after it (atomic directory moves — the arrival pattern of a landing
-    * dir). Each incarnation first discards the sink's uncommitted writes,
-    * then runs `stream` over the live slices, in the pending stream's
-    * schema, into the versioned sink, built with `merge` and the
-    * incarnation's crash point. It keeps its own start/stop loop rather
+    * checkpoint. `pending` is a stage of slices in `schema` (from
+    * StreamHarness.stageSlices); the first of `sliceIds` is published
+    * into the live source dir before incarnation 1 and the rest after it
+    * (atomic directory moves — the arrival pattern of a landing dir).
+    * Each incarnation first discards the sink's uncommitted writes, then
+    * runs `stream` over the live slices into the versioned sink, built
+    * with `merge` and the incarnation's crash point. It keeps its own start/stop loop rather
     * than StreamHarness.runQuery: it records each incarnation's failure
     * and progress. `result` reads the final committed versions' paths,
     * oldest first.
     */
-  private def crashRestart(spark: SparkSession, staged: (DataFrame, Path), sliceIds: Seq[Int])
+  private def crashRestart(spark: SparkSession, schema: StructType, pending: Path,
+      sliceIds: Seq[Int])
       (stream: DataFrame => DataFrame, merge: (Option[String], DataFrame) => DataFrame)
       (result: Seq[String] => DataFrame): CrashRun = {
-    val (pendingStream, pending) = staged
-    val schema = pendingStream.schema
     val stage = TempDirs.create("graft_restart_stage_")
     val ckpt = TempDirs.create("graft_restart_ckpt_")
     val sinkDir = TempDirs.create("graft_restart_sink_")
@@ -166,11 +165,11 @@ object RestartStreams {
       // the per-user fold to see non-decreasing timestamps across the
       // restart boundary (arbitrary slices would be wrong REGARDLESS of
       // restart — this is the fold's delivery contract, not a test prop).
-      val staged = StreamHarness.stageTimeOrderedSlices(
+      val (slices, pending) = StreamHarness.stageTimeOrderedSlices(
         graft.Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value")),
         Seq(col("ts"), col("event_id")), 3)
-      crashRestart(spark, staged, 1 to 3)(
+      crashRestart(spark, slices.schema, pending, 1 to 3)(
         _.as[Event].groupByKey(_.user_id)
           .transformWithState(new SessionProcessor, TimeMode.None(), OutputMode.Append())
           .toDF,
@@ -196,11 +195,11 @@ object RestartStreams {
       // pmod slices, NOT time-ordered: the merge is associative and
       // commutative, so this path owes its batches no ordering contract
       // at all (contrast with twsRestart's tercile staging)
-      val staged = StreamHarness.stageSlices(
+      val (slices, pending) = StreamHarness.stageSlices(
         graft.Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("user_id"), col("value")),
         pmod(col("event_id"), lit(3)), 0 to 2)
-      crashRestart(spark, staged, 0 to 2)(
+      crashRestart(spark, slices.schema, pending, 0 to 2)(
         identity,
         (prev, batch) => UpsertStreams.mergeStep(prev.map(p => spark.read.parquet(p)),
           UpsertStreams.deltaAgg(batch))) { versions =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{FileVisitOption, Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import java.util.concurrent.atomic.AtomicLong
 
@@ -241,10 +241,11 @@ object StreamHarness {
     * fixture), and the stage dir it streams.
     * FileStreamSource reads a directory, so the stage is a [[TempDirs]]
     * dir holding one symlink per data file of the fixture: the fixture
-    * itself when it is one file, else each leaf file of its directory at
-    * the same relative path (partition directories are real directories
-    * in the stage). Linking the directory itself would stream nothing:
-    * FileStreamSource does not descend into a symlinked directory.
+    * itself when it is one file, else each entry of its directory whose
+    * name does not start with `.` or `_` (a checksum, a `_SUCCESS`
+    * marker), as Spark's file index has it. Linking the directory itself
+    * would stream nothing: FileStreamSource does not descend into a
+    * symlinked directory.
     * TempDirs, not `File.deleteOnExit`, which skips non-empty dirs and
     * would leak every stage. The heartbeat harnesses feed further files
     * into the stage dir while the stream runs. A cluster deployment
@@ -254,30 +255,12 @@ object StreamHarness {
     val fixture = Paths.get(s"$dir/$table.parquet").toAbsolutePath
     val schema = graft.Tables.raw(spark, dir, table).schema
     val stage = TempDirs.create(s"graft_${table}_stream_")
-    dataFiles(fixture).foreach { case (rel, file) =>
-      val link = stage.resolve(rel)
-      Files.createDirectories(link.getParent)
-      Files.createSymbolicLink(link, file)
-    }
+    if (Files.isDirectory(fixture))
+      names(fixture).filterNot(n => n.startsWith(".") || n.startsWith("_"))
+        .foreach(n => Files.createSymbolicLink(stage.resolve(n), fixture.resolve(n)))
+    else Files.createSymbolicLink(stage.resolve(fixture.getFileName), fixture)
     (spark.readStream.schema(schema).parquet(stage.toString), stage)
   }
-
-  /** (path relative to a stage, file) for each data file of the parquet
-    * file or directory `path`: a file is its own one data file; in a
-    * directory, a path with a part named `.…` or `_…` (a checksum, a
-    * `_SUCCESS` marker) is not data, as Spark's file index has it.
-    */
-  private def dataFiles(path: Path): Seq[(Path, Path)] =
-    if (!Files.isDirectory(path)) Seq(path.getFileName -> path)
-    else {
-      def hidden(n: String) = n.startsWith(".") || n.startsWith("_")
-      val it = Files.walk(path, FileVisitOption.FOLLOW_LINKS)
-      try it.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(f => path.relativize(f) -> f)
-        .filter { case (rel, _) => !rel.iterator().asScala.exists(n => hidden(n.toString)) }
-        .toVector.sortBy(_._1.toString)
-      finally it.close()
-    }
 
   /** The stage dir's files and directories as a stream, one file per
     * micro-batch: the staged slices, then whatever a harness feeds in

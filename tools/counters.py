@@ -1,7 +1,6 @@
 """Compare the traced work counters of the parent and the working tree.
 
     python3 tools/counters.py --workload W --workdir DIR [--parent REV] [--seed 3]
-                              [--seconds 20]
 
 A change that claims no gain must do the same work as its parent. This
 runs one `--trace 1` perfbench run of each side at the same seed (the
@@ -21,6 +20,11 @@ COUNTERS = ["exec.jobs", "exec.stages", "exec.tasks", "registry.eager_jobs",
             "plans.joins_sort_merge", "streaming.batches", "streaming.input_rows",
             "streaming.state_rows", "streaming.state_rows_updated", "ops.failed_share"]
 
+# The run length, in seconds, that the recorded counter baselines were
+# taken at: perfbench scales a workload's passes with it, so every
+# counter above depends on it.
+SECONDS = 20
+
 
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
@@ -28,12 +32,11 @@ def main(argv):
     ap.add_argument("--workdir", required=True, help="where the parent is unpacked")
     ap.add_argument("--parent", default="HEAD")
     ap.add_argument("--seed", type=int, default=3)
-    ap.add_argument("--seconds", type=float, default=20)
     a = ap.parse_args(argv)
     sides = {"parent": unpack_parent(a.parent, a.workdir), "change": ROOT}
     for side in sides.values():
         prepare(side)
-    runs = {name: run_once(side, a.workload, a.seed, a.seconds, trace=1)
+    runs = {name: run_once(side, a.workload, a.seed, SECONDS, trace=1)
             for name, side in sides.items()}
     print(f"{a.workload} seed={a.seed}: parent {a.parent} -> working tree")
     print(f"{'counter':30} {'parent':>12} {'change':>12}")
