@@ -1001,14 +1001,13 @@ object DedupQueries {
 
   /** Streaming-maintained MinHash/LSH index (streaming.IndexStreams):
     * batch-built base index over doc_id%3==0, two micro-batches of new
-    * documents extend it via foreachBatch insert-only merges, candidate
-    * pairs emitted new-vs-index + within-batch per batch. The oracle is
-    * the BATCH banded self-join over the whole corpus — equal to the
-    * streamed pair log for any micro-batch slicing (every pair lands
-    * exactly once: bootstrap, later-arrival, or within-batch). Closes
-    * the index-maintenance lifecycle stage the r10 VERDICT named; the
-    * stream-built ≡ batch-built INDEX equality is pinned in
-    * StreamingSpec.
+    * documents extend it through StreamHarness.runVersionedMerge's
+    * insert-only merges, candidate pairs emitted new-vs-index +
+    * within-batch per batch. The oracle is the BATCH banded self-join
+    * over the whole corpus — equal to the streamed pair log for any
+    * micro-batch slicing (every pair lands exactly once: bootstrap,
+    * later-arrival, or within-batch). The stream-built ≡ batch-built
+    * INDEX equality is pinned in StreamingSpec.
     */
   val q215 = GQuery(
     "q215_stream_minhash_index",

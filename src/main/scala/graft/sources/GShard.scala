@@ -685,8 +685,6 @@ class GShardMicroBatchStream(path: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // streaming stays row-based: the micro-batch engine's plan has no
-    // columnar transition
     new GShardReaderFactory(required, GShard.docIdBounds(pushed),
       columnar = false)
 

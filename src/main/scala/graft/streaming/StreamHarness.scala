@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.StructType
   * file stream, or starts and drains a query, so a harness passes only
   * its source, its slicing and its merge. Each piece exists once because
   * copies drift: the merge scaffold was once copy-pasted across eight
-  * sites, and a divergence in one copy was the cross-batch-pair defect
-  * IndexStreams once had.
+  * sites. Every exactly-once foreachBatch in the repo is
+  * [[versionedMergeSink]].
   *
   *  - [[withStreamConf]]: the session confs a harness runs under.
   *  - [[fixtureStream]], [[stageSlices]], [[stageTimeOrderedSlices]]: the

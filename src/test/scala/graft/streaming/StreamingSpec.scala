@@ -542,26 +542,33 @@ class StreamingSpec extends SparkSpec {
     val (pairLog, finalIndex) =
       IndexStreams.streamingMinhashIndexWithState(spark, sf001)
     val streamedPairs = pairLog
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val allBands = IndexStreams.batchBands(spark, sf001).cache()
     allBands.count()
     // final index ≡ batch-built index: the insert-only merges must land
     // every document's bands exactly once
     val streamedIdx = finalIndex.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
     val batchIdx = allBands.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(streamedIdx == batchIdx,
-      s"index drift: only-stream=${(streamedIdx -- batchIdx).take(3)} " +
-        s"only-batch=${(batchIdx -- streamedIdx).take(3)}")
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
+    // a batch applied twice duplicates rows, which a set comparison
+    // alone would hide: both sides must also have the batch's row count
+    // with no row repeated
+    def sameRows[A](what: String, streamed: Seq[A], batch: Seq[A]): Unit = {
+      assert(streamed.toSet == batch.toSet,
+        s"$what drift: only-stream=${(streamed.toSet -- batch).take(3)} " +
+          s"only-batch=${(batch.toSet -- streamed).take(3)}")
+      val (rows, distinct, batchRows) = (streamed.size, streamed.distinct.size, batch.size)
+      assert(rows == distinct, s"$what repeats ${rows - distinct} rows")
+      assert(rows == batchRows, s"$what has $rows rows, the batch build $batchRows")
+    }
+    sameRows("index", streamedIdx, batchIdx)
     val batchPairs = allBands.select(col("band"), col("bh"), col("doc_id").as("id_a"))
       .join(allBands.select(col("band"), col("bh"), col("doc_id").as("id_b")), Seq("band", "bh"))
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_bands"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamedPairs == batchPairs,
-      s"pair log drift: only-stream=${(streamedPairs -- batchPairs).take(3)} " +
-        s"only-batch=${(batchPairs -- streamedPairs).take(3)}")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    sameRows("pair log", streamedPairs, batchPairs)
     assert(streamedPairs.nonEmpty)
     allBands.unpersist()
   }

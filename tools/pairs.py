@@ -20,6 +20,7 @@ numbers next to it.
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -33,6 +34,8 @@ def unpack_parent(rev, workdir):
     dest = os.path.join(workdir, f"parent-{sha}")
     if not os.path.isdir(dest):
         tmp = dest + ".tmp"
+        # an interrupted unpack leaves its tmp dir behind: start afresh
+        shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp)
         archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT, stdout=subprocess.PIPE)
         subprocess.run(["tar", "-x", "-C", tmp], stdin=archive.stdout, check=True)
