@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 
 /** Debug utility: run one registry query and print per-JOB wall time
-  * (description + first stage name), so optimization rounds can see
+  * and label ([[jobLabel]]), so optimization rounds can see
   * WHERE a multi-job query spends its seconds without the (disabled)
   * Spark UI. Timing is listener-based and approximate (job submit →
   * job end); overlapping concurrent jobs both count their own span.
@@ -11,6 +11,19 @@ import scala.collection.mutable
   * Usage: runMain graft.JobProfile <name>[,<name>...] [sfDir] [reps]
   */
 object JobProfile {
+
+  /** One line naming a job: the lines of its `spark.job.description`
+    * joined, or, when that is blank, its last stage's call site (the
+    * stage name's first line). A job that runs inside a streaming query
+    * carries the description `<query name>\nid = …\nrunId = …\nbatch = N`,
+    * whose first line is empty for an unnamed query.
+    */
+  def jobLabel(description: Option[String], stageName: Option[String]): String =
+    description.map(_.split('\n').map(_.trim).filter(_.nonEmpty).mkString(" | "))
+      .filter(_.nonEmpty)
+      .orElse(stageName.map(_.takeWhile(_ != '\n')))
+      .getOrElse("?")
+
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val names = args(0).split(",").toSeq
@@ -23,10 +36,9 @@ object JobProfile {
     val rows = mutable.ArrayBuffer.empty[(Int, Double, String)]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(js.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')))
-          .getOrElse("?")
+        val desc = jobLabel(
+          Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description"))),
+          js.stageInfos.lastOption.map(_.name))
         starts(js.jobId) = (System.nanoTime(), desc.take(120))
         jobStartNs(js.jobId) = System.nanoTime()
       }

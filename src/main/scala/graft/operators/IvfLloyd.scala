@@ -69,11 +69,11 @@ object IvfLloyd {
       .orderBy("q_id", "rank")
   }
 
-  /** DuckDB twin of [[search]]: normalization + KMeansLloyd's unrolled
-    * rounds + probe + in-list exact cosine, all replayed. */
+  /** DuckDB twin of [[search]]: normalization + [[KMeansLloyd.fitCtes]]
+    * + probe + in-list exact cosine, all replayed. */
   def oracleSql(nList: Int, rounds: Int, dim: Int, probeMax: Long,
                 nProbe: Int, kNN: Int): String = {
-    val cents = if (rounds == 1) "c0" else s"c${rounds - 1}f"
+    val cents = KMeansLloyd.centroidCte(rounds - 1)
     s"""WITH raw AS MATERIALIZED (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
       e AS MATERIALIZED (
@@ -81,8 +81,7 @@ object IvfLloyd {
           list_transform(emb,
             x -> floor(x / sqrt(list_dot_product(emb, emb)) * 1e6 + 0.5)/1e6) AS emb
         FROM raw),
-      c0 AS MATERIALIZED (SELECT vec_id AS cid, emb AS c FROM e ORDER BY vec_id LIMIT $nList),
-      ${KMeansLloyd.roundCtes(rounds, dim)},
+      ${KMeansLloyd.fitCtes(nList, rounds, dim)},
       probes AS (SELECT vec_id AS q_id, emb AS q FROM e WHERE vec_id < $probeMax),
       pl AS (SELECT q_id, cid FROM (
           SELECT p.q_id, c.cid,
@@ -92,7 +91,7 @@ object IvfLloyd {
         WHERE lr <= $nProbe),
       cand AS (
         SELECT pl.q_id, m.vec_id FROM pl
-        JOIN m$rounds m ON m.cid = pl.cid AND m.vec_id <> pl.q_id),
+        JOIN fit_assigned m ON m.cid = pl.cid AND m.vec_id <> pl.q_id),
       scored AS (
         SELECT c.q_id, c.vec_id,
           floor(list_cosine_similarity(pr.emb, r.emb)*1e6 + 0.5)/1e6 AS cos_sim

@@ -8,20 +8,14 @@ import graft.functions.{Metrics, VectorOps}
 
 /** DETERMINISTIC product quantization + ADC search — the oracle-checked
   * twin of [[PqAnn]] (whose MLlib k-means codebooks are seeded-but-
-  * iterative and so rows-only), exactly as [[KMeansLloyd]] (q127) twins
-  * the MLlib path of q53. Same playbook: pin every quantity — seeding is
-  * the k lowest vec_ids' subvectors, distances and centroid means are
-  * canonically rounded each round, argmin ties break by centroid id,
-  * empty clusters carry — and the WHOLE pipeline (m per-subspace Lloyd
-  * trainings, encoding, the asymmetric-distance scan) becomes replayable
-  * by a DuckDB oracle in unrolled MATERIALIZED CTEs.
+  * iterative and so rows-only). The m per-subspace codebooks are
+  * [[KMeansLloyd.train]]'s loop over the subvector frame (vec_id, s, v),
+  * every subspace trained in the same distributed round, so the WHOLE
+  * pipeline (training, encoding, the asymmetric-distance scan) replays
+  * in a DuckDB oracle of unrolled MATERIALIZED CTEs. The distance is the
+  * rounded SQUARED subspace distance throughout.
   *
-  * The m subspace trainings do NOT run as m loops: the subvector frame
-  * (vec_id, s, v) carries the subspace id, centroids are keyed (s, cid),
-  * and one distributed round trains ALL subspaces at once — assignment is
-  * a broadcast join on s + one row_number window, the update one hash agg
-  * on (s, cid, i). Per round the driver holds m·k·dsub doubles, never the
-  * data. ADC is the deployed-PQ scan shape (PqAnn.search): the probes'
+  * ADC is the deployed-PQ scan shape (PqAnn.search): the probes'
   * m×k×|probes| distance-table rows broadcast, the code frame streams,
   * one equi join on (s, cid) + a decimal-exact sum — no cross product.
   * Following Jégou/Douze/Schmid (TPAMI 2011), ADC sums SQUARED subspace
@@ -35,12 +29,13 @@ object PqLloyd {
     Metrics.canonRound(d * d, 6)
   }
 
-  /** Train m per-subspace codebooks with `rounds` Lloyd rounds, encode
-    * the corpus with the FINAL codebooks, ADC-shortlist `shortlist`
-    * candidates per probe, and exact-re-rank the top `kNN` — the deployed
-    * two-stage PQ shape ([[PqAnn.search]]): the quantizer prunes the
-    * corpus scan, exact distances only touch the survivors. Returns
-    * (q_id, vec_id, adc_dist, l2_dist, rank).
+  /** Train m per-subspace codebooks with `rounds` updates of
+    * [[KMeansLloyd.train]], encode the corpus with the FINAL codebooks,
+    * ADC-shortlist `shortlist` candidates per probe, and exact-re-rank
+    * the top `kNN` — the deployed two-stage PQ shape
+    * ([[PqAnn.search]]): the quantizer prunes the corpus scan, exact
+    * distances only touch the survivors. Returns (q_id, vec_id,
+    * adc_dist, l2_dist, rank).
     */
   def search(e: DataFrame, m: Int, k: Int, rounds: Int, dim: Int,
              probeMax: Long, kNN: Int, shortlist: Int = 50): DataFrame = {
@@ -57,51 +52,12 @@ object PqLloyd {
       // cached: every Lloyd round re-reads this frame for assignment +
       // update. Its partition layout is inherited from the input scan
       // (explode is narrow) — already few-partition at fixture scale,
-      // corpus-parallel on a real table — so no coalesce: the previous
-      // coalesce(max(4, input partitions)) was provably a no-op
-      // (coalesce never raises a count and the target equals the
-      // current count). Decimal-exact means and fully tie-broken
-      // argmins keep the result partition-layout-independent
+      // corpus-parallel on a real table. Decimal-exact means and fully
+      // tie-broken argmins keep the result partition-layout-independent
       // (oracle-certified).
       .cache()
-    val seedIds = e.select(col("vec_id")).orderBy("vec_id").limit(k)
-      .collect().map(_.getLong(0)).toSeq
-    var books: Seq[(Int, Long, Seq[Double])] = subs
-      .filter(col("vec_id").isin(seedIds: _*))
-      .collect()
-      .map(r => (r.getInt(1), r.getLong(0), r.getSeq[Double](2).toSeq)).toSeq
-      .sortBy(b => (b._1, b._2))
-
-    def assign(cs: Seq[(Int, Long, Seq[Double])]): DataFrame = {
-      val cdf = cs.toDF("s", "cid", "c")
-      // argmin by (d2, cid) as min(struct(...)): a struct min is ordered
-      // field-by-field, so this IS the cid-tie-broken argmin the window
-      // form computed — but as a hash aggregation with map-side partial
-      // combine instead of a full sort-shuffle of the n·m·k scored rows
-      // per round (the dominant per-round cost; ranks were never needed,
-      // only the winner).
-      subs.join(broadcast(cdf), "s")
-        .withColumn("d2", dist2(col("v"), col("c")))
-        .groupBy("vec_id", "s")
-        .agg(min(struct(col("d2"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("s"), col("m.cid").as("cid"))
-    }
-
-    for (_ <- 1 to rounds) {
-      val upd = assign(books).join(subs, Seq("vec_id", "s"))
-        .select(col("s"), col("cid"), posexplode(col("v")))
-        .toDF("s", "cid", "i", "x")
-        .groupBy("s", "cid", "i")
-        .agg(Metrics.canonRound(Metrics.exactMean(col("x")), 6).as("mu"))
-        .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getInt(2), r.getDouble(3)))
-      val byKey = upd.groupBy(_._1).map { case (key, xs) =>
-        key -> xs.sortBy(_._2).map(_._3).toSeq
-      }
-      // an emptied cluster keeps its centroid (both engines agree)
-      books = books.map { case (s, cid, old) => (s, cid, byKey.getOrElse((s, cid), old)) }
-    }
-
-    val codes = assign(books) // encode with the final codebooks
+    val books = KMeansLloyd.train(subs, m, k, rounds, dist2)
+    val codes = KMeansLloyd.assign(subs, books, dist2) // encode with the final codebooks
     val cdf = books.toDF("s", "cid", "c")
     val dtab = subs.filter(col("vec_id") < probeMax)
       .select(col("vec_id").as("q_id"), col("s"), col("v"))
@@ -135,11 +91,10 @@ object PqLloyd {
     out
   }
 
-  /** DuckDB twin: the same m-subspace Lloyd rounds, encoding, and ADC
-    * scan unrolled as MATERIALIZED CTEs (invariant 12: round states
-    * materialize, winners join exactly once).
-    */
-  /** `embExpr` is the DuckDB expression producing the DOUBLE[] the whole
+  /** DuckDB twin: [[KMeansLloyd.lloydCtes]]' m-subspace rounds, the
+    * encoding, and the ADC scan unrolled as MATERIALIZED CTEs (invariant
+    * 12: round states materialize, winners join exactly once).
+    * `embExpr` is the DuckDB expression producing the DOUBLE[] the whole
     * pipeline runs on — default raw cast (q135's L2 space); q107 passes
     * the 1e-6-snapped unit normalization so the SAME unrolled oracle
     * replays PQ on the cosine sphere.
@@ -150,36 +105,14 @@ object PqLloyd {
     val dsub = dim / m
     def d2(v: String, c: String) =
       s"floor((list_distance($v, $c) * list_distance($v, $c))*1e6+0.5)/1e6"
-    val rs = (1 to rounds).map { r =>
-      val prev = if (r == 1) "c0" else s"c${r - 1}f"
-      s"""a$r AS (SELECT b.vec_id, b.s, c.cid, ${d2("b.v", "c.c")} AS d2
-        FROM sub b JOIN $prev c ON c.s = b.s),
-      m$r AS MATERIALIZED (SELECT vec_id, s, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, cid) AS rk FROM a$r)
-        WHERE rk = 1),
-      u$r AS (SELECT m.s, m.cid, g.i,
-        floor((CAST(sum(CAST(floor(b.v[g.i]*1e4+0.5)/1e4 AS DECIMAL(18,4))) AS DOUBLE)/count(*))*1e6+0.5)/1e6 AS mu
-        FROM m$r m JOIN sub b ON b.vec_id = m.vec_id AND b.s = m.s,
-             (SELECT unnest(range(1, ${dsub + 1})) AS i) g
-        GROUP BY m.s, m.cid, g.i),
-      cn$r AS (SELECT s, cid, list(mu ORDER BY i) AS c FROM u$r GROUP BY s, cid),
-      c${r}f AS MATERIALIZED (SELECT p.s, p.cid, coalesce(n.c, p.c) AS c
-        FROM $prev p LEFT JOIN cn$r n ON n.s = p.s AND n.cid = p.cid)"""
-    }.mkString(",\n      ")
+    val books = KMeansLloyd.centroidCte(rounds)
     s"""WITH e AS MATERIALIZED (SELECT vec_id, $embExpr AS emb FROM embeddings),
       sub AS MATERIALIZED (SELECT vec_id, g.s, list_slice(emb, g.s*$dsub+1, g.s*$dsub+$dsub) AS v
         FROM e, (SELECT unnest(range(0, $m)) AS s) g),
-      seeds AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT $k),
-      c0 AS MATERIALIZED (SELECT b.s, b.vec_id AS cid, b.v AS c
-        FROM sub b JOIN seeds sd ON sd.vec_id = b.vec_id),
-      $rs,
-      enc0 AS (SELECT b.vec_id, b.s, c.cid, ${d2("b.v", "c.c")} AS d2
-        FROM sub b JOIN c${rounds}f c ON c.s = b.s),
-      codes AS MATERIALIZED (SELECT vec_id, s, cid FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, cid) AS rk FROM enc0)
-        WHERE rk = 1),
+      ${KMeansLloyd.lloydCtes(k, rounds, dsub, d2)},
+      ${KMeansLloyd.assignCtes("enc0", "codes", books, d2)},
       dtab AS MATERIALIZED (SELECT b.vec_id AS q_id, b.s, c.cid, ${d2("b.v", "c.c")} AS dq2
-        FROM sub b JOIN c${rounds}f c ON c.s = b.s
+        FROM sub b JOIN $books c ON c.s = b.s
         WHERE b.vec_id < $probeMax),
       adc AS (SELECT d.q_id, x.vec_id,
           CAST(sum(CAST(d.dq2 AS DECIMAL(18,6))) AS DOUBLE) AS adc_dist

@@ -1111,8 +1111,9 @@ object SimilarityQueries {
   /** The q212 pipeline parameterized by probe-panel size: probes are the
     * FIXED prefix `id < nProbes` on both the lexical (documents) and
     * dense (embeddings) sides — fixed panels are the linear-at-scale
-    * eval shape (PLANS.md's q198 note), and a prefix panel exists at
-    * every fixture SF. Returns (probe_id, doc_id, r_bm25, r_cos, rrf,
+    * eval shape (a corpus-proportional panel such as q198's `% 25` makes
+    * probes × corpus scoring quadratic in corpus size), and a prefix
+    * panel exists at every fixture SF. Returns (probe_id, doc_id, r_bm25, r_cos, rrf,
     * rank) for rank ≤ 10.
     */
   private def rrfRanked(s: org.apache.spark.sql.SparkSession, dir: String,
@@ -1224,9 +1225,9 @@ object SimilarityQueries {
     * candidate b): q198's metric harness pointed at q212's RRF output
     * instead of the dense-only brute force. The probe panel is a FIXED
     * prefix (vec_id < 8) rather than q198's corpus-proportional
-    * `% 25 = 0` — the production eval shape (PLANS.md's q198 scale
-    * note): a fixed panel makes the whole evaluation linear in corpus
-    * size, because only the candidate-generation side grows. Relevance
+    * `% 25 = 0` — the production eval shape: a fixed panel makes the
+    * whole evaluation linear in corpus size, because only the
+    * candidate-generation side grows. Relevance
     * is the fixture label (doc relevant ⟺ shares the probe's label,
     * q198's convention); metrics per probe: precision@10, MRR, and
     * binary-gain nDCG@10 with ideal DCG truncated at the available

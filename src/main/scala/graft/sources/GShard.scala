@@ -27,7 +27,6 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
   GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** GSH — a minimal binary document-shard format with a full DataSource
   * V2 reader (SURVEY §2.10's substrate tier, taken past what
@@ -37,7 +36,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * enjoys. The reader implements
   *
   *  - SupportsPushDownRequiredColumns — a projection that drops `text`
-  *    makes the row decoder SKIP the text payload bytes entirely (the
+  *    makes the decoder SKIP the text payload bytes entirely (the
   *    dominant field), the binary analogue of parquet column pruning;
   *  - SupportsPushDownFilters — doc_id range/equality predicates prune
   *    whole shards at PLANNING time via each file's footer min/max
@@ -293,8 +292,7 @@ class GShardScanBuilder(path: String, options: CaseInsensitiveStringMap)
   }
 
   override def build(): Scan = new GShardScan(path, required, pushed,
-    options.getInt("maxfilespertrigger", Int.MaxValue), aggFns, limit,
-    options.getBoolean("columnar", true))
+    options.getInt("maxfilespertrigger", Int.MaxValue), aggFns, limit)
 }
 
 /** One shard file. `key` is the shard index ((minDocId − lo) / step)
@@ -308,8 +306,7 @@ case class GShardPartition(file: String, rows: Int, key: Long = 0L)
 
 class GShardScan(path: String, required: StructType, pushed: Array[Filter],
     maxFilesPerTrigger: Int = Int.MaxValue,
-    aggFns: Option[Seq[String]] = None, limit: Int = Int.MaxValue,
-    columnar: Boolean = true)
+    aggFns: Option[Seq[String]] = None, limit: Int = Int.MaxValue)
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -438,7 +435,7 @@ class GShardScan(path: String, required: StructType, pushed: Array[Filter],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GShardReaderFactory(required, GShard.docIdBounds(pushed), limit, columnar)
+    new GShardReaderFactory(required, GShard.docIdBounds(pushed), limit)
 
   override def estimateStatistics(): Statistics = new Statistics {
     // upper bound from the surviving footers; ~120 bytes/row fixture avg
@@ -452,27 +449,25 @@ class GShardScan(path: String, required: StructType, pushed: Array[Filter],
 case class GShardAggPartition(values: Seq[Any]) extends InputPartition
 
 class GShardReaderFactory(required: StructType, bounds: (Long, Long),
-    limit: Int = Int.MaxValue, columnar: Boolean = true)
+    limit: Int = Int.MaxValue)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case a: GShardAggPartition => new PartitionReader[InternalRow] {
-        private var emitted = false
-        override def next(): Boolean = if (emitted) false else { emitted = true; true }
-        override def get(): InternalRow =
-          new GenericInternalRow(a.values.toArray)
-        override def close(): Unit = ()
-      }
-      case gp: GShardPartition =>
-        new GShardPartitionReader(gp.file, gp.rows, required,
-          bounds._1, bounds._2, limit)
+  // only the synthetic aggregate partition reads row-based: one row of
+  // footer values
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val a = p.asInstanceOf[GShardAggPartition]
+    new PartitionReader[InternalRow] {
+      private var emitted = false
+      override def next(): Boolean = if (emitted) false else { emitted = true; true }
+      override def get(): InternalRow = new GenericInternalRow(a.values.toArray)
+      override def close(): Unit = ()
     }
+  }
 
-  // vectorized path: shard partitions decode straight into on-heap
-  // column vectors (1024-row batches); the synthetic aggregate
+  // shard partitions, batch and micro-batch alike, decode straight into
+  // on-heap column vectors (1024-row batches); the synthetic aggregate
   // partition stays row-based (PARTITION_DEFINED on the scan)
   override def supportColumnarReads(p: InputPartition): Boolean =
-    columnar && p.isInstanceOf[GShardPartition]
+    p.isInstanceOf[GShardPartition]
 
   override def createColumnarReader(p: InputPartition):
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -481,11 +476,14 @@ class GShardReaderFactory(required: StructType, bounds: (Long, Long),
   }
 }
 
-/** Vectorized shard reader: the same byte-level decode as the row
-  * reader (including the text-payload SKIP under column pruning and the
-  * zone-map row skip), but materializing 1024-row ColumnarBatches into
-  * OnHeapColumnVectors — so downstream whole-stage codegen consumes the
-  * custom format exactly as it consumes parquet's vectorized reader.
+/** The shard decoder. Decodes ONLY the projected fields: with `text`
+  * pruned the payload bytes are skipped, not read — the point of the
+  * custom reader — and rows outside the pushed doc_id bounds are skipped
+  * too. Rows land in 1024-row ColumnarBatches of OnHeapColumnVectors, so
+  * downstream whole-stage codegen consumes the custom format exactly as
+  * it consumes parquet's vectorized reader. A pushed LIMIT stops the
+  * decode once this partition produced enough rows (partial pushdown —
+  * Spark applies the authoritative limit).
   */
 class GShardColumnarReader(file: String, rows: Int, required: StructType,
     lo: Long, hi: Long, limit: Int)
@@ -547,69 +545,6 @@ class GShardColumnarReader(file: String, rows: Int, required: StructType,
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
   override def close(): Unit = { batch.close(); in.close() }
-}
-
-/** Streams one shard file. Decodes ONLY the projected fields: with
-  * `text` pruned the payload bytes are skipped, not read — the point of
-  * the custom reader.
-  */
-class GShardPartitionReader(file: String, rows: Int, required: StructType,
-    lo: Long, hi: Long, limit: Int = Int.MaxValue)
-    extends PartitionReader[InternalRow] {
-
-  private val in = new DataInputStream(new BufferedInputStream(
-    new FileInputStream(file), 1 << 16))
-  private val needLang = required.fieldNames.contains("lang")
-  private val needSource = required.fieldNames.contains("source")
-  private val needText = required.fieldNames.contains("text")
-  private val ordinals = required.fieldNames.zipWithIndex.toMap
-  private var remaining = rows
-  private var kept = 0
-  private var current: InternalRow = _
-
-  private def skipFully(n: Int): Unit = {
-    var left = n.toLong
-    while (left > 0) {
-      val s = in.skip(left)
-      if (s <= 0) { if (in.read() < 0) throw new EOFException(file); left -= 1 }
-      else left -= s
-    }
-  }
-
-  private def readUtf(len: Int): UTF8String = {
-    val b = new Array[Byte](len); in.readFully(b); UTF8String.fromBytes(b)
-  }
-
-  override def next(): Boolean = {
-    // pushed LIMIT: stop decoding once this partition produced enough
-    // rows (partial pushdown — Spark applies the authoritative limit)
-    if (kept >= limit) return false
-    while (remaining > 0) {
-      remaining -= 1
-      val id = in.readLong()
-      val nChars = in.readLong()
-      val keep = id >= lo && id <= hi
-      val row = if (keep) new GenericInternalRow(required.length) else null
-      if (keep) {
-        ordinals.get("doc_id").foreach(i => row.update(i, id))
-        ordinals.get("n_chars").foreach(i => row.update(i, nChars))
-      }
-      val langLen = in.readUnsignedShort()
-      if (keep && needLang) row.update(ordinals("lang"), readUtf(langLen))
-      else skipFully(langLen)
-      val srcLen = in.readUnsignedShort()
-      if (keep && needSource) row.update(ordinals("source"), readUtf(srcLen))
-      else skipFully(srcLen)
-      val textLen = in.readInt()
-      if (keep && needText) row.update(ordinals("text"), readUtf(textLen))
-      else skipFully(textLen)
-      if (keep) { current = row; kept += 1; return true }
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = in.close()
 }
 
 // ------------------------------------------------------------- streaming
@@ -685,8 +620,7 @@ class GShardMicroBatchStream(path: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GShardReaderFactory(required, GShard.docIdBounds(pushed),
-      columnar = false)
+    new GShardReaderFactory(required, GShard.docIdBounds(pushed))
 
   override def commit(end: Offset): Unit = () // offsets live in the checkpoint
   override def stop(): Unit = ()

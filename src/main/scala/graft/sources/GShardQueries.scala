@@ -172,8 +172,11 @@ object GShardQueries {
     * (same transform on both sides), while V1 bucketing reports
     * murmur3 `HashPartitioning`; a `KeyGroupedShuffleSpec` is never
     * compatible with a `HashShuffleSpec`, and the V2 reader API cannot
-    * report a hash layout (Partitioning is KeyGrouped or Unknown). See
-    * PLANS.md "Cross-format SPJ" for the full note. The ACHIEVABLE
+    * report a hash layout (Partitioning is KeyGrouped or Unknown). A
+    * key-grouped layout co-locates rows by transform value ranges and a
+    * bucketed one by murmur3 modulus, so no alignment without moving
+    * rows exists; a custom planner strategy would have to re-prove that
+    * a foreign writer's files are murmur3-bucketed. The ACHIEVABLE
     * minimum is therefore one exchange: the bucketed side's layout is
     * honored as-is (no shuffle, 8 bucket files = 8 partitions) and only
     * the GSH side reshuffles into that layout — GShardSpec pins exactly

@@ -66,6 +66,29 @@ class GShardSpec extends SparkSpec {
     assert(batches.forall(_._2 > 0))
   }
 
+  test("micro-batch stream decodes vectorised and replays every document") {
+    import org.apache.spark.sql.execution.ColumnarToRowExec
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.OutputMode
+    val source = spark.readStream.format("graft.sources.GShardSource")
+      .option("maxFilesPerTrigger", 3)
+      .load(stage)
+    var plan: org.apache.spark.sql.execution.SparkPlan = null
+    val got = graft.streaming.StreamHarness.runToMemory(source, OutputMode.Append) { q =>
+      plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    }
+    val vectorised = plan.collect {
+      case c: ColumnarToRowExec if c.child.exists(_.isInstanceOf[MicroBatchScanExec]) => c
+    }
+    assert(vectorised.nonEmpty, s"expected ColumnarToRow over MicroBatchScan in:\n$plan")
+    val docs = Tables.documents(spark, sf001)
+      .select("doc_id", "lang", "source", "n_chars", "text")
+    val rows = got.select("doc_id", "lang", "source", "n_chars", "text")
+    assert(rows.count() == docs.count())
+    assert(rows.exceptAll(docs).count() == 0 && docs.exceptAll(rows).count() == 0)
+  }
+
   test("V2 overwrite truncates: a second write leaves no stale shards") {
     val dir = graft.streaming.TempDirs.create("gshard-ow-").toString
     val docs = Tables.documents(spark, sf001)
@@ -125,11 +148,12 @@ class GShardSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"),
       s"expected a columnar transition in:\n${plan.take(1200)}")
-    val rowPath = spark.read.format("graft.sources.GShardSource")
-      .option("columnar", "false").load(stage)
-      .select("doc_id", "lang", "n_chars")
-    assert(!rowPath.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-    assert(df.exceptAll(rowPath).count() == 0 && rowPath.exceptAll(df).count() == 0)
+    // the vectorised decoder is the only one: every column of every row
+    // equals the parquet source
+    val all = gsh.select("doc_id", "lang", "source", "n_chars", "text")
+    val docs = Tables.documents(spark, sf001)
+      .select("doc_id", "lang", "source", "n_chars", "text")
+    assert(all.exceptAll(docs).count() == 0 && docs.exceptAll(all).count() == 0)
     // vectorized + zone-map row skip + pruning compose
     val filtered = gsh.filter(col("doc_id") >= 10 && col("doc_id") < 40)
       .select("doc_id", "source")
@@ -240,7 +264,9 @@ class GShardSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     // zero-exchange cross-format SPJ is impossible by API construction
     // (KeyGroupedShuffleSpec never matches HashShuffleSpec; V2 readers
-    // cannot report HashPartitioning) -- see PLANS.md "Cross-format SPJ".
+    // cannot report HashPartitioning): KeyGroupedShuffleSpec.isCompatibleWith
+    // returns false for any spec that is not key-grouped, and V1 bucketing
+    // reports murmur3 HashPartitioning, a HashShuffleSpec.
     // The achievable minimum is pinned here: the bucketed layout is
     // honored (no exchange above its scan), exactly ONE exchange total,
     // and it sits on the GSH side.
